@@ -1,13 +1,16 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Parquet table loaders for the driver-generated star schema
   * (see TESTDATA.md / FIXTURES.md §1). One parquet file per table;
-  * schemas are declared by the files themselves (parquet footer), so no
-  * inference cost and full filter/column pushdown apply.
+  * schemas are declared by the files themselves (parquet footer), and
+  * full filter/column pushdown applies. Every load goes through
+  * `parquet`, which infers a table's schema once and caches it under the
+  * table's qualified path, valid while its files' modification times and
+  * lengths and the Parquet type-mapping confs stay the same.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -16,7 +19,51 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
-    else spark.read.parquet(s"$dir/$name.parquet")
+    else parquet(spark, s"$dir/$name.parquet")
+
+  /** Session confs that change how Parquet types map to Spark types —
+    * part of the cache key, so a conf flip re-infers. */
+  private val TypeConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** (path, modification time, length) of every file under a table path
+    * — one entry for a single-file table — plus the `TypeConfs` values. */
+  private type Identity = (Seq[(String, Long, Long)], Seq[Option[String]])
+
+  /** qualified table path -> (identity, inferred schema) */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Identity, StructType)]()
+
+  /** Read a parquet table, inferring its schema only the first time its
+    * files are seen. An un-schema'd `spark.read.parquet` runs a one-task
+    * footer job on every call; a cached schema is declared instead, which
+    * runs none. The cache holds ONE entry per qualified path, keyed by the
+    * modification time and length of its files plus the `TypeConfs`
+    * values: a file rewritten in place or a changed conf re-infers and
+    * replaces the entry, so the cache is bounded by the number of tables
+    * read. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(GraftBridge.sessionHadoopConf(spark))
+    val listing = fs.listFiles(p, true)
+    val files = Iterator.continually(listing).takeWhile(_.hasNext)
+      .map(_.next()).map(st =>
+        (st.getPath.toString, st.getModificationTime, st.getLen))
+      .toList.sorted
+    val identity: Identity = (files, TypeConfs.map(spark.conf.getOption))
+    val key = fs.makeQualified(p).toString
+    Option(schemas.get(key)) match {
+      case Some((id, schema)) if id == identity =>
+        spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        schemas.put(key, (identity, df.schema))
+        df
+    }
+  }
 
   /** events.ts has shipped as INT64 TIMESTAMP(NANOS) parquet (which Spark's
     * vectorized reader rejects — read as raw nanos via the legacy conf and
@@ -28,7 +75,7 @@ object Tables {
     */
   private def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/events.parquet")
+    val df = parquet(spark, s"$dir/events.parquet")
     df.schema("ts").dataType match {
       case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))

@@ -506,7 +506,7 @@ object SnapTable {
     * its (cell-less) line. */
   private def newFileLines(spark: SparkSession, genDir: String,
                            commitId: String, newNames: Seq[String],
-                           statCols: Seq[String],
+                           schemaFp: String, statCols: Seq[String],
                            bloom: Option[(String, Int)],
                            strStatCols: Seq[String] = Nil): DataFrame = {
     // a commit may add ZERO files (a row-level DELETE that emptied all
@@ -514,7 +514,9 @@ object SnapTable {
     if (newNames.isEmpty)
       return carriedDf(spark, Nil).select(col("k"), col("line"))
     def fileName = element_at(split(input_file_name(), "/"), -1)
-    lazy val data = spark.read.parquet(genDir)
+    // the files were just written with the recorded schema: declare it
+    // rather than pay a footer-inference job per commit
+    lazy val data = spark.read.schema(schemaOf(schemaFp)).parquet(genDir)
     // all-null stat values print as the unprunable "-,-" cell
     def zoneCell(sc: Seq[String]) = concat_ws(",", sc.flatMap(c => Seq(
       coalesce(col(s"_min_$c").cast("string"), lit("-")),
@@ -828,8 +830,8 @@ object SnapTable {
     var carriedCur = carried
     var countsCur = countsComplete
     var newLinesCur: DataFrame =
-      newFileLines(spark, genDir, commitId, newNames, statCols, bloom,
-        strStatCols)
+      newFileLines(spark, genDir, commitId, newNames, schemaFp, statCols,
+        bloom, strStatCols)
     var attempt = 0
     val raceHook = commitRaceTestHook
     commitRaceTestHook = () => ()
@@ -1583,9 +1585,10 @@ object SnapTable {
     * ('removed'), as exact MULTISET differences (a row changed in
     * place shows up as one removed + one added). Because both sides
     * are immutable manifests, the diff is reproducible forever — the
-    * audit trail a mutable table cannot give. Scale shape: two scans +
-    * one hash-partitioned exceptAll per direction; for key-bounded
-    * diffs, filter both sides first (zone maps apply). */
+    * audit trail a mutable table cannot give. Scale shape: two scans
+    * feeding ONE signed-count aggregation (one shuffle of both versions),
+    * then row-local replication; for key-bounded diffs, filter both
+    * sides first (zone maps apply). */
   def diff(spark: SparkSession, dir: String, vOld: Int, vNew: Int): DataFrame = {
     val a = read(spark, dir, vOld)
     val b = read(spark, dir, vNew)

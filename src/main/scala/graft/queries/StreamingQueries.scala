@@ -1564,7 +1564,7 @@ object Streams {
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType =
-      spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+      Tables.parquet(spark, s"$dir/events.parquet").schema("ts").dataType
     val raw = StructType(Seq(
       StructField("event_id", LongType),
       StructField("ts", tsType),
@@ -1777,7 +1777,7 @@ object Streams {
     // shingle definition (TrainingData.shingleHashes) works unchanged
     // on the streaming side: it is pure row-local column ops
     val ev = graft.operators.TrainingData.shingleHashes(
-        spark.read.parquet(s"$dir/documents.parquet")
+        Tables(spark, dir, "documents")
           .filter(col("doc_id") % 97 === 0), 5)
       .select("h").distinct()
     val flagged = graft.operators.TrainingData.shingleHashes(
@@ -1810,7 +1810,7 @@ object Streams {
     graft.plans.RollHash31.register(spark)
     graft.plans.IntersectSortedCount.register(spark)
     val P = 1000000007L
-    val idx = spark.read.parquet(s"$dir/documents.parquet")
+    val idx = Tables(spark, dir, "documents")
       .filter(col("doc_id") % 10 =!= 7)
     val idxFp = idx.select(expr("roll_hash31(text)").as("fp")).distinct()
     val idxBands = DedupExt.bandSignatures(idx)

@@ -749,4 +749,60 @@ class SnapTableSpec extends AnyFunSuite {
     assert(after.schema.fieldNames.contains("l_tag") && after.count() == 50)
     SnapTable.destroy(spark, d)
   }
+
+  test("commits declare the recorded schema: no schema-inference job in a write") {
+    val d = s"$dir-no-infer"
+    SnapTable.destroy(spark, d)
+    SnapTable.commit(spark, d, li.repartitionByRange(4, col("l_orderkey")),
+      statCols = Seq("l_orderkey"))
+    val extra = li.filter(col("l_orderkey") < 50)
+    val (_, appendJobs) = JobLog(spark)(SnapTable.commit(spark, d, extra,
+      append = true, statCols = Seq("l_orderkey")))
+    val (upd, updateJobs) = JobLog(spark)(SnapTable.update(spark, d,
+      col("l_orderkey").between(100L, 199L), Map("l_quantity" -> lit(0.0)),
+      pruneCol = "l_orderkey", lo = 100L, hi = 199L))
+    val (del, deleteJobs) = JobLog(spark)(SnapTable.delete(spark, d,
+      col("l_orderkey").between(200L, 299L),
+      pruneCol = "l_orderkey", lo = 200L, hi = 299L))
+    assert(upd.rowsDeleted > 0 && del.rowsDeleted > 0)
+    for ((verb, jobs) <- Seq("append" -> appendJobs, "update" -> updateJobs,
+                             "delete" -> deleteJobs)) {
+      info(s"$verb: ${jobs.size} jobs")
+      assert(jobs.nonEmpty, s"$verb ran no job — the listener saw nothing")
+      assert(!jobs.exists(_.schemaInference),
+        s"$verb ran a parquet schema-inference job: $jobs")
+    }
+    SnapTable.destroy(spark, d)
+  }
+
+  test("an evolved append's files are read with the declared schema: pruning and rows exact") {
+    val d = s"$dir-evolve-prune"
+    SnapTable.destroy(spark, d)
+    val base = li.filter(col("l_orderkey") < 1000)
+      .repartitionByRange(4, col("l_orderkey"))
+    SnapTable.commit(spark, d, base, statCols = Seq("l_orderkey"))
+    val evolved = li.filter(col("l_orderkey") >= 1000)
+      .repartitionByRange(4, col("l_orderkey"))
+      .withColumn("l_tag", concat(lit("t"), col("l_orderkey")))
+    SnapTable.commit(spark, d, evolved, append = true,
+      statCols = Seq("l_orderkey"), evolveSchema = true)
+    val all = SnapTable.read(spark, d)
+    for ((lo, hi) <- Seq((1200L, 1400L), (900L, 1100L))) {
+      val plan = SnapTable.readWhere(spark, d,
+        statCol = "l_orderkey", lo = lo, hi = hi)
+      assert(plan.filesTotal == 8)
+      assert(plan.filesScanned < plan.filesTotal,
+        s"[$lo,$hi] scanned ${plan.filesScanned}/${plan.filesTotal}")
+      val want = all.filter(col("l_orderkey").between(lo, hi))
+      assert(plan.df.schema.fieldNames.contains("l_tag"))
+      assert(rows(plan.df) == rows(want) && rows(want).nonEmpty)
+    }
+    // evolved rows carry their tag; pre-evolution rows null-fill it
+    assert(all.filter(col("l_orderkey") >= 1000 && col("l_tag").isNull).isEmpty)
+    assert(all.filter(col("l_orderkey") < 1000 && col("l_tag").isNotNull).isEmpty)
+    SnapTable.destroy(spark, d)
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 }
