@@ -1,7 +1,6 @@
 package graft.geo
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The generic `(config, dirs, tools)` step-runner surface — the last
   * piece of the reference FRAMEWORK contract (round 10, verdict
@@ -78,41 +77,26 @@ object EtlFramework {
 
   /** The addresses module re-expressed as framework steps — the same
     * two stages `RunEtl` hardcodes, now decoupled through the dirs
-    * protocol. The infer step writes its output SCHEMA as a sidecar
-    * next to the NDJSON (the all-null `error` column would not survive
-    * schema inference on a fully-matched dataset — the same hazard
-    * runPipeline's comment records), so the transform step reads the
-    * file under the DECLARED schema exactly like every other source in
-    * the engine. Input locations come from config, defaulting to the
-    * framework-shape `getDir` of the upstream modules' transform steps
-    * (how the reference's objectsStream resolves them). */
+    * protocol. Each step is the matching `SpacetimeEtl` sink, so the
+    * transform step reads the infer step's files under the DECLARED
+    * `SpacetimeEtl.inferredSchema` exactly as `runPipeline` does. Input
+    * locations come from config, defaulting to the framework-shape
+    * `getDir` of the upstream modules' transform steps (how the
+    * reference's objectsStream resolves them). */
   def addressesModule: Module = Module("addresses", Seq(
     Step("infer", (config, dirs, tools) => {
-      val s = tools.spark
       val streetsPath = config.getOrElse("streetsPath",
         s"${dirs.getDir("nyc-streets", "transform")}/streets.ndjson")
       val housesPath = config.getOrElse("housesPath",
         s"${dirs.getDir("building-inspector", "transform")}/house_numbers.ndjson")
-      val inferred = SpacetimeEtl.infer(s,
-        SpacetimeEtl.readStreets(s, streetsPath),
-        SpacetimeEtl.readHouseNumbers(s, housesPath))
-      inferred.write.mode(SaveMode.Overwrite)
-        .json(s"${dirs.current}/inferred")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dirs.current, "inferred.schema.json"),
-        inferred.schema.json)
+      SpacetimeEtl.inferSink(tools.spark, streetsPath, housesPath,
+        s"${dirs.current}/inferred")
     }),
     Step("transform", (_, dirs, tools) => {
-      val s = tools.spark
       val prev = dirs.previous.getOrElse(
         sys.error("transform needs the infer step's output dir"))
-      val schema = DataType.fromJson(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(prev, "inferred.schema.json")))
-        .asInstanceOf[StructType]
-      val inferred = s.read.schema(schema).json(s"$prev/inferred")
-      SpacetimeEtl.transform(inferred)
-        .write.mode(SaveMode.Overwrite).partitionBy("type")
-        .json(s"${dirs.current}/records")
+      SpacetimeEtl.transformSink(tools.spark, s"$prev/inferred",
+        s"${dirs.current}/records")
     })))
 
   /** R19 OPT-IN ORDERED SINK — `tools.writer.writeObject` parity (round

@@ -1,6 +1,6 @@
 package graft.geo
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,8 +15,12 @@ import org.apache.spark.sql.types._
   *   readStreets → segments (infer: R1,R3,R5,R6)
   *   readHouseNumbers → housePoints (R1,R2,R3)
   *   bestMatch: grid-partitioned spatio-temporal nearest join (R7–R12)
-  *   infer: matched/error rows, `inferred.ndjson` shape (R13–R16)
-  *   transform: fan-out to objects/relations/logs (R17–R19, incl. N5)
+  *   infer: matched/error rows, `inferred.ndjson` shape (R13–R15)
+  *   inferSink: infer written as JSON (R16)
+  *   transform: fan-out to objects/relations/logs (R17–R18, incl. N5)
+  *   transformSink: transform over the infer sink read back under the
+  *     declared `inferredSchema`, written partitioned by type (R19)
+  *   runPipeline: inferSink then transformSink (R21) — the join runs once
   *
   * Scale: the candidate join is a plain equi-join on the grid cell key —
   * the optimizer broadcasts the cell-exploded segment side when it is
@@ -309,17 +313,42 @@ object SpacetimeEtl {
     matched.union(errors)
   }
 
+  /** infer's output schema. It is fixed by `streetSchema` and
+    * `houseSchema`, so it comes from analysing `infer` over empty inputs:
+    * no file is read and no job runs. Declaring it on the read-back keeps
+    * the `error` column, which schema inference would drop on an
+    * all-matched sink (every value null). */
+  def inferredSchema(spark: SparkSession): StructType = {
+    graft.plans.FuzzyMs.register(spark)
+    def empty(s: StructType) =
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+    infer(spark, empty(streetSchema), empty(houseSchema)).schema
+  }
+
+  /** R16: the infer step — `inferred.ndjson` as a JSON sink at
+    * `inferredDir`. */
+  def inferSink(spark: SparkSession, streetsPath: String, housesPath: String,
+                inferredDir: String): Unit =
+    infer(spark, readStreets(spark, streetsPath),
+      readHouseNumbers(spark, housesPath))
+      .write.mode(SaveMode.Overwrite).json(inferredDir)
+
+  /** R19: the transform step — reads the infer sink at `inferredDir`
+    * under the declared `inferredSchema` and writes the tagged records,
+    * partitioned by `type`, to `recordsDir`. The records derive from the
+    * files, not from infer's lineage, so the nearest-street join runs
+    * once per pipeline run. */
+  def transformSink(spark: SparkSession, inferredDir: String,
+                    recordsDir: String): Unit =
+    transform(spark.read.schema(inferredSchema(spark)).json(inferredDir))
+      .write.mode(SaveMode.Overwrite).partitionBy("type").json(recordsDir)
+
   /** R21: the two reference steps end-to-end, exchanging data through the
     * filesystem exactly like `spacetime-etl addresses` (R16/R19 sinks as
     * partitioned JSON — ordering was incidental in the reference). */
   def runPipeline(spark: SparkSession, streetsPath: String, housesPath: String,
                   outDir: String): Unit = {
-    val inferred = infer(spark, readStreets(spark, streetsPath),
-      readHouseNumbers(spark, housesPath))
-    inferred.write.mode(SaveMode.Overwrite).json(s"$outDir/inferred")
-    // transform from the DataFrame (same lineage the file records) — a
-    // schema-inferred re-read could drop the all-null `error` column
-    transform(inferred).write.mode(SaveMode.Overwrite).partitionBy("type")
-      .json(s"$outDir/records")
+    inferSink(spark, streetsPath, housesPath, s"$outDir/inferred")
+    transformSink(spark, s"$outDir/inferred", s"$outDir/records")
   }
 }

@@ -54,12 +54,20 @@ case class PhraseTokens(left: Expression, right: Expression)
     containsNull = false)
   override def prettyName: String = "phrase_tokens"
 
-  override protected def nullSafeEval(tk: Any, stops: Any): Any =
-    PhraseTokens.tokens(tk.asInstanceOf[ArrayData], stops.asInstanceOf[ArrayData])
+  /** The foldable stop list as a set, built once per expression
+    * instance; eval and codegen both probe it. A null list yields an
+    * empty set, never probed: a null `stops` makes every result null. */
+  @transient private lazy val stopSet: java.util.Set[UTF8String] =
+    PhraseTokens.stopSet(right.eval().asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def nullSafeEval(tk: Any, stops: Any): Any =
+    PhraseTokens.tokens(tk.asInstanceOf[ArrayData], stopSet)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val set = ctx.addReferenceObj("stopSet", stopSet, "java.util.Set")
     defineCodeGen(ctx, ev,
-      (t, st) => s"graft.plans.PhraseTokens.tokens($t, $st)")
+      (t, _) => s"graft.plans.PhraseTokens.tokens($t, $set)")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -67,20 +75,26 @@ case class PhraseTokens(left: Expression, right: Expression)
 }
 
 object PhraseTokens {
+  /** The non-null entries of a stop list; empty for a null list. */
+  def stopSet(stops: ArrayData): java.util.Set[UTF8String] = {
+    val set = new java.util.HashSet[UTF8String]()
+    if (stops != null) {
+      var i = 0
+      while (i < stops.numElements()) {
+        if (!stops.isNullAt(i)) set.add(stops.getUTF8String(i).clone())
+        i += 1
+      }
+    }
+    set
+  }
+
   /** (pid, pos, w) for every non-stop, non-empty token; pid = running
     * stop count. */
-  def tokens(tk: ArrayData, stops: ArrayData): ArrayData = {
-    val ns = stops.numElements()
-    val stopSet = new java.util.HashSet[UTF8String](ns * 2)
-    var i = 0
-    while (i < ns) {
-      if (!stops.isNullAt(i)) stopSet.add(stops.getUTF8String(i))
-      i += 1
-    }
+  def tokens(tk: ArrayData, stopSet: java.util.Set[UTF8String]): ArrayData = {
     val n = tk.numElements()
     val out = new java.util.ArrayList[Any](n)
     var pid = 0L
-    i = 0
+    var i = 0
     while (i < n) {
       if (!tk.isNullAt(i)) {
         val w = tk.getUTF8String(i)

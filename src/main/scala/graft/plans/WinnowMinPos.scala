@@ -42,7 +42,11 @@ case class WinnowMinPos(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(LongType, _), IntegerType) if right.foldable =>
-      TypeCheckResult.TypeCheckSuccess
+      right.eval() match {
+        case w: Int if w < 1 => TypeCheckResult.TypeCheckFailure(
+          s"winnow_minpos window must be >= 1, got $w")
+        case _ => TypeCheckResult.TypeCheckSuccess
+      }
     case _ => TypeCheckResult.TypeCheckFailure(
       s"winnow_minpos expects (ARRAY<BIGINT>, foldable INT), got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")

@@ -19,11 +19,14 @@ class EtlFrameworkSpec extends AnyFunSuite {
 
   test("framework run reproduces the hand-wired pipeline bit for bit") {
     val base = "target/etlfw-full"
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
     val cfg = Map("streetsPath" -> s"$Fx/streets.ndjson",
       "housesPath" -> s"$Fx/house_numbers.ndjson")
     val dirs = EtlFramework.run(EtlFramework.addressesModule, cfg, base,
       EtlFramework.Tools(spark))
     assert(dirs === Seq(s"$base/addresses/infer", s"$base/addresses/transform"))
+    // the transform step reads the infer files alone: no schema sidecar
+    assert(new java.io.File(s"$base/addresses/infer").list().toSeq === Seq("inferred"))
 
     SpacetimeEtl.runPipeline(spark, s"$Fx/streets.ndjson",
       s"$Fx/house_numbers.ndjson", "target/etlfw-ref")
@@ -34,6 +37,10 @@ class EtlFrameworkSpec extends AnyFunSuite {
 
   test("single-step run resolves previous from the declared order") {
     val base = "target/etlfw-full" // reuses the full run's infer output
+    // drop the full run's records: the step must rebuild them from the
+    // infer sink alone
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$base/addresses/transform"))
     val cfg = Map.empty[String, String]
     val dirs = EtlFramework.run(EtlFramework.addressesModule, cfg, base,
       EtlFramework.Tools(spark), only = Some("transform"))

@@ -52,4 +52,15 @@ class WinnowMinPosSpec extends AnyFunSuite {
     assert(r.isNullAt(1))
     assert(r.getInt(2) === 3)
   }
+
+  test("window < 1 is rejected at analysis, before any job runs") {
+    WinnowMinPos.register(spark)
+    val (e, jobs) = JobLog(spark) {
+      intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql("SELECT winnow_minpos(array(1L, 2L), 0) AS s")
+      }
+    }
+    assert(e.getMessage.contains("window must be >= 1, got 0"), e.getMessage)
+    assert(jobs.isEmpty, jobs)
+  }
 }
