@@ -17,7 +17,9 @@ import org.apache.spark.sql.types._
   *   bestMatch: grid-partitioned spatio-temporal nearest join (R7–R12)
   *   infer: matched/error rows, `inferred.ndjson` shape (R13–R15)
   *   inferSink: infer written as JSON (R16)
-  *   transform: fan-out to objects/relations/logs (R17–R18, incl. N5)
+  *   transform: fan-out to objects/relations/logs (R17–R18, incl. N5) —
+  *     one scan of the infer sink, one `explode(CASE …)` per row (G04's
+  *     shape)
   *   transformSink: transform over the infer sink read back under the
   *     declared `inferredSchema`, written partitioned by type (R19)
   *   runPipeline: inferSink then transformSink (R21) — the join runs once
@@ -285,45 +287,54 @@ object SpacetimeEtl {
   /** R17–R18: fan out each inferred row into tagged records
     * (`{type: object|relation|log, obj: ...}`, FIXTURES.md §2d). N5: the
     * matched log's addressData is the MERGED struct (the reference mutates
-    * the shared object before logging). */
+    * the shared object before logging). One projection over one scan of
+    * `inferred`: a single `explode(CASE …)` emits a matched row's object,
+    * two relations and log, or an unmatched row's error log — the G04
+    * records shape. `CaseWhen` evaluates only the branch a row takes. */
   def transform(inferred: DataFrame): DataFrame = {
     val merged = struct(col("addressData.sheetId"), col("addressData.layerId"),
       col("addressData.mapId"), col("addressData.number"),
       col("addressData.borough"), col("houseNumberId"), col("streetId"))
-    val matched = inferred.where(col("streetId").isNotNull).select(explode(array(
-      struct(lit("object").as("type"), to_json(struct(
+    def rec(tpe: String, obj: Column): Column =
+      struct(lit(tpe).as("type"), to_json(obj).as("obj"))
+    inferred.select(explode(when(col("streetId").isNotNull, array(
+      rec("object", struct(
         col("id"), col("name"), lit("st:Address").as("type"),
         col("validSince"), col("validUntil"), merged.as("data"),
-        col("addressGeometry").as("geometry"))).as("obj")),
-      struct(lit("relation").as("type"), to_json(struct(
+        col("addressGeometry").as("geometry"))),
+      rec("relation", struct(
         col("houseNumberId").as("from"), col("streetId").as("to"),
-        lit("st:in").as("type"))).as("obj")),
-      struct(lit("relation").as("type"), to_json(struct(
+        lit("st:in").as("type"))),
+      rec("relation", struct(
         col("id").as("from"), col("houseNumberId").as("to"),
-        lit("st:sameAs").as("type"))).as("obj")),
-      struct(lit("log").as("type"), to_json(struct(
+        lit("st:sameAs").as("type"))),
+      rec("log", struct(
         col("houseNumberId"), col("streetId"), col("streetName"),
         merged.as("addressData"), col("lineLength"),
-        col("addressGeometry").as("geometry"))).as("obj"))
-    )).as("r")).select(col("r.*"))
-    val errors = inferred.where(col("streetId").isNull).select(
-      lit("log").as("type"), to_json(struct(
+        col("addressGeometry").as("geometry")))
+    )).otherwise(array(
+      rec("log", struct(
         col("error"), col("houseNumberId"),
-        col("addressData"), col("addressGeometry").as("geometry"))).as("obj"))
-    matched.union(errors)
+        col("addressData"), col("addressGeometry").as("geometry")))
+    ))).as("r")).select(col("r.*"))
   }
 
-  /** infer's output schema. It is fixed by `streetSchema` and
-    * `houseSchema`, so it comes from analysing `infer` over empty inputs:
-    * no file is read and no job runs. Declaring it on the read-back keeps
-    * the `error` column, which schema inference would drop on an
-    * all-matched sink (every value null). */
-  def inferredSchema(spark: SparkSession): StructType = {
-    graft.plans.FuzzyMs.register(spark)
-    def empty(s: StructType) =
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
-    infer(spark, empty(streetSchema), empty(houseSchema)).schema
+  /** infer's output schema, resolved once per JVM. Its types are fixed by
+    * `streetSchema` and `houseSchema`, so analysing `infer` over empty
+    * inputs yields the same schema every time: no file is read, no job
+    * runs, and only the first call pays for the analysis. Declaring it on
+    * the read-back keeps the `error` column, which schema inference would
+    * drop on an all-matched sink (every value null). */
+  def inferredSchema(spark: SparkSession): StructType = synchronized {
+    if (inferredSchemaMemo == null) {
+      graft.plans.FuzzyMs.register(spark)
+      def empty(s: StructType) =
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
+      inferredSchemaMemo = infer(spark, empty(streetSchema), empty(houseSchema)).schema
+    }
+    inferredSchemaMemo
   }
+  private var inferredSchemaMemo: StructType = _
 
   /** R16: the infer step — `inferred.ndjson` as a JSON sink at
     * `inferredDir`. */

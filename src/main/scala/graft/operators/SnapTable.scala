@@ -1603,16 +1603,23 @@ object SnapTable {
     // zero, and |d| is that nonzero count; NULL group keys compare
     // equal in both formulations). SnapDiffEquivSpec pins row-level
     // multiset equality against the exceptAll form.
+    // the helper columns take names no table column has (compared
+    // case-insensitively, as the analyzer resolves them), so a table with
+    // a `_w`, `_d` or `_i` column diffs like any other
     val cols = b.columns.toSeq
-    b.select(cols.map(col) :+ lit(1L).as("_w"): _*)
-      .unionByName(a.select(cols.map(col) :+ lit(-1L).as("_w"): _*))
+    val taken = cols.map(_.toLowerCase).toSet
+    def fresh(base: String): String =
+      Iterator.iterate(base)(_ + "_").find(n => !taken(n.toLowerCase)).get
+    val (w, d, i) = (fresh("_w"), fresh("_d"), fresh("_i"))
+    b.select(cols.map(col) :+ lit(1L).as(w): _*)
+      .unionByName(a.select(cols.map(col) :+ lit(-1L).as(w): _*))
       .groupBy(cols.map(col): _*)
-      .agg(sum(col("_w")).as("_d"))
-      .filter(col("_d") =!= 0L)
+      .agg(sum(col(w)).as(d))
+      .filter(col(d) =!= 0L)
       .select(cols.map(col) :+
-        when(col("_d") > 0L, lit("added")).otherwise(lit("removed"))
+        when(col(d) > 0L, lit("added")).otherwise(lit("removed"))
           .as("change") :+
-        explode(expr("sequence(1L, abs(_d))")).as("_i"): _*)
+        explode(sequence(lit(1L), abs(col(d)))).as(i): _*)
       .select((cols :+ "change").map(col): _*)
   }
 

@@ -38,7 +38,11 @@ case class ShingleSetHash31(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(StringType, _), IntegerType) if right.foldable =>
-      TypeCheckResult.TypeCheckSuccess
+      right.eval() match {
+        case w: Int if w < 1 => TypeCheckResult.TypeCheckFailure(
+          s"shingle_set_hash31 width must be >= 1, got $w")
+        case _ => TypeCheckResult.TypeCheckSuccess
+      }
     case _ => TypeCheckResult.TypeCheckFailure(
       s"shingle_set_hash31 expects (ARRAY<STRING>, foldable INT), got " +
         s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")

@@ -5,7 +5,10 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import graft.geo.{GeoQueries, SpacetimeEtl}
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `runPipeline` hands data from infer to transform through the infer
@@ -13,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the declared `inferredSchema`, not from infer's lineage. Pins that
   * the sink form writes the same lines as the lineage form on inputs
   * that stress the read-back (all-null columns, JSON escaping, full
-  * double precision), and that the nearest-street join runs once. */
+  * double precision), that the nearest-street join runs once, and that
+  * `transform`'s one-scan `explode(CASE …)` writes the same lines as the
+  * two-scan union it replaced. */
 class EtlSinkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val Fx = GeoQueries.FixtureDir
@@ -30,15 +35,54 @@ class EtlSinkSpec extends AnyFunSuite {
     Files.list(Path.of(dir)).iterator().asScala.toSeq
       .map(_.getFileName.toString).filter(_.startsWith("type=")).sorted
 
-  /** The lineage form the sink form replaced: `transform(infer(...))`
+  /** The reference transform: matched and unmatched rows filtered from
+    * two scans of `inferred` and unioned — the form the one-scan
+    * `SpacetimeEtl.transform` replaced. */
+  private def unionTransform(inferred: DataFrame): DataFrame = {
+    val merged = struct(col("addressData.sheetId"), col("addressData.layerId"),
+      col("addressData.mapId"), col("addressData.number"),
+      col("addressData.borough"), col("houseNumberId"), col("streetId"))
+    val matched = inferred.where(col("streetId").isNotNull).select(explode(array(
+      struct(lit("object").as("type"), to_json(struct(
+        col("id"), col("name"), lit("st:Address").as("type"),
+        col("validSince"), col("validUntil"), merged.as("data"),
+        col("addressGeometry").as("geometry"))).as("obj")),
+      struct(lit("relation").as("type"), to_json(struct(
+        col("houseNumberId").as("from"), col("streetId").as("to"),
+        lit("st:in").as("type"))).as("obj")),
+      struct(lit("relation").as("type"), to_json(struct(
+        col("id").as("from"), col("houseNumberId").as("to"),
+        lit("st:sameAs").as("type"))).as("obj")),
+      struct(lit("log").as("type"), to_json(struct(
+        col("houseNumberId"), col("streetId"), col("streetName"),
+        merged.as("addressData"), col("lineLength"),
+        col("addressGeometry").as("geometry"))).as("obj"))
+    )).as("r")).select(col("r.*"))
+    val errors = inferred.where(col("streetId").isNull).select(
+      lit("log").as("type"), to_json(struct(
+        col("error"), col("houseNumberId"),
+        col("addressData"), col("addressGeometry").as("geometry"))).as("obj"))
+    matched.union(errors)
+  }
+
+  /** The reference form: the union transform over infer's lineage,
     * written from the same DataFrame that wrote `inferred`. */
   private def lineageForm(streets: String, houses: String, out: String): Unit = {
     val inferred = SpacetimeEtl.infer(spark,
       SpacetimeEtl.readStreets(spark, streets),
       SpacetimeEtl.readHouseNumbers(spark, houses))
     inferred.write.mode(SaveMode.Overwrite).json(s"$out/inferred")
-    SpacetimeEtl.transform(inferred).write.mode(SaveMode.Overwrite)
+    unionTransform(inferred).write.mode(SaveMode.Overwrite)
       .partitionBy("type").json(s"$out/records")
+  }
+
+  /** Every file scan in the executed plan, descending through AQE
+    * wrappers and materialized query stages. */
+  private def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+    case f: FileSourceScanExec    => Seq(f)
+    case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
+    case q: QueryStageExec        => fileScans(q.plan)
+    case other                    => other.children.flatMap(fileScans)
   }
 
   /** Both forms over one input; returns runPipeline's output dir. */
@@ -87,11 +131,23 @@ class EtlSinkSpec extends AnyFunSuite {
   test("inferredSchema is infer's schema over the fixture and runs no job") {
     val (schema, jobs) = JobLog(spark)(SpacetimeEtl.inferredSchema(spark))
     assert(jobs.isEmpty, jobs)
+    assert(SpacetimeEtl.inferredSchema(spark) eq schema, "schema re-resolved")
     val fixture = SpacetimeEtl.infer(spark,
       SpacetimeEtl.readStreets(spark, s"$Fx/streets.ndjson"),
       SpacetimeEtl.readHouseNumbers(spark, s"$Fx/house_numbers.ndjson"))
     assert(schema === fixture.schema)
     assert(schema.fieldNames.contains("error"))
+  }
+
+  test("transform reads the infer sink with one file scan") {
+    val out = tmp("etl-scan").toString
+    SpacetimeEtl.inferSink(spark, s"$Fx/streets.ndjson",
+      s"$Fx/house_numbers.ndjson", s"$out/inferred")
+    val records = SpacetimeEtl.transform(spark.read
+      .schema(SpacetimeEtl.inferredSchema(spark)).json(s"$out/inferred"))
+    records.collect()
+    assert(fileScans(records.queryExecution.executedPlan).size === 1,
+      records.queryExecution.executedPlan)
   }
 
   test("sink form == lineage form: geo fixture") {

@@ -69,4 +69,15 @@ class ShingleSetSpec extends AnyFunSuite {
       not(col("fs") <=> array_sort(array_distinct(col("fs"))))).count()
     assert(bad == 0, "kernel output must already be sorted and distinct")
   }
+
+  test("width < 1 is rejected at analysis, before any job runs") {
+    graft.plans.ShingleSetHash31.register(spark)
+    val (e, jobs) = JobLog(spark) {
+      intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql("SELECT shingle_set_hash31(array('a', 'b'), 0) AS s")
+      }
+    }
+    assert(e.getMessage.contains("width must be >= 1, got 0"), e.getMessage)
+    assert(jobs.isEmpty, jobs)
+  }
 }

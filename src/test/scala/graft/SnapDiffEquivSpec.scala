@@ -59,4 +59,30 @@ class SnapDiffEquivSpec extends AnyFunSuite {
     assert(gc((9L, "added")) === 2L)
     SnapTable.destroy(spark, dir)
   }
+
+  test("columns named like the diff's helper columns: _w, _d, _i") {
+    import spark.implicits._
+    val d = s"$dir-reserved"
+    SnapTable.destroy(spark, d)
+    val v1 = Seq((1L, 1L, "a", 10L), (1L, 1L, "a", 10L), (2L, -1L, "b", 0L),
+      (3L, 2L, "c", 7L)).toDF("_w", "_d", "_i", "n")
+    val v2 = Seq((1L, 1L, "a", 10L), (2L, -1L, "b", 0L), (3L, 2L, "c", 8L),
+      (4L, 0L, "_w_", 1L), (4L, 0L, "_w_", 1L)).toDF("_w", "_d", "_i", "n")
+    SnapTable.commit(spark, d, v1)
+    SnapTable.commit(spark, d, v2)
+
+    val a = SnapTable.read(spark, d, 1)
+    val b = SnapTable.read(spark, d, 2)
+    val expected = b.exceptAll(a).withColumn("change", lit("added"))
+      .unionByName(a.exceptAll(b).withColumn("change", lit("removed")))
+    val got = SnapTable.diff(spark, d, 1, 2)
+    assert(got.columns.toSeq === Seq("_w", "_d", "_i", "n", "change"))
+
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    assert(canon(got) === canon(expected))
+    assert(canon(got) === Seq("1|1|a|10|removed", "3|2|c|7|removed",
+      "3|2|c|8|added", "4|0|_w_|1|added", "4|0|_w_|1|added"))
+    SnapTable.destroy(spark, d)
+  }
 }
