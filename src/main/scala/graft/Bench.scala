@@ -12,8 +12,7 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // same deploy surface Verify runs under (q44 needs the injected
-      // optimizer rule; the injected functions replace per-query
-      // register() calls on the cluster)
+      // optimizer rule; the native functions resolve through it)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -143,7 +143,6 @@ object R14Lab {
         // own cold action (caches dropped between), so the expensive
         // component is a measurement, not a guess
         import org.apache.spark.sql.functions._
-        graft.plans.RollHash31.register(spark)
         def toksRel = {
           val t = Tables(spark, sfDir, "documents")
           graft.operators.ScanFan.fan(t, col("doc_id"))

@@ -15,10 +15,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q05_star")(spark, "/root/testdata/sf0.001")
 
+  /** Each program first registers the native functions its session
+    * lacks, so a session built without `GraftExtensions` runs it too. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.Relational.queries ++ graft.queries.Llm.queries ++
+    (graft.queries.Relational.queries ++ graft.queries.Llm.queries ++
       graft.queries.StreamingQueries.queries ++ graft.geo.GeoQueries.queries ++
-      graft.queries.DedupExt.queries ++ graft.queries.TextExt.queries
+      graft.queries.DedupExt.queries ++ graft.queries.TextExt.queries)
+      .transform { (_, q) => (s: SparkSession, d: String) =>
+        graft.plans.NativeFunctions.ensure(s)
+        q(s, d)
+      }
 
   def oracleSql: Map[String, String] =
     graft.queries.Relational.oracle ++ graft.queries.Llm.oracle ++

@@ -50,9 +50,12 @@ object EtlFramework {
 
   /** Run a module — all steps in declared order, or `only` one of them
     * (its `previous` still resolved from the declared order). Returns
-    * the output dir of every step that ran. */
+    * the output dir of every step that ran. The tools' session may lack
+    * `GraftExtensions` (RunEtl builds one without it), so the native
+    * functions the steps call are ensured first. */
   def run(module: Module, config: Map[String, String], baseDir: String,
           tools: Tools, only: Option[String] = None): Seq[String] = {
+    graft.plans.NativeFunctions.ensure(tools.spark)
     val selected = only match {
       case Some(n) =>
         val s = module.steps.filter(_.name == n)

@@ -64,15 +64,11 @@ object SpacetimeEtl {
   private def fuzzyMin(c: Column): Column = call_function("fuzzy_min_ms", c)
   private def fuzzyMax(c: Column): Column = call_function("fuzzy_max_ms", c)
 
-  def readStreets(spark: SparkSession, path: String): DataFrame = {
-    graft.plans.FuzzyMs.register(spark)
+  def readStreets(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(streetSchema).json(path)
-  }
 
-  def readHouseNumbers(spark: SparkSession, path: String): DataFrame = {
-    graft.plans.FuzzyMs.register(spark)
+  def readHouseNumbers(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(houseSchema).json(path)
-  }
 
   /** R1+R3+R5+R6: streets → one row per consecutive-vertex segment with
     * inherited street properties and precomputed fuzzy-date bounds. The
@@ -170,7 +166,6 @@ object SpacetimeEtl {
       .withColumn("cx", floor(col("px") / Cs).cast(LongType))
       .withColumn("cy", floor(col("py") / Cs).cast(LongType))
 
-    graft.plans.CrosstrackM.register(spark)
     // temporal conjunct evaluated BEFORE the trig distance (N8): the
     // crosstrack expression only runs on temporally valid candidates
     val valid = col("street_id").isNotNull &&
@@ -327,7 +322,6 @@ object SpacetimeEtl {
     * drop on an all-matched sink (every value null). */
   def inferredSchema(spark: SparkSession): StructType = synchronized {
     if (inferredSchemaMemo == null) {
-      graft.plans.FuzzyMs.register(spark)
       def empty(s: StructType) =
         spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
       inferredSchemaMemo = infer(spark, empty(streetSchema), empty(houseSchema)).schema

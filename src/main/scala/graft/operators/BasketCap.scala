@@ -62,7 +62,6 @@ object BasketCap {
     * gate re-proves hash equality. */
   def cappedPairs(rel: DataFrame, basketCol: String, partCol: String,
                   cap: Int = DefaultCap): DataFrame = {
-    graft.plans.BottomK.register(rel.sparkSession)
     // scale-adaptive fan (ScanFan gate): the partial bottom_k
     // aggregation otherwise runs inside the single-row-group scan's one
     // task at bench scale; the repartition keys on the basket so the

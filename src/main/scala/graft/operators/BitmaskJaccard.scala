@@ -23,7 +23,6 @@ object BitmaskJaccard {
   /** (doc_id, tok) pairs → (doc_id, nt, m: Array[Long] bitmask). */
   def masks(toks: DataFrame): DataFrame = {
     val spark = toks.sparkSession
-    graft.plans.Bitmask64.register(spark)
     import spark.implicits._
     // deterministic dense numbering: range-sorted, contiguous ids; the
     // only job zipWithIndex runs is the lightweight per-partition count
@@ -44,8 +43,8 @@ object BitmaskJaccard {
 
   /** Exact popcount intersection size of two mask arrays — the native
     * fused kernel (plans/PopcountAnd): one codegen'd loop, no
-    * intermediate zip_with array per candidate pair. Callers must have
-    * `popcount_and` registered (every entry point below does). */
+    * intermediate zip_with array per candidate pair. `popcount_and`
+    * resolves through GraftExtensions or `NativeFunctions.ensure`. */
   val interExpr: String = "popcount_and(ma, mb)"
 
   /** Dictionary-free token-set relation: (doc_id, nt, tks sorted
@@ -64,7 +63,6 @@ object BitmaskJaccard {
     * corpus size — correct for bounded inputs / test parity; the corpus
     * scale default is `bandedPairs`. */
   def pairs(left: DataFrame, right: DataFrame, num: Int, den: Int): DataFrame = {
-    graft.plans.PopcountAnd.register(left.sparkSession)
     left.select(col("doc_id").as("a"), col("nt").as("na"), col("m").as("ma"))
       .crossJoin(broadcast(right.select(
         col("doc_id").as("b"), col("nt").as("nb"), col("m").as("mb"))))
@@ -110,7 +108,6 @@ object BitmaskJaccard {
   def prefixPairs(toks: DataFrame, masks: DataFrame, num: Int, den: Int,
                   broadcastMasks: Boolean = false,
                   broadcastPrefixes: Boolean = false): DataFrame = {
-    graft.plans.PopcountAnd.register(toks.sparkSession)
     // global total order: (document frequency ASC, token ASC). The df
     // join is 1:1 per (doc, tok) row — linear, no fan-out.
     val df = toks.groupBy("tok").agg(count(lit(1)).as("tdf"))
@@ -208,9 +205,6 @@ object BitmaskJaccard {
                        broadcastPrefixes: Boolean = false): DataFrame = {
     val spark = toks.sparkSession
     import spark.implicits._
-    graft.plans.FirstCommonSorted.register(spark)
-    graft.plans.PopcountAnd.register(spark)
-    graft.plans.Bitmask64.register(spark)
     // global prefix-order dictionary; cached — wmax and the per-doc
     // join both read it, and RDD jobs cannot reuse SQL exchanges
     val vocab = OpCaches.track(
@@ -284,7 +278,6 @@ object BitmaskJaccard {
   def bandedPairs(toks: DataFrame, masks: DataFrame, num: Int, den: Int,
                   nHashes: Int = 16, nBands: Int = 4,
                   broadcastMasks: Boolean = false): DataFrame = {
-    graft.plans.PopcountAnd.register(toks.sparkSession)
     val cand = bandedCandidates(toks, nHashes, nBands)
     def side(n: String, nt: String, m: String) = {
       val s = masks.select(col("doc_id").as(n), col("nt").as(nt), col("m").as(m))
@@ -315,9 +308,6 @@ object BitmaskJaccard {
                        broadcastMasks: Boolean = false): DataFrame = {
     val spark = toks.sparkSession
     import spark.implicits._
-    graft.plans.RollHash31.register(spark)
-    graft.plans.PopcountAnd.register(spark)
-    graft.plans.Bitmask64.register(spark)
     val P = 1000000007L
     val rows = nHashes / nBands
     require(rows * nBands == nHashes, "nBands must divide nHashes")
@@ -375,9 +365,6 @@ object BitmaskJaccard {
     * `bandedPairs`. */
   def bandedPairsCompact(toks: DataFrame, num: Int, den: Int,
                          nHashes: Int = 16, nBands: Int = 4): DataFrame = {
-    val spark = toks.sparkSession
-    graft.plans.IntersectSortedCount.register(spark)
-    graft.plans.RollHash31.register(spark)
     val P = 1000000007L
     val rows = nHashes / nBands
     require(rows * nBands == nHashes, "nBands must divide nHashes")
@@ -471,7 +458,6 @@ object BitmaskJaccard {
     // shared cross-engine rolling hash (see DedupExt scaladoc): fold of
     // acc*31 + codepoint mod 1e9+7, bit-identical in Spark and DuckDB —
     // the native codegen expression, not the interpreted HOF fold
-    graft.plans.RollHash31.register(toks.sparkSession)
     val th = toks.withColumn("h", expr("roll_hash31(tok)"))
     val minCols = (0 until nHashes).map { j =>
       val a = 1000003L * j + 12345L

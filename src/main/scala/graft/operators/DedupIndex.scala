@@ -125,7 +125,6 @@ object DedupIndex {
             buckets: Int = FromConf): Handles = {
     val spark = corpus.sparkSession
     val b = resolve(spark, buckets)
-    graft.plans.RollHash31.register(spark)
     val bands = graft.queries.DedupExt.bandSignatures(corpus)
     val fps = corpus.select(expr("roll_hash31(text)").as("fp")).distinct()
     spark.sql(s"DROP TABLE IF EXISTS ${bandsTable(dir)}")

@@ -1547,12 +1547,6 @@ object SnapTable {
     // probe bit positions computed through the SAME Catalyst expression
     // that built the bitmaps (bloomPositions — direct XxHash64 eval)
     val (p1, p2) = bloomPositions(spark, value, m)
-    def bitSet(hex: String, p: Long): Boolean = {
-      val w = (p / 64).toInt
-      val word = java.lang.Long.parseUnsignedLong(
-        hex.substring(w * 16, w * 16 + 16), 16)
-      (word & (1L << (p % 64))) != 0L
-    }
     val zk = info.statCols.indexOf(bc)
     val keep = info.files.filter { e =>
       val zoneOk = zk < 0 || (e.ranges(zk) match {
@@ -1560,7 +1554,7 @@ object SnapTable {
         case None           => true
       })
       zoneOk && (e.bloomHex match {
-        case Some(hex) => bitSet(hex, p1) && bitSet(hex, p2)
+        case Some(hex) => bloomHexHas(hex, p1) && bloomHexHas(hex, p2)
         case None      => true // no bitmap recorded: never prune
       })
     }
@@ -1588,10 +1582,15 @@ object SnapTable {
     * audit trail a mutable table cannot give. Scale shape: two scans
     * feeding ONE signed-count aggregation (one shuffle of both versions),
     * then row-local replication; for key-bounded diffs, filter both
-    * sides first (zone maps apply). */
+    * sides first (zone maps apply). `change` is the output column, so a
+    * table with a column of that name is rejected before any job runs. */
   def diff(spark: SparkSession, dir: String, vOld: Int, vNew: Int): DataFrame = {
-    val a = read(spark, dir, vOld)
     val b = read(spark, dir, vNew)
+    val clash = b.columns.find(_.equalsIgnoreCase("change"))
+    require(clash.isEmpty,
+      s"SnapTable.diff reserves the output column name `change`, but the " +
+        s"table at $dir has a column `${clash.get}`: rename it before diffing")
+    val a = read(spark, dir, vOld)
     // round 15 (guide §2.4): ONE signed-count aggregation + row-local
     // replication. The previous exceptAll PAIR planned as two
     // tagged-union count aggregates, each shuffling BOTH versions (the

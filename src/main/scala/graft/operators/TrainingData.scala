@@ -81,7 +81,6 @@ object TrainingData {
     * string-distinct form, whose contract a hash collision could
     * otherwise shift. */
   private[graft] def shingleHashes(docs: DataFrame, n: Int): DataFrame = {
-    graft.plans.RollHash31.register(docs.sparkSession)
     // scale-adaptive fan (ScanFan gate): shingling + hashing is the
     // heavy row-local work of the decontamination path and otherwise
     // runs inside a single-row-group scan's one task at bench scale
@@ -132,7 +131,6 @@ object TrainingData {
     * per-doc removed set riding a narrow equi-join) — the corpus text
     * never shuffles. */
   def removeDupSpans(docs: DataFrame, win: Int = 8): DataFrame = {
-    graft.plans.RollHash31.register(docs.sparkSession)
     val tk = docs.select(col("doc_id"), split(col("text"), " ").as("tk"))
     // one row per window: (doc_id, k, h), k 1-based
     val w = OpCaches.track(tk

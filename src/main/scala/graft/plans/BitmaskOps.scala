@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -69,22 +67,6 @@ object PopcountAnd {
     }
     s
   }
-
-  private[plans] val ident = FunctionIdentifier("popcount_and")
-  private[plans] val info =
-    new ExpressionInfo(classOf[PopcountAnd].getName, "popcount_and")
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2,
-      s"popcount_and expects 2 arguments, got ${args.length}")
-    PopcountAnd(args.head, args(1))
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("popcount_and", build, "built-in")
-
-  private[plans] def builder: Seq[Expression] => Expression = build
 }
 
 case class Bitmask64(left: Expression, right: Expression)
@@ -117,7 +99,9 @@ case class Bitmask64(left: Expression, right: Expression)
 
 object Bitmask64 {
   def build64(tis: ArrayData, wmax: Long): ArrayData = {
-    val words = new Array[Long](wmax.toInt + 1)
+    // wmax = -1 is the empty mask, and no word w >= 0 satisfies
+    // w <= wmax < 0, so every negative wmax is the empty mask too
+    val words = new Array[Long](math.max(wmax, -1L).toInt + 1)
     val n = tis.numElements()
     var i = 0
     while (i < n) {
@@ -128,20 +112,4 @@ object Bitmask64 {
     }
     new GenericArrayData(words)
   }
-
-  private[plans] val ident = FunctionIdentifier("bitmask64")
-  private[plans] val info =
-    new ExpressionInfo(classOf[Bitmask64].getName, "bitmask64")
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2,
-      s"bitmask64 expects 2 arguments, got ${args.length}")
-    Bitmask64(args.head, args(1))
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("bitmask64", build, "built-in")
-
-  private[plans] def builder: Seq[Expression] => Expression = build
 }

@@ -1,22 +1,26 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native Catalyst AGGREGATE for the k SMALLEST DISTINCT int64 values
-  * of a group, k a literal parameter — [[BottomK256]]'s kernel with a
-  * caller-chosen bound (round 14: the co-purchase graph family's
-  * basket cap).
+  * of a group, k a foldable INT argument. Two uses:
   *
-  * Why it exists (guide §2.3/§2.4): the capped-basket pair build used
-  * to run distinct → window row_number ≤ cap → self-join on the basket
-  * key — two exchanges plus a full per-basket sort before the pair
+  * t6's bottom-k ("theta", KMV) sketch is `bottom_k(h, 256)`: unlike HLL
+  * it supports set algebra — two groups' sketches merge by
+  * union-and-trim, and the intersection survives inside the merged
+  * bottom-k. The TreeSet buffer is O(k) per group however large the
+  * group, with an early-out once it is full and the value exceeds its
+  * max.
+  *
+  * The co-purchase graph family's basket cap (round 14; guide
+  * §2.3/§2.4): the capped-basket pair build used to run distinct →
+  * window row_number ≤ cap → self-join on the basket key — two exchanges plus a full per-basket sort before the pair
   * fan-out. `groupBy(basket).agg(bottom_k(part, cap))` computes the
   * identical capped part set in ONE partial-aggregatable exchange:
   * map-side buffers are O(cap) per basket (the same hot-basket memory
@@ -104,29 +108,4 @@ case class BottomK(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): BottomK =
     copy(child = newChild)
-}
-
-object BottomK {
-  private[plans] val ident =
-    org.apache.spark.sql.catalyst.FunctionIdentifier("bottom_k")
-  private[plans] val info =
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[BottomK].getName, "bottom_k")
-  private[plans] def builder: Seq[Expression] => Expression = build
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2,
-      s"bottom_k expects 2 arguments (value, k), got ${args.length}")
-    val k = args(1) match {
-      case Literal(v: Int, IntegerType) => v
-      case other => throw new IllegalArgumentException(
-        s"bottom_k's k must be an INT literal, got $other")
-    }
-    BottomK(args.head, k)
-  }
-
-  /** Register `bottom_k` in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("bottom_k", build, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -111,22 +110,4 @@ object CmsSketch4x256 {
     val hh = ((h % P) + P) % P
     ((((1000003L * j + 12345L) * hh + (777767L * j + 13L)) % P) % Width).toInt
   }
-
-  private[plans] val ident =
-    org.apache.spark.sql.catalyst.FunctionIdentifier("cms4x256")
-  private[plans] val info =
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[CmsSketch4x256].getName, "cms4x256")
-  private[plans] def builder: Seq[Expression] => Expression = build
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 1,
-      s"cms4x256 expects 1 argument, got ${args.length}")
-    CmsSketch4x256(args.head)
-  }
-
-  /** Register `cms4x256` in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("cms4x256", build, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -112,24 +111,4 @@ case class CovAccum64(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): CovAccum64 =
     copy(child = newChild)
-}
-
-object CovAccum64 {
-  private[plans] val ident =
-    org.apache.spark.sql.catalyst.FunctionIdentifier("cov_accum64")
-  private[plans] val info =
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[CovAccum64].getName, "cov_accum64")
-  private[plans] def builder: Seq[Expression] => Expression = build
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 1,
-      s"cov_accum64 expects 1 argument, got ${args.length}")
-    CovAccum64(args.head)
-  }
-
-  /** Register `cov_accum64` in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("cov_accum64", build, "built-in")
 }

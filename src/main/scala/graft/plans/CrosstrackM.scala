@@ -1,11 +1,9 @@
 package graft.plans
 
 import graft.geo.Geo
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, DoubleType}
@@ -59,59 +57,4 @@ case class CrosstrackM(children: Seq[Expression]) extends Expression {
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
-}
-
-object CrosstrackM {
-  private[plans] val ident = FunctionIdentifier("crosstrack_m")
-  private[plans] val info = new ExpressionInfo(classOf[CrosstrackM].getName, "crosstrack_m")
-
-  /** Register `crosstrack_m` in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("crosstrack_m", CrosstrackM(_), "built-in")
-}
-
-/** `SparkSessionExtensions` entry point: set
-  * `spark.sql.extensions=graft.plans.GraftExtensions` and the graft
-  * native functions (`crosstrack_m`, `dot_long`, …) are available in
-  * plain SQL — and the Sessionize planner strategy is installed — on
-  * every session of the cluster, with no per-session register() calls.
-  * (ExtensionsSpec drives a fresh session through this path.) */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => SessionizeStrategy)
-    ext.injectOptimizerRule(_ => BinnedRangeJoinRule)
-    ext.injectOptimizerRule(_ => MatViewRewrite)
-    ext.injectOptimizerRule(_ => JaroWinklerPrefilter)
-    ext.injectOptimizerRule(_ => SaltedTopKRule)
-    ext.injectOptimizerRule(_ => FkJoinElimRule)
-    ext.injectFunction((CrosstrackM.ident, CrosstrackM.info, CrosstrackM(_)))
-    ext.injectFunction((DotLong.ident, DotLong.info, DotLong.builder))
-    ext.injectFunction((RollHash31.ident, RollHash31.info, RollHash31.builder))
-    ext.injectFunction((ShingleSetHash31.ident, ShingleSetHash31.info,
-      ShingleSetHash31.builder))
-    ext.injectFunction((IntersectSortedCount.ident, IntersectSortedCount.info,
-      IntersectSortedCount.builder))
-    ext.injectFunction((FirstCommonSorted.ident, FirstCommonSorted.info,
-      FirstCommonSorted.builder))
-    ext.injectFunction((FuzzyMs.minIdent, FuzzyMs.minInfo, FuzzyMs.minBuilder))
-    ext.injectFunction((FuzzyMs.maxIdent, FuzzyMs.maxInfo, FuzzyMs.maxBuilder))
-    ext.injectFunction((Morton2.ident, Morton2.info, Morton2.builder))
-    ext.injectFunction((SimHashBands64.ident, SimHashBands64.info,
-      SimHashBands64.builder))
-    ext.injectFunction((HyperplaneBands64.ident, HyperplaneBands64.info,
-      HyperplaneBands64.builder))
-    ext.injectFunction((CovAccum64.ident, CovAccum64.info, CovAccum64.builder))
-    ext.injectFunction((JaroWinklerSim.ident, JaroWinklerSim.info,
-      JaroWinklerSim.builder))
-    ext.injectFunction((HistBins600.ident, HistBins600.info,
-      HistBins600.builder))
-    ext.injectFunction((CmsSketch4x256.ident, CmsSketch4x256.info,
-      CmsSketch4x256.builder))
-    ext.injectFunction((BottomK256.ident, BottomK256.info,
-      BottomK256.builder))
-    ext.injectFunction((BottomK.ident, BottomK.info, BottomK.builder))
-    ext.injectFunction((PopcountAnd.ident, PopcountAnd.info, PopcountAnd.builder))
-    ext.injectFunction((Bitmask64.ident, Bitmask64.info, Bitmask64.builder))
-  }
 }

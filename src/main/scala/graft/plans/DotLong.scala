@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -74,21 +72,4 @@ case class DotLong(left: Expression, right: Expression) extends BinaryExpression
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object DotLong {
-  private[plans] val ident = FunctionIdentifier("dot_long")
-  private[plans] val info = new ExpressionInfo(classOf[DotLong].getName, "dot_long")
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2, s"dot_long expects 2 arguments, got ${args.length}")
-    DotLong(args.head, args(1))
-  }
-
-  /** Register `dot_long` in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("dot_long", build, "built-in")
-
-  private[plans] def builder: Seq[Expression] => Expression = build
 }

@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -75,21 +73,4 @@ object FirstCommonSorted {
     }
     -1L
   }
-
-  private[plans] val ident = FunctionIdentifier("first_common_sorted")
-  private[plans] val info =
-    new ExpressionInfo(classOf[FirstCommonSorted].getName, "first_common_sorted")
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2,
-      s"first_common_sorted expects 2 arguments, got ${args.length}")
-    FirstCommonSorted(args.head, args(1))
-  }
-
-  /** Register in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("first_common_sorted", build, "built-in")
-
-  private[plans] def builder: Seq[Expression] => Expression = build
 }

@@ -1,10 +1,8 @@
 package graft.plans
 
 import graft.geo.FuzzyDates
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -65,25 +63,4 @@ object FuzzyMs {
       case None => null
     }
   }
-
-  private[plans] val minIdent = FunctionIdentifier("fuzzy_min_ms")
-  private[plans] val maxIdent = FunctionIdentifier("fuzzy_max_ms")
-  private[plans] val minInfo = new ExpressionInfo(classOf[FuzzyMs].getName, "fuzzy_min_ms")
-  private[plans] val maxInfo = new ExpressionInfo(classOf[FuzzyMs].getName, "fuzzy_max_ms")
-
-  private def build(isMin: Boolean)(args: Seq[Expression]): Expression = {
-    require(args.length == 1, s"fuzzy_ms expects 1 argument, got ${args.length}")
-    FuzzyMs(args.head, isMin)
-  }
-
-  /** Register both functions in a live session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("fuzzy_min_ms", build(isMin = true), "built-in")
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("fuzzy_max_ms", build(isMin = false), "built-in")
-  }
-
-  private[plans] def minBuilder: Seq[Expression] => Expression = build(isMin = true)
-  private[plans] def maxBuilder: Seq[Expression] => Expression = build(isMin = false)
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -86,24 +85,4 @@ case class HistBins600(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): HistBins600 =
     copy(child = newChild)
-}
-
-object HistBins600 {
-  private[plans] val ident =
-    org.apache.spark.sql.catalyst.FunctionIdentifier("hist_bins600")
-  private[plans] val info =
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[HistBins600].getName, "hist_bins600")
-  private[plans] def builder: Seq[Expression] => Expression = build
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 1,
-      s"hist_bins600 expects 1 argument, got ${args.length}")
-    HistBins600(args.head)
-  }
-
-  /** Register `hist_bins600` in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("hist_bins600", build, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -101,24 +100,4 @@ case class HyperplaneBands64(
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HyperplaneBands64 =
     copy(left = newLeft, right = newRight)
-}
-
-object HyperplaneBands64 {
-  private[plans] val ident =
-    org.apache.spark.sql.catalyst.FunctionIdentifier("hyperplane_bands64")
-  private[plans] val info =
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[HyperplaneBands64].getName, "hyperplane_bands64")
-  private[plans] def builder: Seq[Expression] => Expression = build
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2,
-      s"hyperplane_bands64 expects 2 arguments, got ${args.length}")
-    HyperplaneBands64(args.head, args(1))
-  }
-
-  /** Register `hyperplane_bands64` in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("hyperplane_bands64", build, "built-in")
 }

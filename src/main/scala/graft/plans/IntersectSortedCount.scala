@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -92,21 +90,4 @@ object IntersectSortedCount {
     }
     n
   }
-
-  private[plans] val ident = FunctionIdentifier("intersect_sorted_count")
-  private[plans] val info =
-    new ExpressionInfo(classOf[IntersectSortedCount].getName, "intersect_sorted_count")
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2,
-      s"intersect_sorted_count expects 2 arguments, got ${args.length}")
-    IntersectSortedCount(args.head, args(1))
-  }
-
-  /** Register in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("intersect_sorted_count", build, "built-in")
-
-  private[plans] def builder: Seq[Expression] => Expression = build
 }

@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -56,7 +54,6 @@ case class JaroWinklerSim(left: Expression, right: Expression)
 }
 
 object JaroWinklerSim {
-
   /** Static kernel — called from both interpreted eval and codegen. */
   def jw(ua: UTF8String, ub: UTF8String): Double = {
     val a = ua.getBytes
@@ -108,21 +105,4 @@ object JaroWinklerSim {
       jaro + p * 0.1 * (1.0 - jaro)
     } else jaro
   }
-
-  private[plans] val ident = FunctionIdentifier("jaro_winkler")
-  private[plans] val info =
-    new ExpressionInfo(classOf[JaroWinklerSim].getName, "jaro_winkler")
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2,
-      s"jaro_winkler expects 2 arguments, got ${args.length}")
-    JaroWinklerSim(args(0), args(1))
-  }
-
-  /** Register `jaro_winkler` in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("jaro_winkler", build, "built-in")
-
-  private[plans] def builder: Seq[Expression] => Expression = build
 }

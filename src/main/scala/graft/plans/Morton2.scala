@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -43,7 +41,6 @@ case class Morton2(left: Expression, right: Expression)
 }
 
 object Morton2 {
-
   /** Spread the low 21 bits of v onto the even bit positions 0,2,..,40
     * (five mask-shift rounds — no loop, no allocation). */
   def spread(v: Long): Long = {
@@ -59,19 +56,4 @@ object Morton2 {
   /** Static kernel — called from both interpreted eval and codegen. */
   def interleave(x: Long, y: Long): Long =
     spread(x) | (spread(y) << 1)
-
-  private[plans] val ident = FunctionIdentifier("morton2")
-  private[plans] val info = new ExpressionInfo(classOf[Morton2].getName, "morton2")
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2, s"morton2 expects 2 arguments, got ${args.length}")
-    Morton2(args.head, args(1))
-  }
-
-  /** Register `morton2` in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("morton2", build, "built-in")
-
-  private[plans] def builder: Seq[Expression] => Expression = build
 }

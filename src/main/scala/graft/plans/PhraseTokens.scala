@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -107,21 +105,4 @@ object PhraseTokens {
     }
     new GenericArrayData(out.toArray)
   }
-
-  private[plans] val ident = FunctionIdentifier("phrase_tokens")
-  private[plans] val info =
-    new ExpressionInfo(classOf[PhraseTokens].getName, "phrase_tokens")
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2,
-      s"phrase_tokens expects 2 arguments, got ${args.length}")
-    PhraseTokens(args.head, args(1))
-  }
-
-  /** Register in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("phrase_tokens", build, "built-in")
-
-  private[plans] def builder: Seq[Expression] => Expression = build
 }

@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -57,19 +55,4 @@ object RollHash31 {
     }
     acc
   }
-
-  private[plans] val ident = FunctionIdentifier("roll_hash31")
-  private[plans] val info = new ExpressionInfo(classOf[RollHash31].getName, "roll_hash31")
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 1, s"roll_hash31 expects 1 argument, got ${args.length}")
-    RollHash31(args.head)
-  }
-
-  /** Register `roll_hash31` in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("roll_hash31", build, "built-in")
-
-  private[plans] def builder: Seq[Expression] => Expression = build
 }

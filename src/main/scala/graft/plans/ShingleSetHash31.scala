@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -121,21 +119,4 @@ object ShingleSetHash31 {
     }
     new GenericArrayData(if (m == out.length) out else java.util.Arrays.copyOf(out, m))
   }
-
-  private[plans] val ident = FunctionIdentifier("shingle_set_hash31")
-  private[plans] val info =
-    new ExpressionInfo(classOf[ShingleSetHash31].getName, "shingle_set_hash31")
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2,
-      s"shingle_set_hash31 expects 2 arguments, got ${args.length}")
-    ShingleSetHash31(args.head, args(1))
-  }
-
-  /** Register in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("shingle_set_hash31", build, "built-in")
-
-  private[plans] def builder: Seq[Expression] => Expression = build
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -111,24 +110,4 @@ case class SimHashBands64(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): SimHashBands64 =
     copy(child = newChild)
-}
-
-object SimHashBands64 {
-  private[plans] val ident =
-    org.apache.spark.sql.catalyst.FunctionIdentifier("simhash_bands64")
-  private[plans] val info =
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[SimHashBands64].getName, "simhash_bands64")
-  private[plans] def builder: Seq[Expression] => Expression = build
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 1,
-      s"simhash_bands64 expects 1 argument, got ${args.length}")
-    SimHashBands64(args.head)
-  }
-
-  /** Register `simhash_bands64` in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("simhash_bands64", build, "built-in")
 }

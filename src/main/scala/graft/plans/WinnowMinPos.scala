@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -106,21 +104,4 @@ object WinnowMinPos {
     }
     new GenericArrayData(out.toArray)
   }
-
-  private[plans] val ident = FunctionIdentifier("winnow_minpos")
-  private[plans] val info =
-    new ExpressionInfo(classOf[WinnowMinPos].getName, "winnow_minpos")
-
-  private def build(args: Seq[Expression]): Expression = {
-    require(args.length == 2,
-      s"winnow_minpos expects 2 arguments, got ${args.length}")
-    WinnowMinPos(args.head, args(1))
-  }
-
-  /** Register in a live session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("winnow_minpos", build, "built-in")
-
-  private[plans] def builder: Seq[Expression] => Expression = build
 }

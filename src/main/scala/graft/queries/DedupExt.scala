@@ -58,7 +58,7 @@ object DedupExt {
   private val FPDuck = "10000000.0"
 
   /** Spark-side rolling hash of a string column (matches `duckH`) — the
-    * native codegen expression; callers register via RollHash31.register. */
+    * native codegen expression `roll_hash31`. */
   private def sparkH(c: String): Column = expr(s"roll_hash31($c)")
 
   /** DuckDB-side rolling hash SQL snippet over column `c`. */
@@ -77,7 +77,6 @@ object DedupExt {
     * the persisted form joins an incoming batch with no index-side
     * shuffle. */
   private[graft] def bandSignatures(docs: DataFrame): DataFrame = {
-    graft.plans.RollHash31.register(docs.sparkSession)
     val th = graft.operators.ScanFan.fan(docs, col("doc_id"))
       .select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("tok"))
@@ -213,8 +212,7 @@ object DedupExt {
   /** Pure-int64 dot-product kernel over two fixed-point arrays: the
     * native codegen expression (graft.plans.DotLong) — a primitive loop
     * over ArrayData, vs the interpreted per-element lambda frames of the
-    * equivalent aggregate(zip_with(...)) HOF form. Callers register it
-    * via DotLong.register (idempotent). */
+    * equivalent aggregate(zip_with(...)) HOF form. */
   private def dotL(a: String, b: String): String = s"dot_long($a, $b)"
 
   /** Per-vector band keys + squared norm from quantized exploded
@@ -235,7 +233,6 @@ object DedupExt {
     // TypedImperativeAggregate emitting array(k0..k3, n2)) instead of
     // 65 separate sum() functions — single buffer, tight JVM loop,
     // identical partial-shuffle bytes (SimHashBands64's rationale)
-    graft.plans.HyperplaneBands64.register(ex.sparkSession)
     ex.groupBy("vec_id")
       .agg(expr("hyperplane_bands64(CAST(i0 AS BIGINT), xi)").as("hb"))
       .select(col("vec_id") +: col("hb").getItem(4).as("n2") +:
@@ -335,7 +332,6 @@ object DedupExt {
     * exact fixed-point cosine via the native int64 kernel. Returns
     * (a, b, cosd) with cosd ≥ 0.4. */
   private def embDupPairs(s: SparkSession, d: String): DataFrame = {
-    graft.plans.DotLong.register(s)
     val pv = graft.operators.OpCaches.track(perVec(exQ(s, d)))
     // norms ride along the band rows → the cosine check needs only the
     // two embedding-array joins after the candidate self-join
@@ -396,7 +392,6 @@ object DedupExt {
     // never all-pairs; block sizes bounded by the phonetic keyspace
     // growing with the corpus.
     "qd20_soundexblock" -> ((s, d) => {
-      graft.plans.JaroWinklerSim.register(s)
       val p = graft.Tables(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           split(col("text"), " ").getItem(0).as("tok1"),
@@ -464,8 +459,6 @@ object DedupExt {
     // narrow rows), the only corpus exchange the fingerprint groupBy
     // (unbounded keyspace); the doc's token array never shuffles.
     "qd25_winnow" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
-      graft.plans.WinnowMinPos.register(s)
       val hsRel = t(s, d, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
         .filter(size(col("tk")) >= 8)
@@ -592,7 +585,6 @@ object DedupExt {
     // cardinality key, bounded per-partition rows). L = 8 matches
     // qd8's declared window so the two operators compose.
     "qd22_exactsubstr" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       val win = t(s, d, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
         .filter(size(col("tk")) >= 8)
@@ -643,7 +635,6 @@ object DedupExt {
     // band-key columns b0..b3 — no 64-bit sketch column, so no signed
     // bit-63 edge case in either engine.
     "qd2_simhash" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       // the distinct (doc_id, tok) set is computed ROW-LOCALLY
       // (array_distinct before the explode) — identical semantics to the
       // oracle's DISTINCT, with zero shuffle: the only exchange in the
@@ -651,7 +642,6 @@ object DedupExt {
       // map-side to 64 longs per doc (the shared toks() helper's
       // post-explode .distinct() shuffled every token row first — at
       // sf0.1 that one shuffle was most of the query)
-      graft.plans.SimHashBands64.register(s)
       val th = t(s, d, "documents")
         .select(col("doc_id"),
           explode(array_distinct(split(col("text"), " "))).as("tok"))
@@ -796,7 +786,6 @@ object DedupExt {
     // is O(matching buckets), and a probe BATCH is the same join with
     // more build rows).
     "qs1_ann" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       // single small cache (one row per vector); the exploded quantized
       // table is never cached — the re-rank runs on int64 array kernels
       val pv = graft.operators.OpCaches.track(perVec(exQ(s, d)))
@@ -833,7 +822,6 @@ object DedupExt {
     // claimed. At 100 TB the index side is unchanged — the entire
     // delta is 64 extra rows on the broadcast build side.
     "qs12_multiprobe" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val pv = graft.operators.OpCaches.track(perVec(exQ(s, d)))
       val bands = vecBands(pv)
       val pk = bands.filter(col("vec_id") === 0)
@@ -878,7 +866,6 @@ object DedupExt {
     // separately, only survivors (n_exact/n_all ≈ 32% here) ever fetch
     // the full vector; the probe is one broadcast row, no shuffle.
     "qs13_radius" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val base = embQ(s, d).select(col("vec_id"), col("ei"),
         expr(dotL("ei", "ei")).as("n2"),
         expr("aggregate(slice(ei, 49, 16), 0L, (a, x) -> a + x * x)")
@@ -929,7 +916,6 @@ object DedupExt {
     // per-vector sketch aggregate paid) exactly once for the whole
     // batch, not per probe.
     "qs3_annbatch" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val pv = graft.operators.OpCaches.track(perVec(exQ(s, d)))
       val bands = vecBands(pv)
       val probes = bands.filter(col("vec_id") % 100 === 7)
@@ -975,7 +961,6 @@ object DedupExt {
     // wrong for this use: a near-dup at cos 0.99 is the BEST top-k hit
     // and the WORST training negative.
     "qs17_hardneg" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val pv = graft.operators.OpCaches.track(perVec(exQ(s, d)))
       val bands = vecBands(pv)
       val probes = bands.filter(col("vec_id") % 100 === 7)
@@ -1018,7 +1003,6 @@ object DedupExt {
     // rows against the bucketed scan and the vectors never shuffle
     // (PersistIndexSpec pins the fresh-catalog plan).
     "qs7_persistann" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val dir = "target/graft-annindex/" + d.replaceAll("[^A-Za-z0-9]", "_")
       graft.operators.DedupIndex.writeAnn(t(s, d, "embeddings"), dir)
       val idx = graft.operators.DedupIndex.loadAnn(s, dir)
@@ -1039,7 +1023,6 @@ object DedupExt {
     // compactAnn (PersistIndexSpec pins fragment shrink + identical
     // verdicts + the preserved probe plan).
     "qs9_annupsert" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val dir = "target/graft-annups/" + d.replaceAll("[^A-Za-z0-9]", "_")
       val emb = t(s, d, "embeddings")
       val isB = col("vec_id") % 10 === 3
@@ -1063,7 +1046,6 @@ object DedupExt {
     // asserted row-equal to this replay including across a
     // checkpointed restart (AnnIngestSpec).
     "s15_anningest" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val emb = t(s, d, "embeddings")
       val isA = col("vec_id") % 10 === 3
       val isB = col("vec_id") % 10 === 7
@@ -1197,7 +1179,6 @@ object DedupExt {
     // construction); the component resolution is the O(log n)-round
     // large-star/small-star operator.
     "qd6_semdedup" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val emb = embQ(s, d)
       val cents = emb.filter(col("vec_id") % 50 === 1)
         .select(col("vec_id").as("cid"), col("ei").as("ce"))
@@ -1257,8 +1238,6 @@ object DedupExt {
     // bands; nothing here rescans old data per ingest except the
     // benchmark's self-contained replay.
     "qd7_incremental" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
-      graft.plans.IntersectSortedCount.register(s)
       val docs = t(s, d, "documents")
       val isInc = col("doc_id") % 10 === 7
       // exact: fingerprint semi-join
@@ -1287,8 +1266,6 @@ object DedupExt {
     // session). At 100 TB this is THE ingest shape: per batch, the
     // corpus is never rescanned and never reshuffled.
     "qd10_persistindex" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
-      graft.plans.IntersectSortedCount.register(s)
       val docs = t(s, d, "documents")
       val isInc = col("doc_id") % 10 === 7
       // the index build+persist — production pays this once per corpus
@@ -1323,8 +1300,6 @@ object DedupExt {
     // 2^16-bounded per band so bucket population stays O(n/keyspace),
     // and the verify runs on candidates only.
     "qd11_crossdup" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
-      graft.plans.IntersectSortedCount.register(s)
       val docs = t(s, d, "documents")
       val isB = col("doc_id") % 3 === 0
       val per = graft.operators.OpCaches.track(bandSignatures(docs))
@@ -1365,7 +1340,6 @@ object DedupExt {
     // boilerplate span is AQE-skew-splittable where a window partition
     // would not be — and the per-doc rollup is a narrow groupBy.
     "qd8_substring" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       val win = t(s, d, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
         // guard: Spark sequence(1, 0) DESCENDS (verify-skill gotcha) —
@@ -1455,7 +1429,6 @@ object DedupExt {
     // probe slice by construction; the broadcast side is the tiny
     // probe norm relation, never the corpus).
     "qs5_annrecall" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val pv = graft.operators.OpCaches.track(perVec(exQ(s, d)))
       val bands = vecBands(pv)
       val emb = graft.operators.OpCaches.track(embQ(s, d))
@@ -1507,7 +1480,6 @@ object DedupExt {
     // budget over bounded probe rows; the brute yardstick is the
     // deliberately-bounded 1% sample pass.
     "qs14_annsweep" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val pv = graft.operators.OpCaches.track(perVec(exQ(s, d)))
       val bands = vecBands(pv)
       val emb = graft.operators.OpCaches.track(embQ(s, d))
@@ -1585,7 +1557,6 @@ object DedupExt {
     // "refine the sampled centroids" step; more rounds are the same
     // plan repeated.
     "qs4_kmeans" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val emb = graft.operators.OpCaches.track(embQ(s, d))
       val wA = org.apache.spark.sql.expressions.Window.partitionBy("vec_id")
         .orderBy(col("sc").desc, col("cid"))
@@ -1654,7 +1625,6 @@ object DedupExt {
     // top-k are total-ordered (rounded score, vec_id) TakeOrdered —
     // no global sort, no corpus SMJ (PlanShapeSpec pins it).
     "qs6_ivfpq" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val emb = embQ(s, d)
       // int8 codes in BIGINT domain so the native dot_long kernel is
       // reused for the ADC dots (values are int8-range; dots ≤ 64·127²
@@ -1734,7 +1704,6 @@ object DedupExt {
     // engines agree bit for bit (|partial dot| ≤ 8·1e14, sum ≤ 6.4e15
     // < 2^63 — and < 2^53, so even the display double is exact).
     "qs8_pq" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val emb = embQ(s, d)
       // per-vector subspace slices: (vec_id, sub, se[8])
       val sv = emb.select(col("vec_id"),
@@ -1789,7 +1758,6 @@ object DedupExt {
     // The assignment score dot/√n2c is the true cosine scaled by 1e7 —
     // ranking-equivalent, so argmax/top-2 cells are unchanged.
     "qs2_ivf" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val emb = embQ(s, d)
       // centroid norms are computed ONCE on the (tiny) broadcast side,
       // not per (vector, centroid) pair
@@ -1837,7 +1805,6 @@ object DedupExt {
     // deterministic fixture keeps qs2's nprobe=2 so the two queries'
     // plans differ by exactly the filter semi-join.
     "qs10_filteredann" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val emb = embQ(s, d)
       val allowed = t(s, d, "documents").filter(col("lang") === "en")
         .select(col("doc_id").as("vec_id"))
@@ -1886,7 +1853,6 @@ object DedupExt {
     // deliberately-bounded audit yardstick: corpus × 1 % probe sample,
     // probes broadcast, windows partitioned per probe.
     "qe2_matryoshka" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val emb = embQ(s, d).withColumn("ei16", expr("slice(ei, 1, 16)"))
       val probes = emb.filter(col("vec_id") % 100 === 7)
         .select(col("vec_id").as("q"), col("ei").as("qe"),
@@ -1928,7 +1894,6 @@ object DedupExt {
     // contract, not claim). Probes = the 1% sample; the corpus-side
     // work is one sketch aggregate + the broadcast probe pass.
     "qe3_binaryquant" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val sk = exQ(s, d).groupBy("vec_id")
         .agg(sum(expr("CASE WHEN xi > 0 THEN CAST(1 AS BIGINT) << " +
           "CAST(i0 AS INT) ELSE CAST(0 AS BIGINT) END")).as("sk"))
@@ -1977,7 +1942,6 @@ object DedupExt {
     // are a one-row broadcast, the top-50 caps are TakeOrdered, and
     // the fusion join is a 50×50 full-outer — O(k), never O(corpus).
     "qs11_hybrid" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val qterms = Seq("customer", "order", "part")
       val tk = t(s, d, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
@@ -2080,7 +2044,6 @@ object DedupExt {
     // the block key, AQE-skew-splittable; the O(s²) byte kernel runs on
     // candidates only.
     "qd13_jarowink" -> ((s, d) => {
-      graft.plans.JaroWinklerSim.register(s)
       val p = graft.Tables(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           split(col("text"), " ").getItem(0).as("tok1"),
@@ -2116,7 +2079,6 @@ object DedupExt {
     // plan, its idempotency, and the bound's soundness by property
     // test.
     "qd14_jwdocs" -> ((s, d) => {
-      graft.plans.JaroWinklerSim.register(s)
       val p = graft.Tables(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           split(col("text"), " ").getItem(0).as("tok1"), col("text"))
@@ -2163,8 +2125,6 @@ object DedupExt {
     // one candidate-pair-bounded groupBy; per-doc rank windows are
     // bounded by document length.
     "qd15_containment" -> ((s, d) => {
-      graft.plans.ShingleSetHash31.register(s)
-      graft.plans.IntersectSortedCount.register(s)
       // native one-pass shingle-set kernel (ShingleSetHash31): hash-
       // identical to the declarative roll_hash31-over-windows form the
       // oracle replays (ShingleSetSpec pins the equivalence on the
@@ -2261,7 +2221,6 @@ object DedupExt {
     // 32-char prefix (qd13's proven bit-identical kernel). At 100 TB a
     // third key char is the declared knob bounding block size.
     "qd18_sortedneighborhood" -> ((s, d) => {
-      graft.plans.JaroWinklerSim.register(s)
       import org.apache.spark.sql.expressions.Window
       val p = t(s, d, "documents")
         .select(col("doc_id"), col("lang"),
@@ -2305,7 +2264,6 @@ object DedupExt {
     // corpus (qd13's scale shape), explicit compute-sized repartition
     // for the O(l²) JW verify per the qd14 lesson.
     "qd19_fslinkage" -> ((s, d) => {
-      graft.plans.JaroWinklerSim.register(s)
       val p = t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           split(col("text"), " ").getItem(0).as("tok1"),
@@ -2352,7 +2310,6 @@ object DedupExt {
     // int64 fixed-point kernels, ties broken by vec_id — bit-identical
     // cross-engine, so the greedy argmax choices are hash-checked data.
     "qs15_mmr" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val emb = embQ(s, d).withColumn("n2", expr(dotL("ei", "ei")))
       val q = emb.filter(col("vec_id") === 0)
         .select(col("ei").as("qe"), col("n2").as("qn2"))
@@ -2420,7 +2377,6 @@ object DedupExt {
     // 20 rows per probe.
     "qs16_sq8" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.DotLong.register(s)
       val q8 = graft.operators.OpCaches.track(
         t(s, d, "embeddings").filter(size(col("embedding")) > 0)
           .select(col("vec_id"),
@@ -2480,8 +2436,6 @@ object DedupExt {
     // the shingle set (one scan, no shuffle); the only corpus exchange
     // is the band self-join, keyed on a mod-P (≈2³⁰) keyspace.
     "qd23_oph" -> ((s, d) => {
-      graft.plans.ShingleSetHash31.register(s)
-      graft.plans.IntersectSortedCount.register(s)
       val sh = graft.operators.OpCaches.track(
         t(s, d, "documents")
           .select(col("doc_id"),
@@ -2525,7 +2479,6 @@ object DedupExt {
     // partial-aggregatable corpus passes (per-vector reduce, then the
     // distinct-array count) + windows over the bounded grid histogram.
     "qe8_vecaudit" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val v = embQ(s, d).select(col("vec_id"), col("ei"),
         expr(dotL("ei", "ei")).as("n2"),
         size(col("ei")).cast(LongType).as("dim"))
@@ -2572,7 +2525,6 @@ object DedupExt {
     // corpus-cardinality-keyed); the exact side is the prefix-filter
     // kernel, not all-pairs.
     "qd24_blockeval" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       val tk = toks(s, d)
       // CACHED (round-14 re-measure, same reversal as qd9): with the
       // native verify kernels the exact pipeline's three executions

@@ -202,7 +202,6 @@ object Llm {
     // index-rank convention. The oracle replays binning from RAW
     // events — the hash match proves build+rollup lost nothing.
     "t4_histq" -> ((s, d) => {
-      graft.plans.HistBins600.register(s)
       val daily = t(s, d, "events")
         .filter(col("value").isNotNull && col("ts").isNotNull)
         .select(col("event_type"), to_date(col("ts")).as("day"),
@@ -247,8 +246,6 @@ object Llm {
     // = est − c makes the collision mass hash-checked data, not a
     // claim. The oracle replays cells, rollup, and min-read exactly.
     "t5_cms" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
-      graft.plans.CmsSketch4x256.register(s)
       val toks = graft.operators.OpCaches.track(
         cmsTokens(t(s, d, "documents")))
       cmsEstimates(toks,
@@ -279,14 +276,13 @@ object Llm {
     // error is hash-checked DATA (t5's `over` convention). Untrimmed
     // edge (n_bk < k ⇒ both sketches complete ⇒ sketch IS the set):
     // estimates degenerate to the exact values by CASE, both engines.
-    // Scale: the native bottom_k256 aggregate carries O(k) state per
+    // Scale: the native bottom_k(h, 256) aggregate carries O(k) state per
     // group through partial aggregation (a 10¹⁰-doc source ships 2 KB
     // per map task); the pair algebra runs over one row per group
     // pair, never raw data. The exact-audit join is the only
     // corpus-cardinality shuffle, and it exists only for the honesty
     // columns.
     "t6_theta" -> ((s, d) => {
-      graft.plans.BottomK256.register(s)
       // duplicate-tolerant: the TreeSet dedups internally, so the raw
       // relation feeds the aggregate with no pre-distinct shuffle.
       // nd deliberately does NOT ride this aggregate: count_distinct
@@ -296,7 +292,7 @@ object Llm {
       // config: 4.5 s with the fused count_distinct -> 1.9 s split)
       val el = thetaElements(t(s, d, "lineitem"))
       val sk = el.groupBy("src")
-        .agg(expr("bottom_k256(h)").as("bk"))
+        .agg(expr("bottom_k(h, 256)").as("bk"))
         .transform(graft.operators.OpCaches.track)
       thetaAlgebra(sk, el)
     }),
@@ -318,7 +314,6 @@ object Llm {
     // the rollup itself touches only sketch rows — at 100 TB that is
     // the entire point.
     "t7_thetarollup" -> ((s, d) => {
-      graft.plans.BottomK256.register(s)
       // thetaElements' scramble, with the month key riding (the helper
       // projects the date column away)
       val el = t(s, d, "lineitem")
@@ -328,12 +323,12 @@ object Llm {
           ((lit(1103515245L) * (col("l_partkey") * 100000L
             + col("l_suppkey")) + 12345L) % 1000000007L).as("h"))
       val monthly = el.groupBy("src", "mo")
-        .agg(expr("bottom_k256(h)").as("bk"))
+        .agg(expr("bottom_k(h, 256)").as("bk"))
       val mg = monthly.groupBy("src")
         .agg(count(lit(1)).as("n_months"),
           expr("slice(array_sort(array_distinct(" +
             "flatten(collect_list(bk)))), 1, 256)").as("mk"))
-      val direct = el.groupBy("src").agg(expr("bottom_k256(h)").as("dk"))
+      val direct = el.groupBy("src").agg(expr("bottom_k(h, 256)").as("dk"))
       val exact = el.select("src", "h").distinct()
         .groupBy("src").agg(count(lit(1)).as("nd"))
       mg.join(direct, Seq("src")).join(exact, Seq("src"))
@@ -354,7 +349,7 @@ object Llm {
 
   /** t6's element relation: (src, h) — the bijective LCG scramble of
     * the part-supplier pair per return status. Shared with the s35
-    * streamed fold; callers register bottom_k256 themselves. */
+    * streamed fold. */
   def thetaElements(lineitem: DataFrame): DataFrame =
     lineitem.select(col("l_returnflag").as("src"),
       ((lit(1103515245L) * (col("l_partkey") * 100000L

@@ -713,7 +713,6 @@ object Relational {
     // row — fell out as corrupt. Scale shape: write and read are both
     // distributed scans; the final orderBy is the display convention.
     "q46_csv" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       val dir = "target/graft-csv/" + d.replaceAll("[^A-Za-z0-9]", "_")
       t(s, d, "documents").select(col("doc_id"), col("text"))
         .write.mode("overwrite").option("header", "true").csv(dir)
@@ -1138,7 +1137,6 @@ object Relational {
     // parquet and never sees the NDJSON — the hash match proves the
     // whole write→commit→read chain lossless.
     "q61_ndjsonsink" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       val dir = "target/graft-ndjsonsink/" + d.replaceAll("[^A-Za-z0-9]", "_")
       t(s, d, "documents")
         .select(col("doc_id"), col("text"), col("lang"),
@@ -1632,7 +1630,6 @@ object Relational {
     // z-sorted 100 TB layout the z-range collapses to min/max pruning on
     // one column — files outside it are never opened.
     "q76_zorderbox" -> ((s, d) => {
-      graft.plans.Morton2.register(s)
       val (x1, x2, y1, y2) = (262144L, 524287L, 131072L, 393215L)
       val zmin = graft.operators.Scale.mortonKey(x1, y1)
       val zmax = graft.operators.Scale.mortonKey(x2, y2)
@@ -3192,7 +3189,6 @@ object Relational {
     // many-to-many estimate a cost model needs before choosing
     // broadcast vs shuffle.
     "q135_joincard" -> ((s, d) => {
-      graft.plans.CmsSketch4x256.register(s)
       val li = t(s, d, "lineitem")
         .select(col("l_partkey"), col("l_quantity"))
       cardEstimate(cardSketches(li), li)

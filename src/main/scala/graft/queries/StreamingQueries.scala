@@ -85,7 +85,6 @@ object StreamingQueries {
     // Streaming form: Streams.s07 (watermark + dropDuplicates on fp);
     // the test suite asserts streaming == batch.
     "s07_fpdedup" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       t(s, d, "events")
         .select(expr("roll_hash31(props)").as("fp"))
         .agg(count(lit(1)).as("n_rows"),
@@ -126,7 +125,6 @@ object StreamingQueries {
     // test suite. The dedup window partitions on the fingerprint —
     // corpus-cardinality key, no skew magnet.
     "s09_streamclean" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       t(s, d, "documents")
         .select(col("doc_id"), col("lang"), col("text"),
           split(col("text"), " ").as("tk"))
@@ -193,8 +191,6 @@ object StreamingQueries {
     // fingerprints back into them — asserted row-equal to this batch
     // replay, including across a checkpointed restart.
     "s12_indexupsert" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
-      graft.plans.IntersectSortedCount.register(s)
       val docs = t(s, d, "documents")
       val isA = col("doc_id") % 10 === 3
       val isB = col("doc_id") % 10 === 7
@@ -485,8 +481,6 @@ object StreamingQueries {
     // Streams.s17 is the streaming form over the real persisted
     // index + checkpoint, spec-asserted equal across a restart.
     "s17_ingestpipeline" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
-      graft.plans.IntersectSortedCount.register(s)
       val dir = "target/graft-ingest/" + d.replaceAll("[^A-Za-z0-9]", "_")
       graft.operators.SnapTable.destroy(s, dir)
       val docs = t(s, d, "documents")
@@ -1703,7 +1697,6 @@ object Streams {
     * parquet file replays as one micro-batch, so every duplicate meets
     * its first occurrence's state before any eviction. */
   def s07(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.RollHash31.register(spark)
     val dedup = readEvents(spark, dir)
       .withColumn("fp", expr("roll_hash31(props)"))
       .withWatermark("ts", "1 hour")
@@ -1752,7 +1745,6 @@ object Streams {
     * because the single parquet file replays as one micro-batch in
     * doc_id order. */
   def s09(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.RollHash31.register(spark)
     val gated = readDocuments(spark, dir)
       .select(col("doc_id"), col("lang"), col("text"),
         split(col("text"), " ").as("tk"))
@@ -1807,8 +1799,6 @@ object Streams {
     * (IncrementalIndexSpec); here it is computed from the same batch
     * read so the fixture equality with qd7 is self-contained. */
   def s11(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.RollHash31.register(spark)
-    graft.plans.IntersectSortedCount.register(spark)
     val P = 1000000007L
     val idx = Tables(spark, dir, "documents")
       .filter(col("doc_id") % 10 =!= 7)
@@ -1880,8 +1870,6 @@ object Streams {
     * rescanned. */
   def s12(spark: SparkSession, idxDir: String, inDir: String,
           checkpoint: String, resultDir: String): Unit = {
-    graft.plans.RollHash31.register(spark)
-    graft.plans.IntersectSortedCount.register(spark)
     val raw = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -2010,8 +1998,6 @@ object Streams {
     * only the append, from the same immutable version. */
   def s17(spark: SparkSession, idxDir: String, tableDir: String,
           inDir: String, checkpoint: String): Unit = {
-    graft.plans.RollHash31.register(spark)
-    graft.plans.IntersectSortedCount.register(spark)
     val raw = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -2103,7 +2089,6 @@ object Streams {
     * The corpus is never rescanned per batch. */
   def s15(spark: SparkSession, idxDir: String, inDir: String,
           checkpoint: String, resultDir: String): Unit = {
-    graft.plans.DotLong.register(spark)
     val raw = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),
@@ -2258,8 +2243,6 @@ object Streams {
     * commit log. Bounded state: |sources| sketch rows, never tokens. */
   def s31(spark: SparkSession, inDir: String, sketchDir: String,
           checkpoint: String): Unit = {
-    graft.plans.RollHash31.register(spark)
-    graft.plans.CmsSketch4x256.register(spark)
     val raw = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),
@@ -2301,7 +2284,6 @@ object Streams {
     * Bounded state: two (sketch, count) rows — never data rows. */
   def s33(spark: SparkSession, inDir: String, statsDir: String,
           checkpoint: String): Unit = {
-    graft.plans.CmsSketch4x256.register(spark)
     val raw = StructType(Seq(
       StructField("l_partkey", LongType),
       StructField("l_quantity", DoubleType)))
@@ -2344,7 +2326,6 @@ object Streams {
     * audience-overlap shape. */
   def s35(spark: SparkSession, inDir: String, sketchDir: String,
           checkpoint: String): Unit = {
-    graft.plans.BottomK256.register(spark)
     val raw = StructType(Seq(
       StructField("l_returnflag", StringType),
       StructField("l_partkey", LongType),
@@ -2355,7 +2336,7 @@ object Streams {
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val bs = graft.queries.Llm.thetaElements(batch)
-          .groupBy("src").agg(expr("bottom_k256(h)").as("bk"))
+          .groupBy("src").agg(expr("bottom_k(h, 256)").as("bk"))
         val prev = new java.io.File(s"$sketchDir/gen=$batchId")
         val merged =
           if (prev.exists) spark.read.parquet(prev.getPath)
@@ -2382,7 +2363,6 @@ object Streams {
     * the batch table at `dir`. */
   def s35Result(spark: SparkSession, dir: String,
                 sketchDir: String): DataFrame = {
-    graft.plans.BottomK256.register(spark)
     val gens = Option(new java.io.File(sketchDir).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .map(_.getName).filter(_.startsWith("gen="))
@@ -2399,7 +2379,6 @@ object Streams {
     * the exact audit recomputed against the batch table at `dir`. */
   def s33Result(spark: SparkSession, dir: String,
                 statsDir: String): DataFrame = {
-    graft.plans.CmsSketch4x256.register(spark)
     val gens = Option(new java.io.File(statsDir).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .map(_.getName).filter(_.startsWith("gen="))
@@ -2535,8 +2514,6 @@ object Streams {
     * against the batch corpus at `dir`. */
   def s31Result(spark: SparkSession, dir: String,
                 sketchDir: String): DataFrame = {
-    graft.plans.RollHash31.register(spark)
-    graft.plans.CmsSketch4x256.register(spark)
     val gens = Option(new java.io.File(sketchDir).listFiles())
       .getOrElse(Array.empty[java.io.File])
       .map(_.getName).filter(_.startsWith("gen="))

@@ -55,7 +55,6 @@ object TextExt {
   }
 
   private def shingleHash3(s: SparkSession, d: String): DataFrame = {
-    graft.plans.RollHash31.register(s)
     t(s, d, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("tk"))
       .select(col("doc_id"), explode(expr(
@@ -65,7 +64,6 @@ object TextExt {
   }
 
   private[graft] def chunkRel(docs: DataFrame): DataFrame = {
-    graft.plans.RollHash31.register(docs.sparkSession)
     docs
       .select(col("doc_id"), split(col("text"), " ").as("tk"))
       .select(col("doc_id"), col("tk"),
@@ -135,7 +133,6 @@ object TextExt {
     // (native codegen expression); output = duplicate-fingerprint groups
     // (fingerprint-based exact dedup)
     "qt4_fingerprint" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       t(s, d, "documents")
         .select(expr("roll_hash31(text)").as("fp"))
         .groupBy("fp").agg(count(lit(1)).as("c"))
@@ -360,7 +357,6 @@ object TextExt {
     // inside int64 with the fixed-point scale. All exact integers;
     // medoid identity and its exact sum are the hash-checked output.
     "q120_medoid" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val emb = t(s, d, "embeddings")
         .filter(size(col("embedding")) === 64)
         .select(col("vec_id"), expr(
@@ -393,7 +389,6 @@ object TextExt {
     }),
 
     "qe5_residualquant" -> ((s, d) => {
-      graft.plans.DotLong.register(s)
       val emb = t(s, d, "embeddings")
         .filter(size(col("embedding")) === 64)
         .select(col("vec_id"), expr(
@@ -450,7 +445,6 @@ object TextExt {
     // component display v/max|v|. Scale: the corpus pass is the one
     // (i,j)-keyed aggregate; iteration cost is O(d²) driver-side.
     "qe6_pca" -> ((s, d) => {
-      graft.plans.CovAccum64.register(s)
       // ONE corpus pass through the native cov_accum64 aggregate: n,
       // Σxᵢ, and the 2080 upper-triangle Σxᵢxⱼ accumulate in a single
       // Array[Long] buffer per partition (a tight 2080-iteration JVM
@@ -554,7 +548,6 @@ object TextExt {
     // Media.decodeStub path (graft.multimodal) — this query proves the
     // binary column plumbing end-to-end against the oracle.
     "qm1_multimodal" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       t(s, d, "documents")
         .select(col("doc_id"), col("text").cast(BinaryType).as("media"))
         .select(col("doc_id"),
@@ -582,7 +575,6 @@ object TextExt {
     // corpus. VARCHAR slicing == byte slicing on the declared ASCII
     // payload contract (chars == bytes), hex uppercased both engines.
     "qm5_phashdup" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       val sk = t(s, d, "documents")
         .select(col("doc_id"), col("text").cast(BinaryType).as("payload"))
         .filter(length(col("payload")) >= 60)
@@ -625,7 +617,6 @@ object TextExt {
     // in payload bytes, no shuffle before the final sort) and the
     // byte-slicing plumbing are real and oracle-checked.
     "qm3_framesample" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       t(s, d, "documents")
         .select(col("doc_id"), col("text").cast(BinaryType).as("payload"))
         .filter(length(col("payload")) >= 16)
@@ -655,7 +646,6 @@ object TextExt {
     // content proves byte-exact ingest (the text sink appends one \n
     // per line, which the oracle models as text || chr(10)).
     "qm4_binaryfiles" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       val dir = "target/graft-binfiles/" + d.replaceAll("[^A-Za-z0-9]", "_")
       t(s, d, "documents").filter(col("doc_id") % 25 === 0)
         .select(col("doc_id"), col("text").as("value"))
@@ -795,7 +785,6 @@ object TextExt {
     // field from the source formulas — the hash match proves the
     // walk. Row-local, one scan, codegen, no shuffle.
     "qm8_boxparse" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       def payHex(p: String, b: Int): String =
         s"concat_ws('', transform(sequence(0, CAST($p AS INT) - 1), " +
           s"i -> lpad(hex((i * 7 + doc_id + ${13 * b}) % 256), 2, '0')))"
@@ -1729,7 +1718,6 @@ object TextExt {
     // groupBy + one equi-join — qd8's unbounded-key aggregate shape,
     // AQE-skew-splittable.
     "qt18_cdcchunk" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       val chunks = cdcChunks(t(s, d, "documents"))
       val cnt = chunks.groupBy("fp").agg(count(lit(1)).as("cnt"))
       chunks.join(cnt, Seq("fp"))
@@ -1807,7 +1795,6 @@ object TextExt {
     }),
 
     "qt15_normalize" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       t(s, d, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
         .withColumn("kept", expr(
@@ -2062,7 +2049,6 @@ object TextExt {
     // nothing exceeds (docs × distinct buckets per doc) rows, the
     // weight side is O(1024) regardless of corpus size.
     "qt21_hashclf" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       val tk = t(s, d, "documents")
         .select(col("doc_id"), col("lang"),
           explode(split(col("text"), " ")).as("tok"))
@@ -2314,7 +2300,6 @@ object TextExt {
     // n + noise (unclamped, honest) + the DP-safe post-processed
     // max(0, ·). One partial-aggregatable count per group — O(groups).
     "qx14_dpcount" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       val cuts = Seq(332969L, 1238074L, 3698404L, 10386276L, 28565796L,
         77982853L, 212312343L, 577457755L, 1570025892L, 1935171304L,
         2069500794L, 2118917851L, 2137097371L, 2143785243L, 2146245573L,
@@ -2442,7 +2427,6 @@ object TextExt {
     // a CSPRNG, mechanism/accounting unchanged. One partial-
     // aggregatable pass (clip is row-local), O(groups) everything else.
     "qx16_dpsum" -> ((s, d) => {
-      graft.plans.RollHash31.register(s)
       val cuts = Seq(332969L, 1238074L, 3698404L, 10386276L, 28565796L,
         77982853L, 212312343L, 577457755L, 1570025892L, 1935171304L,
         2069500794L, 2118917851L, 2137097371L, 2143785243L, 2146245573L,
@@ -2708,7 +2692,6 @@ object TextExt {
     // structure exists.
     "qt28_rake" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.PhraseTokens.register(s)
       val stopList = stopwords.map("'" + _ + "'").mkString(", ")
       // round 15 (guide §4 + §2.4): the phrase id (running stopword
       // count) is a pure function of the token ARRAY, so the native
@@ -2934,8 +2917,8 @@ object TextExt {
     * the 4-token window ending at i ≡ 0 (mod 32), so boundaries move
     * with CONTENT and an edit perturbs only the chunks it touches
     * (CdcChunkSpec pins the shift-resistance property). Expects
-    * (doc_id, text); caller registers roll_hash31 or runs under
-    * GraftExtensions. */
+    * (doc_id, text); `roll_hash31` resolves through GraftExtensions or
+    * `NativeFunctions.ensure`. */
   def cdcChunks(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     docs.select(col("doc_id"), split(col("text"), " ").as("tk"))

@@ -18,7 +18,6 @@ class AnnIngestSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("s15 streamed two-batch vector ingest == sequential replay, across a checkpointed restart") {
-    graft.plans.DotLong.register(spark)
     val emb = spark.read.parquet(s"${TestSpark.Sf}/embeddings.parquet")
     val isA = col("vec_id") % 10 === 3
     val isB = col("vec_id") % 10 === 7
@@ -54,7 +53,6 @@ class AnnIngestSpec extends AnyFunSuite {
   }
 
   test("s15 upsert really grows the index: a planted copy of an accepted vector comes back dup") {
-    graft.plans.DotLong.register(spark)
     val emb = spark.read.parquet(s"${TestSpark.Sf}/embeddings.parquet")
     val tmp = java.nio.file.Files.createTempDirectory("graft-s15p").toString
     val (idxDir, inDir, cp, res) =

@@ -59,7 +59,6 @@ class BasketCapSpec extends AnyFunSuite {
 
   test("bottom_k: k smallest distinct, sorted ascending, null-safe") {
     import spark.implicits._
-    graft.plans.BottomK.register(spark)
     val df = Seq((1L, java.lang.Long.valueOf(5L)),
         (1L, java.lang.Long.valueOf(5L)), (1L, java.lang.Long.valueOf(-3L)),
         (1L, null.asInstanceOf[java.lang.Long]),

@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.{Bitmask64, PopcountAnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +12,6 @@ class BitmaskOpsSpec extends AnyFunSuite {
 
   test("popcount_and == aggregate(zip_with(bit_count)) on random masks") {
     import spark.implicits._
-    PopcountAnd.register(spark)
     val rnd = new scala.util.Random(41)
     val rows = Seq.fill(500) {
       val n = 1 + rnd.nextInt(20)
@@ -28,7 +26,6 @@ class BitmaskOpsSpec extends AnyFunSuite {
 
   test("bitmask64 == transform/aggregate/filter mask build on random rank sets") {
     import spark.implicits._
-    Bitmask64.register(spark)
     val rnd = new scala.util.Random(43)
     val rows = Seq.fill(300) {
       val wmax = rnd.nextInt(8).toLong
@@ -45,8 +42,6 @@ class BitmaskOpsSpec extends AnyFunSuite {
   }
 
   test("null handling and empty arrays") {
-    PopcountAnd.register(spark)
-    Bitmask64.register(spark)
     val r = spark.sql(
       "SELECT popcount_and(CAST(NULL AS ARRAY<BIGINT>), array(1L)) AS n, " +
         "popcount_and(CAST(array() AS ARRAY<BIGINT>), array(-1L)) AS e, " +
@@ -58,9 +53,18 @@ class BitmaskOpsSpec extends AnyFunSuite {
     assert(r.isNullAt(3))
   }
 
+  test("bitmask64 with a negative wmax is the empty mask, literal or column") {
+    // the literal call folds at planning (eval); the column call runs
+    // in a codegen'd projection over range
+    val lit = spark.sql("SELECT bitmask64(array(3L), -5L)").collect()(0)
+    assert(lit.getSeq[Long](0).isEmpty)
+    val byCol = spark.range(1)
+      .selectExpr("array(3L, 70L) AS tis", "id - 5L AS wmax")
+      .selectExpr("bitmask64(tis, wmax)").collect()(0)
+    assert(byCol.getSeq[Long](0).isEmpty)
+  }
+
   test("kernels participate in whole-stage codegen") {
-    PopcountAnd.register(spark)
-    Bitmask64.register(spark)
     val df = spark.range(100)
       .selectExpr("array(id, id * 7L) AS a", "array(id, id + 1L) AS b",
         "array(id % 128) AS tis")

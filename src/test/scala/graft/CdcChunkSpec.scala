@@ -11,7 +11,6 @@ class CdcChunkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   private def chunksOf(text: String): Seq[(Long, Long, Long)] = {
-    graft.plans.RollHash31.register(spark)
     import spark.implicits._
     graft.queries.TextExt.cdcChunks(
         Seq((1L, text)).toDF("doc_id", "text"))

@@ -13,7 +13,6 @@ class CmsSketchSpec extends AnyFunSuite {
 
   test("cms4x256 is merge-order invariant under forced partial merges") {
     import spark.implicits._
-    graft.plans.CmsSketch4x256.register(spark)
     val rnd = new scala.util.Random(11)
     val rows = Seq.tabulate(5000)(i =>
       if (i % 83 == 0) null else java.lang.Long.valueOf(rnd.nextLong(P)))
@@ -31,7 +30,6 @@ class CmsSketchSpec extends AnyFunSuite {
 
   test("cms4x256 point estimate >= true count for every key") {
     import spark.implicits._
-    graft.plans.CmsSketch4x256.register(spark)
     val rnd = new scala.util.Random(7)
     val keys = Seq.fill(4000)(rnd.nextLong(50) * 7919L % P)
     val sk = keys.toDF("h").repartition(16)
@@ -46,7 +44,6 @@ class CmsSketchSpec extends AnyFunSuite {
 
   test("cms4x256 reduces out-of-domain inputs mod P (no negative cells)") {
     import spark.implicits._
-    graft.plans.CmsSketch4x256.register(spark)
     val raw = Seq(Long.MaxValue - 5, Long.MinValue + 17, -123456789L,
       987654321987654L, 3L, P - 1, P, P + 42)
     val masked = raw.map(h => ((h % P) + P) % P)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.geo.Geo
-import graft.plans.CrosstrackM
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +9,6 @@ class CrosstrackExprSpec extends AnyFunSuite {
 
   test("codegen expression == direct Scala function on random inputs") {
     import spark.implicits._
-    CrosstrackM.register(spark)
     val rnd = new scala.util.Random(42)
     def v() = -74.02 + rnd.nextDouble() * 0.06
     def w() = 40.69 + rnd.nextDouble() * 0.08
@@ -22,7 +20,6 @@ class CrosstrackExprSpec extends AnyFunSuite {
   }
 
   test("null inputs propagate to null") {
-    CrosstrackM.register(spark)
     val r = spark.sql(
       "SELECT crosstrack_m(CAST(NULL AS DOUBLE), CAST(40.7 AS DOUBLE), CAST(-74.0 AS DOUBLE), " +
         "CAST(40.7 AS DOUBLE), CAST(-73.99 AS DOUBLE), CAST(40.71 AS DOUBLE))")
@@ -31,7 +28,6 @@ class CrosstrackExprSpec extends AnyFunSuite {
   }
 
   test("expression participates in whole-stage codegen") {
-    CrosstrackM.register(spark)
     val plan = spark.range(100)
       .selectExpr("CAST(id AS DOUBLE) / 1000 - 74.0 AS px", "CAST(id AS DOUBLE) / 1000 + 40.7 AS py")
       .selectExpr("crosstrack_m(px, py, CAST(-74.0 AS DOUBLE), CAST(40.69 AS DOUBLE), " +
@@ -42,7 +38,6 @@ class CrosstrackExprSpec extends AnyFunSuite {
   }
 
   test("all-literal calls constant-fold at planning time") {
-    CrosstrackM.register(spark)
     val plan = spark.range(1)
       .selectExpr("crosstrack_m(CAST(-74.0001 AS DOUBLE), CAST(40.5 AS DOUBLE), " +
         "CAST(-74.0 AS DOUBLE), CAST(40.0 AS DOUBLE), CAST(-74.0 AS DOUBLE), CAST(41.0 AS DOUBLE))")

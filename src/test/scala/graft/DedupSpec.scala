@@ -59,7 +59,6 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("intersect_sorted_count: merge semantics on handwritten cases") {
-    graft.plans.IntersectSortedCount.register(spark)
     val r = spark.sql(
       "SELECT intersect_sorted_count(array('a','b','d'), array('b','c','d')) AS s, " +
         "intersect_sorted_count(array(1L,5L,9L), array(5L,9L,11L)) AS l, " +
@@ -146,7 +145,6 @@ class DedupSpec extends AnyFunSuite {
       .select(col("vec_id"), expr(
         "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000000.0D) AS BIGINT))")
         .as("ei"))
-    graft.plans.DotLong.register(spark)
     val n2 = emb.select(col("vec_id"), expr("dot_long(ei, ei)").as("n2"))
     val exact = emb.as("a").crossJoin(emb.as("b"))
       .where(col("a.vec_id") < col("b.vec_id"))

@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.DotLong
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +8,6 @@ class DotLongSpec extends AnyFunSuite {
 
   test("dot_long == aggregate(zip_with(...)) HOF on random arrays") {
     import spark.implicits._
-    DotLong.register(spark)
     val rnd = new scala.util.Random(11)
     val rows = Seq.fill(500) {
       val n = 1 + rnd.nextInt(80)
@@ -23,7 +21,6 @@ class DotLongSpec extends AnyFunSuite {
   }
 
   test("length mismatch truncates; null array yields null") {
-    DotLong.register(spark)
     val r = spark.sql(
       "SELECT dot_long(array(1L,2L,3L), array(10L,20L)) AS t, " +
         "dot_long(CAST(NULL AS ARRAY<BIGINT>), array(1L)) AS n").collect()(0)
@@ -32,7 +29,6 @@ class DotLongSpec extends AnyFunSuite {
   }
 
   test("expression participates in whole-stage codegen") {
-    DotLong.register(spark)
     val plan = spark.range(100)
       .selectExpr("array(id, id + 1L) AS a", "array(id, id * 2L) AS b")
       .selectExpr("dot_long(a, b)")
@@ -42,7 +38,6 @@ class DotLongSpec extends AnyFunSuite {
 
   test("roll_hash31 == interpreted HOF fold on random strings") {
     import spark.implicits._
-    graft.plans.RollHash31.register(spark)
     val rnd = new scala.util.Random(13)
     val strs = Seq.fill(500)(
       Seq.fill(rnd.nextInt(60))(('a' + rnd.nextInt(26)).toChar).mkString) :+ ""

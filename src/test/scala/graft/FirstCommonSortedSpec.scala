@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.FirstCommonSorted
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +8,6 @@ class FirstCommonSortedSpec extends AnyFunSuite {
 
   test("first_common_sorted == min of the set intersection on random sorted arrays") {
     import spark.implicits._
-    FirstCommonSorted.register(spark)
     val rnd = new scala.util.Random(17)
     val rows = Seq.fill(500) {
       def arr() = Seq.fill(1 + rnd.nextInt(40))(rnd.nextInt(60).toLong)
@@ -26,7 +24,6 @@ class FirstCommonSortedSpec extends AnyFunSuite {
   }
 
   test("disjoint → -1; empty → -1; null array → null") {
-    FirstCommonSorted.register(spark)
     val r = spark.sql(
       "SELECT first_common_sorted(array(1L,3L), array(2L,4L)) AS d, " +
         "first_common_sorted(CAST(array() AS ARRAY<BIGINT>), array(1L)) AS e, " +
@@ -37,7 +34,6 @@ class FirstCommonSortedSpec extends AnyFunSuite {
   }
 
   test("expression participates in whole-stage codegen") {
-    FirstCommonSorted.register(spark)
     val plan = spark.range(100)
       .selectExpr("array(id, id + 5L) AS a", "array(id + 1L, id + 5L) AS b")
       .selectExpr("first_common_sorted(a, b)")

@@ -24,8 +24,6 @@ class GeoStreamSpec extends AnyFunSuite {
 
   test("streamed NDJSON ingest == batch reference pipeline across a restart") {
     val s = spark
-    graft.plans.FuzzyMs.register(s)
-    graft.plans.CrosstrackM.register(s)
     val fixture = GeoQueries.FixtureDir
 
     val expect = SparkEntry.queries("s28_geostream")(s, TestSpark.Sf)

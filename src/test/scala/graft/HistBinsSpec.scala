@@ -8,7 +8,6 @@ class HistBinsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("bins match the declarative sum(when) form; tails clamp; nulls skip") {
-    graft.plans.HistBins600.register(spark)
     import spark.implicits._
     val xs: Seq[java.lang.Long] =
       Seq[java.lang.Long](-500L, 0L, 1L, 99L, 100L, 101L, 59999L, 60000L,
@@ -28,7 +27,6 @@ class HistBinsSpec extends AnyFunSuite {
   }
 
   test("merge across groups == single-pass build (rollup contract)") {
-    graft.plans.HistBins600.register(spark)
     val e = spark.range(5000).selectExpr(
       "id % 7 AS shard", "(id * id) % 60000 AS x")
     val rolled = e.groupBy("shard").agg(expr("hist_bins600(x)").as("h"))

@@ -17,7 +17,6 @@ class IncrementalIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("persisted bucketed band index joins an ingest batch with no index-side shuffle") {
-    graft.plans.IntersectSortedCount.register(spark)
     val docs = Tables(spark, TestSpark.Sf, "documents")
     val sigs = DedupExt.bandSignatures(docs)
     val isInc = col("doc_id") % 10 === 7

@@ -75,8 +75,6 @@ class IndexUpsertSpec extends AnyFunSuite {
         assert(parquetFiles(s"$gen2/bands") < fragmented,
           s"compaction did not reduce fragments ($fragmented)")
         val probe = docs.filter(col("doc_id") % 10 === 1)
-        graft.plans.RollHash31.register(spark)
-        graft.plans.IntersectSortedCount.register(spark)
         def verdicts(h: DedupIndex.Handles) = {
           val fp = probe.select(col("doc_id"), expr("roll_hash31(text)").as("fp"))
           graft.queries.DedupExt.incrementalVerdicts(

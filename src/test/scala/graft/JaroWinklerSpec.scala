@@ -66,7 +66,6 @@ class JaroWinklerSpec extends AnyFunSuite {
   }
 
   test("null propagation and codegen participation") {
-    JaroWinklerSim.register(spark)
     val r = spark.sql(
       "SELECT jaro_winkler(CAST(NULL AS STRING), 'x') AS n, " +
         "jaro_winkler('crate', 'trace') AS v").collect()(0)

@@ -16,7 +16,6 @@ class NativeAggSpec extends AnyFunSuite {
 
   test("simhash_bands64 == 64 declarative sums under forced merges") {
     import spark.implicits._
-    graft.plans.SimHashBands64.register(spark)
     val rnd = new scala.util.Random(5)
     val rows = Seq.tabulate(3000)(i =>
       (i.toLong % 37, if (i % 97 == 0) null else java.lang.Long.valueOf(rnd.nextLong(P))))
@@ -44,7 +43,6 @@ class NativeAggSpec extends AnyFunSuite {
     // i.e. inputs congruent mod P are indistinguishable, and huge or
     // negative values cannot silently wrap a*h past Long.MaxValue
     import spark.implicits._
-    graft.plans.SimHashBands64.register(spark)
     val raw = Seq(Long.MaxValue - 5, Long.MinValue + 17, -123456789L,
       987654321987654L, 3L, P - 1, P, P + 42)
     val masked = raw.map(h => ((h % P) + P) % P)
@@ -60,7 +58,6 @@ class NativeAggSpec extends AnyFunSuite {
 
   test("hyperplane_bands64 == 65 declarative sums under forced merges") {
     import spark.implicits._
-    graft.plans.HyperplaneBands64.register(spark)
     val rnd = new scala.util.Random(9)
     val rows = for (v <- 0L until 40L; i <- 0 until 64)
       yield (v, i.toLong, rnd.nextLong(20000001L) - 10000000L)

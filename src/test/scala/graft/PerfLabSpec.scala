@@ -34,7 +34,6 @@ class PerfLabSpec extends AnyFunSuite {
   test("qe6: stage decomposition") {
     assume(sys.env.get("GRAFT_PERFLAB").contains("1"))
     import org.apache.spark.sql.functions._
-    graft.plans.CovAccum64.register(spark)
     def pass() = graft.Tables(spark, sf, "embeddings")
       .filter(size(col("embedding")) === 64)
       .select(expr(
@@ -54,7 +53,6 @@ class PerfLabSpec extends AnyFunSuite {
     assume(sys.env.get("GRAFT_PERFLAB").contains("1"))
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    graft.plans.RollHash31.register(spark)
     def per = graft.Tables(spark, sf, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("tk"))
       .select(col("doc_id"), expr(
@@ -154,12 +152,11 @@ class PerfLabSpec extends AnyFunSuite {
   test("t6/t7 stage decomposition: sketch-only path vs exact-audit columns") {
     assume(sys.env.get("GRAFT_PERFLAB").contains("1"))
     import org.apache.spark.sql.functions._
-    graft.plans.BottomK256.register(spark)
     def el = graft.queries.Llm.thetaElements(
       graft.Tables(spark, sf, "lineitem"))
     // the path a 100 TB deployment actually runs: ONE partial-agg pass
     def sketchOnly(): Unit = {
-      el.groupBy("src").agg(expr("bottom_k256(h)").as("bk")).collect()
+      el.groupBy("src").agg(expr("bottom_k(h, 256)").as("bk")).collect()
       spark.catalog.clearCache()
     }
     // the shipped query = sketch + exact-audit distinct + self-join
@@ -220,7 +217,6 @@ class PerfLabSpec extends AnyFunSuite {
   test("q76 morton: HOF vs codegen expression") {
     assume(sys.env.get("GRAFT_PERFLAB").contains("1"))
     import org.apache.spark.sql.functions._
-    graft.plans.Morton2.register(spark)
     val (x1, x2, y1, y2) = (262144L, 524287L, 131072L, 393215L)
     val zmin = graft.operators.Scale.mortonKey(x1, y1)
     val zmax = graft.operators.Scale.mortonKey(x2, y2)

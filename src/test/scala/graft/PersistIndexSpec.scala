@@ -17,8 +17,6 @@ class PersistIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("detached catalog re-attaches via DDL; probe join has no index-side exchange") {
-    graft.plans.RollHash31.register(spark)
-    graft.plans.IntersectSortedCount.register(spark)
     val dir = "target/graft-index-spec/sf0_001"
     val docs = Tables(spark, TestSpark.Sf, "documents")
     val isInc = col("doc_id") % 10 === 7
@@ -84,7 +82,6 @@ class PersistIndexSpec extends AnyFunSuite {
   }
 
   test("ANN index: fresh-catalog load reproduces qs3 with no index-side exchange") {
-    graft.plans.DotLong.register(spark)
     val dir = "target/graft-annindex-spec/sf0_001"
     val emb = Tables(spark, TestSpark.Sf, "embeddings")
 
@@ -125,7 +122,6 @@ class PersistIndexSpec extends AnyFunSuite {
   }
 
   test("ANN upsert grows the index to the monolithic relation; compaction folds fragments") {
-    graft.plans.DotLong.register(spark)
     val tmp = java.nio.file.Files.createTempDirectory("graft-annups").toString
     val dir = s"$tmp/index"
     val emb = Tables(spark, TestSpark.Sf, "embeddings")
@@ -177,7 +173,6 @@ class PersistIndexSpec extends AnyFunSuite {
   }
 
   test("bucket count is on-disk identity: conf sizes writes, mismatched attach throws") {
-    graft.plans.RollHash31.register(spark)
     // absolute path: relative locations resolve against the warehouse
     // on the write side but the process CWD on the metadata side
     val tmp = java.nio.file.Files.createTempDirectory("graft-bknob").toString
@@ -234,7 +229,6 @@ class PersistIndexSpec extends AnyFunSuite {
     // written with DedupIndex.Buckets; resolving a metadata-less attach
     // from graft.index.buckets would declare a wrong CLUSTERED BY and
     // return silently wrong shuffle-free probe joins
-    graft.plans.RollHash31.register(spark)
     val tmp = java.nio.file.Files.createTempDirectory("graft-legacy").toString
     val dir = s"$tmp/legacy-idx"
     val docs = Tables(spark, TestSpark.Sf, "documents").limit(40)

@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.PhraseTokens
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +13,6 @@ class PhraseTokensSpec extends AnyFunSuite {
   test("phrase_tokens == windowed running-stop-count segmentation") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    PhraseTokens.register(spark)
     val stops = Seq("the", "a", "of", "and")
     val words = stops ++ Seq("", "alpha", "beta", "gamma", "delta")
     val rnd = new scala.util.Random(53)
@@ -42,7 +40,6 @@ class PhraseTokensSpec extends AnyFunSuite {
   }
 
   test("null array and all-stop input") {
-    PhraseTokens.register(spark)
     val r = spark.sql(
       "SELECT phrase_tokens(CAST(NULL AS ARRAY<STRING>), array('a')) AS a, " +
         "size(phrase_tokens(array('a', 'a'), array('a'))) AS b").head()
@@ -53,7 +50,6 @@ class PhraseTokensSpec extends AnyFunSuite {
   test("1 000-word stop list == windowed segmentation") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    PhraseTokens.register(spark)
     val stops = (0 until 1000).map(i => s"s$i")
     val words = stops ++ (0 until 200).map(i => s"w$i") :+ ""
     val rnd = new scala.util.Random(59)

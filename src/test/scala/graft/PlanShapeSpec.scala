@@ -398,7 +398,6 @@ class PlanShapeSpec extends AnyFunSuite {
     // RETURNED plan is the tiny local display relation — pin the
     // covariance sub-plan directly): the ONE-buffer imperative
     // aggregate (ObjectHashAggregate), no self-join, no explode
-    graft.plans.CovAccum64.register(spark)
     val pPca = Tables(spark, TestSpark.Sf, "embeddings")
       .filter(org.apache.spark.sql.functions.size(
         org.apache.spark.sql.functions.col("embedding")) === 64)

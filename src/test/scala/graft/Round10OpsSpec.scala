@@ -152,16 +152,15 @@ class Round10OpsSpec extends AnyFunSuite {
       "no sketch trimmed at sf0.001 — the estimator path is vacuous")
     // the native aggregate must be partition-invariant (merge is a
     // pure set function): same result under a different partitioning
-    graft.plans.BottomK256.register(spark)
     val el = Tables(spark, TestSpark.Sf, "lineitem")
       .select(col("l_returnflag").as("src"),
         ((lit(1103515245L) * (col("l_partkey") * 100000L + col("l_suppkey"))
           + 12345L) % BIG).as("h"))
     val a = el.repartition(13).groupBy("src")
-      .agg(expr("bottom_k256(h)").as("bk")).collect()
+      .agg(expr("bottom_k(h, 256)").as("bk")).collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     val b = el.repartition(1).groupBy("src")
-      .agg(expr("bottom_k256(h)").as("bk")).collect()
+      .agg(expr("bottom_k(h, 256)").as("bk")).collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     assert(a === b)
     assert(a.values.forall(v => v == v.sorted && v.distinct == v))

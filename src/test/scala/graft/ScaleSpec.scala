@@ -88,7 +88,6 @@ class ScaleSpec extends AnyFunSuite {
 
   test("mortonKey (driver), zorder2 (HOF), morton2 (codegen) agree bit for bit") {
     import spark.implicits._
-    graft.plans.Morton2.register(spark)
     // LCG-spread coordinates across the full 21-bit domain + the corners
     val pts = ((0L until 500L).map(i =>
         ((i * 2654435761L) % 2097152L, (i * 69069L + 12345L) % 2097152L))
@@ -251,7 +250,6 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("sharded write: one file per shard, exact within-shard order, no global sort") {
-    graft.plans.RollHash31.register(spark)
     val docs = Tables(spark, TestSpark.Sf, "documents")
       .select(col("doc_id"),
         ((lit(1103515245L) * (col("doc_id") % 2147483648L) + 12345L)

@@ -17,8 +17,6 @@ class ShingleSetSpec extends AnyFunSuite {
       s"k -> roll_hash31(array_join(slice(tk, k, $w), ' '))), array())))"
 
   test("kernel == declarative form on every fixture document, w=3 and w=5") {
-    graft.plans.RollHash31.register(spark)
-    graft.plans.ShingleSetHash31.register(spark)
     for (w <- Seq(3, 5)) {
       val mismatches = Tables(spark, TestSpark.Sf, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("tk"))
@@ -31,8 +29,6 @@ class ShingleSetSpec extends AnyFunSuite {
   }
 
   test("edge cases: short, empty-token, duplicate, and null-element inputs") {
-    graft.plans.RollHash31.register(spark)
-    graft.plans.ShingleSetHash31.register(spark)
     import spark.implicits._
     val rows = Seq(
       "a b",                 // shorter than the window -> empty set
@@ -59,7 +55,6 @@ class ShingleSetSpec extends AnyFunSuite {
   }
 
   test("output is sorted, distinct, and non-null-typed") {
-    graft.plans.ShingleSetHash31.register(spark)
     val out = Tables(spark, TestSpark.Sf, "documents")
       .select(expr("shingle_set_hash31(split(text, ' '), 3)").as("fs"))
     assert(out.schema("fs").dataType ==
@@ -71,7 +66,6 @@ class ShingleSetSpec extends AnyFunSuite {
   }
 
   test("width < 1 is rejected at analysis, before any job runs") {
-    graft.plans.ShingleSetHash31.register(spark)
     val (e, jobs) = JobLog(spark) {
       intercept[org.apache.spark.sql.AnalysisException] {
         spark.sql("SELECT shingle_set_hash31(array('a', 'b'), 0) AS s")

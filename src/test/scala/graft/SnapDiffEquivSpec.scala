@@ -14,6 +14,20 @@ class SnapDiffEquivSpec extends AnyFunSuite {
 
   private val dir = "target/graft-snapdiff-equiv"
 
+  test("a table with a change column is rejected before any job, naming the column") {
+    import spark.implicits._
+    val d = s"$dir-change"
+    SnapTable.destroy(spark, d)
+    SnapTable.commit(spark, d, Seq((1L, "a")).toDF("k", "Change"))
+    SnapTable.commit(spark, d, Seq((2L, "b")).toDF("k", "Change"))
+    val (e, jobs) = JobLog(spark)(
+      intercept[IllegalArgumentException](SnapTable.diff(spark, d, 1, 2)))
+    assert(e.getMessage.contains("`change`") && e.getMessage.contains("`Change`"),
+      e.getMessage)
+    assert(jobs.isEmpty, jobs.toString)
+    SnapTable.destroy(spark, d)
+  }
+
   test("single-pass diff == exceptAll-pair diff as multisets") {
     import spark.implicits._
     SnapTable.destroy(spark, dir)

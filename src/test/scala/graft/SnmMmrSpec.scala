@@ -18,7 +18,6 @@ class SnmMmrSpec extends AnyFunSuite {
   private val Sf = TestSpark.Sf
 
   test("qd18 lead-based candidates == rank-self-join SNM formulation") {
-    graft.plans.JaroWinklerSim.register(spark)
     val p = Tables(spark, Sf, "documents")
       .select(col("doc_id"), col("lang"),
         substring(col("text"), 1, 32).as("sp"),

@@ -148,7 +148,6 @@ class StreamingSpec extends AnyFunSuite {
       staged.resolve("house_numbers.ndjson"),
       java.nio.file.Paths.get(s"$dir/house_numbers.ndjson"))
       .toFile.deleteOnExit()
-    graft.plans.FuzzyMs.register(spark)
     val houseStream = spark.readStream
       .schema(SpacetimeEtl.houseSchema).json(staged.toString)
     val stream = Streams.runToTable(spark,

@@ -15,7 +15,7 @@ object TestSpark {
       // the cluster-deploy entry point, active for the whole suite:
       // every spec runs with the injected functions + strategy present
       // (ExtensionsSpec proves resolution through THIS path on a fresh
-      // newSession() whose registry has no register()-written entries)
+      // newSession(), and NativeFunctions.ensure on one without it)
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

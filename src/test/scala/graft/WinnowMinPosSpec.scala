@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.WinnowMinPos
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +14,6 @@ class WinnowMinPosSpec extends AnyFunSuite {
 
   test("winnow_minpos == distinct declarative selection on random arrays") {
     import spark.implicits._
-    WinnowMinPos.register(spark)
     val rnd = new scala.util.Random(47)
     // small value domain forces heavy ties; lengths straddle the window
     val rows = (1 to 400).map { id =>
@@ -43,7 +41,6 @@ class WinnowMinPosSpec extends AnyFunSuite {
   }
 
   test("short input yields no selections; window 1 selects every position") {
-    WinnowMinPos.register(spark)
     val r = spark.sql(
       "SELECT size(winnow_minpos(array(1L,2L,3L), 5)) AS a, " +
         "winnow_minpos(CAST(NULL AS ARRAY<BIGINT>), 5) AS b, " +
@@ -54,7 +51,6 @@ class WinnowMinPosSpec extends AnyFunSuite {
   }
 
   test("window < 1 is rejected at analysis, before any job runs") {
-    WinnowMinPos.register(spark)
     val (e, jobs) = JobLog(spark) {
       intercept[org.apache.spark.sql.AnalysisException] {
         spark.sql("SELECT winnow_minpos(array(1L, 2L), 0) AS s")
