@@ -68,6 +68,16 @@ object GeoQueries {
   private def inferred(spark: SparkSession, dir: String): DataFrame =
     SpacetimeEtl.matchPoints(spark, segments(spark, dir), housePoints(spark, dir))
 
+  /** g02's relation — every house point with its nearest street id and
+    * distance, ids normalized via the conditional R14 helpers (bare
+    * fixture ids get the prefix, pre-prefixed ids pass through). */
+  private val nearest: Q = (s, d) =>
+    inferred(s, geoDir(d)).select(
+      SpacetimeEtl.fullId("building-inspector", col("hn_id")).as("house_number_id"),
+      SpacetimeEtl.fullId("nyc-streets", col("sid")).as("street_id"),
+      col("distance_m"))
+      .orderBy("house_number_id")
+
   val queries: Map[String, Q] = Map(
     // G01 segmentizer: segments per street (includes bad-date streets)
     "g01_segmentize" -> ((s, d) =>
@@ -75,14 +85,7 @@ object GeoQueries {
         .orderBy("street_id")),
 
     // G02 spatio-temporal nearest-street join; unmatched → NULL street_id
-    // (ids normalized via the conditional R14 helpers — bare fixture ids
-    // get the prefix, pre-prefixed ids pass through)
-    "g02_nearest" -> ((s, d) =>
-      inferred(s, geoDir(d)).select(
-        SpacetimeEtl.fullId("building-inspector", col("hn_id")).as("house_number_id"),
-        SpacetimeEtl.fullId("nyc-streets", col("sid")).as("street_id"),
-        col("distance_m"))
-        .orderBy("house_number_id")),
+    "g02_nearest" -> nearest,
 
     // S28 STREAMING GEO INGEST — the reference pipeline run as a
     // stream: house numbers arrive through the graft-ndjson DSv2
@@ -90,18 +93,13 @@ object GeoQueries {
     // street-segment grid (stream-static: points are independent, so
     // per-batch matchPoints ≡ the global batch join — no state, no
     // watermark; exactly-once rides the source's offset log). The batch
-    // form below IS g02's pipeline and the oracle is g02's SQL — the
+    // form IS g02's `nearest` relation and the oracle is g02's SQL — the
     // shared oracle is the claim (qs7/qs9's convention): a user can
     // swap the reference's batch ETL for streaming ingest and get the
     // identical relation. GeoStreamSpec pins streamed == batch
     // row-for-row across a checkpointed restart with the fixture split
     // into two micro-batches.
-    "s28_geostream" -> ((s, d) =>
-      inferred(s, geoDir(d)).select(
-        SpacetimeEtl.fullId("building-inspector", col("hn_id")).as("house_number_id"),
-        SpacetimeEtl.fullId("nyc-streets", col("sid")).as("street_id"),
-        col("distance_m"))
-        .orderBy("house_number_id")),
+    "s28_geostream" -> nearest,
 
     // G03 transform fan-out (R17/R18 incl. the N5 mutation-aliasing:
     // the matched log's data_str is the MERGED struct). Matched and error

@@ -3,6 +3,11 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan,
+  GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not,
+  Or, StringStartsWith}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+  ShortType, StringType, StructType}
 
 /** Snapshot-manifest table format over plain parquet — the minimal
   * lakehouse commit protocol (the Iceberg/Delta core, derived from the
@@ -49,8 +54,18 @@ import org.apache.spark.sql.functions._
   * can pin `pruned` as hash-checked data. This is Iceberg/Delta's
   * file-level bloom story with O(files · m/8) metadata.
   *
+  * ONE FILE-PRUNING EVALUATOR: which files of a snapshot can hold a
+  * matching row is decided in one place, [[canMatch]] over the parsed
+  * manifest ([[TablePlan]]) and a Spark `Filter` — integer and string
+  * zone maps, bloom bits, NULL counts and negations. `readWhere`,
+  * `readWhereEq`, `delete`, `update`, SQL DELETE and the graft-snap
+  * connector's scan all state their predicates as filters and prune
+  * through it (the Iceberg inclusive-metrics-evaluator shape: one
+  * evaluator for scan planning and row-filter deletes). A new prunable
+  * shape is one case there plus one in [[usableFilter]].
+  *
   * ROW-LEVEL DELETE (`delete`): copy-on-write at FILE granularity — the
-  * predicate's zone-map hint bounds the candidate file set, only
+  * predicate's hint bounds the candidate file set, only
   * candidates are rewritten (survivor rows land as new files), untouched
   * files carry into the new manifest VERBATIM (bytes, stats, and bloom
   * cells untouched), and the new version commits atomically while every
@@ -135,20 +150,34 @@ object SnapTable {
     }
   }
 
-  // ---- external-scanner planning surface (the graft-snap DSv2
-  // connector) -----------------------------------------------------------
+  // ---- manifest model and file pruning ---------------------------------
 
-  /** Planning view of one manifest entry: absolute file path, recorded
-    * [min,max] per stat column (absent = unprunable), bloom hex, exact
-    * row count and per-stat-col non-null counts (absent on legacy
-    * manifests — consumers must degrade, never guess). */
-  private[graft] final case class PlanEntry(path: String,
-      ranges: Map[String, (Long, Long)], bloomHex: Option[String],
-      nRows: Option[Long] = None, nonNull: Map[String, Long] = Map.empty,
-      sRanges: Map[String, (Array[Byte], Array[Byte])] = Map.empty)
+  /** One manifest line, parsed: the manifest-relative `rel` and its
+    * resolved `path`, recorded [min,max] per stat column (absent =
+    * unprunable), exact row count and per-stat-col non-null counts
+    * (absent on legacy manifests — consumers must degrade, never guess),
+    * string bounds per `#sstats:` column, and the verbatim `raw` line a
+    * later commit carries untouched. `bloomAt` is the offset of the
+    * bloom hex in `raw` (-1 when the line records no bitmap): the bits
+    * are read in place, so a parsed manifest holds each 16 KiB bitmap
+    * once. */
+  private[graft] final case class PlanEntry(rel: String, path: String,
+      ranges: Map[String, (Long, Long)], bloomAt: Int, nRows: Option[Long],
+      nonNull: Map[String, Long],
+      sRanges: Map[String, (Array[Byte], Array[Byte])], raw: String)
+
+  /** A parsed manifest: its header fields and every file line. */
   private[graft] final case class TablePlan(version: Int,
       statCols: Seq[String], bloom: Option[(String, Int)],
-      files: Seq[PlanEntry], sStatCols: Seq[String] = Nil)
+      schema: Option[String], sStatCols: Seq[String],
+      files: Seq[PlanEntry]) {
+    // probe value -> its two bloom bit positions, computed once per plan
+    // (an IN list or a runtime join-key filter probes every file)
+    private val probes =
+      scala.collection.concurrent.TrieMap.empty[Long, (Long, Long)]
+    private[graft] def bloomBits(value: Long, m: Int): (Long, Long) =
+      probes.getOrElseUpdate(value, bloomPositions(value, m))
+  }
 
   private[graft] def hexBytes(h: String): Array[Byte] = {
     val out = new Array[Byte](h.length / 2)
@@ -160,26 +189,14 @@ object SnapTable {
     out
   }
 
-  /** The manifest as a PLANNING structure — what a scanner needs to
-    * prune files before opening any (same driver-side planning class as
-    * readWhere; the USER-facing relation is [[filesMeta]]). */
+  /** The manifest of `version` (default: latest) — what a scanner or a
+    * copy-on-write verb needs to prune files before opening any. The
+    * USER-facing relation is [[filesMeta]]. */
   private[graft] def plan(spark: SparkSession, dir: String,
                           version: Int = 0): TablePlan = {
-    val f = fs(spark, dir)
     val v = if (version > 0) version else latestVersion(spark, dir)
     require(v > 0, s"no committed version at $dir")
-    val info = parseManifest(f, dir, v)
-    TablePlan(v, info.statCols, info.bloom, info.files.map { e =>
-      PlanEntry(resolvePath(dir, e.rel),
-        info.statCols.zip(e.ranges)
-          .collect { case (c, Some(r)) => c -> r }.toMap,
-        e.bloomHex, e.nRows,
-        info.statCols.zip(e.nonNull)
-          .collect { case (c, Some(n)) => c -> n }.toMap,
-        info.sStatCols.zip(e.sRanges)
-          .collect { case (c, Some((lo, hi))) =>
-            c -> (hexBytes(lo), hexBytes(hi)) }.toMap)
-    }, info.sStatCols)
+    parseManifest(fs(spark, dir), dir, v)
   }
 
   /** The two bloom bit positions for a probe value — computed through
@@ -190,8 +207,7 @@ object SnapTable {
     * harmless for a user's small IN list, a real planning tax once
     * runtime filters hand the scan thousands of join keys. 42 is
     * the `xxhash64` function's documented default seed. */
-  private[graft] def bloomPositions(spark: SparkSession, value: Long,
-                                    m: Int): (Long, Long) = {
+  private def bloomPositions(value: Long, m: Int): (Long, Long) = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     // the writer's second hash is xxhash64(value, BloomSeed) — the
     // seed constant hashed as a SECOND COLUMN under the function's
@@ -205,13 +221,234 @@ object SnapTable {
     (pos(Seq(value)), pos(Seq(value, BloomSeed)))
   }
 
-  /** Bit test against a manifest hex bitmap. */
-  private[graft] def bloomHexHas(hex: String, p: Long): Boolean = {
-    val w = (p / 64).toInt
-    val word = java.lang.Long.parseUnsignedLong(
-      hex.substring(w * 16, w * 16 + 16), 16)
+  /** Bit `p` of the entry's bloom bitmap, read in place from its line. */
+  private def bloomBit(e: PlanEntry, p: Long): Boolean = {
+    val at = e.bloomAt + (p / 64).toInt * 16
+    val word = java.lang.Long.parseUnsignedLong(e.raw, at, at + 16, 16)
     (word & (1L << (p % 64))) != 0L
   }
+
+  /** THE FILE-PRUNING EVALUATOR. A filter participates in file pruning
+    * when every referenced column is integer-typed (the manifest's zone
+    * cells are LONG) or string-typed (round-12 `#sstats:` truncated
+    * string bounds) — [[canMatch]] itself decides per file what it can
+    * conclude. Shared by the connector's planning-time pushdown and
+    * round-13 runtime filtering, and by SQL DELETE (the evaluator's
+    * value coercions only understand these shapes). */
+  private[graft] def usableFilter(full: StructType, f: Filter): Boolean = {
+    def integerCol(name: String): Boolean =
+      full.fields.exists(fd => fd.name == name && (fd.dataType match {
+        case LongType | IntegerType | ShortType | ByteType => true
+        case _ => false
+      }))
+    def stringCol(name: String): Boolean =
+      full.fields.exists(fd => fd.name == name && fd.dataType == StringType)
+    def str(v: Any): Boolean = v.isInstanceOf[String]
+    def integral(v: Any): Boolean = v match {
+      case _: Long | _: Int | _: Short | _: Byte => true
+      case _ => false
+    }
+    def compared(a: String, v: Any): Boolean =
+      (integerCol(a) && integral(v)) || (stringCol(a) && str(v))
+    def usable(f: Filter): Boolean = f match {
+      case EqualTo(a, v)            => compared(a, v)
+      case GreaterThan(a, v)        => compared(a, v)
+      case GreaterThanOrEqual(a, v) => compared(a, v)
+      case LessThan(a, v)           => compared(a, v)
+      case LessThanOrEqual(a, v)    => compared(a, v)
+      case In(a, vs) =>
+        (integerCol(a) && vs.forall(integral)) ||
+          (stringCol(a) && vs.forall(str))
+      case StringStartsWith(a, _)   => stringCol(a)
+      // NULL-membership prunes off the round-12 per-file counts (any
+      // column type — the evaluator needs only the counts, not values)
+      case IsNull(_) | IsNotNull(_) => true
+      case And(l, r)                => usable(l) && usable(r)
+      case Or(l, r)                 => usable(l) && usable(r)
+      // negations prune through De Morgan + complement rewrites over
+      // the SAME shape set (round 13): NOT k=v prunes a file whose zone
+      // is [v,v], NOT k>v prunes like k<=v, NOT startsWith prunes a
+      // file whose whole range shares the prefix
+      case Not(inner)               => usable(inner)
+      case _                        => false
+    }
+    usable(f)
+  }
+
+  private def long(v: Any): Long = v match {
+    case l: Long => l; case i: Int => i.toLong
+    case s: Short => s.toLong; case b: Byte => b.toLong
+  }
+  // STRING bounds compare as unsigned UTF-8 bytes — exactly
+  // UTF8String's binary ordering, which is what the truncated
+  // manifest cells were derived under (Java String.compareTo orders
+  // UTF-16 units and DIVERGES for supplementary characters)
+  private def sBytes(v: Any): Array[Byte] =
+    v.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private def cmpB(a: Array[Byte], b: Array[Byte]): Int = {
+    var i = 0
+    while (i < a.length && i < b.length) {
+      val d = (a(i) & 0xff) - (b(i) & 0xff)
+      if (d != 0) return d
+      i += 1
+    }
+    a.length - b.length
+  }
+  // smallest byte string strictly greater than every string with
+  // prefix p: increment the last non-0xFF byte and truncate; all-0xFF
+  // has no successor (None = no upper constraint)
+  private def succB(p: Array[Byte]): Option[Array[Byte]] = {
+    var i = p.length - 1
+    while (i >= 0 && p(i) == 0xff.toByte) i -= 1
+    if (i < 0) None
+    else {
+      val out = java.util.Arrays.copyOf(p, i + 1)
+      out(i) = (out(i) + 1).toByte
+      Some(out)
+    }
+  }
+
+  /** Can file `e` of `p` hold a row matching every filter? */
+  private[graft] def canMatchAll(p: TablePlan, e: PlanEntry,
+                                 filters: Seq[Filter]): Boolean =
+    filters.forall(canMatch(p, e, _))
+
+  /** The files of `p` that can hold a row matching every filter. */
+  private[graft] def candidates(p: TablePlan,
+                                filters: Seq[Filter]): Seq[PlanEntry] =
+    p.files.filter(canMatchAll(p, _, filters))
+
+  /** Tri-state "file `e` CAN contain a row matching `f`": unknown → true,
+    * never prune. */
+  private[graft] def canMatch(p: TablePlan, e: PlanEntry,
+                              f: Filter): Boolean = f match {
+    // `_file` is exact membership, not a zone: the runtime group
+    // filter hands back the very paths the scan emitted
+    case EqualTo(graft.sources.SnapScan.FileColumn, v: String) => e.path == v
+    case In(graft.sources.SnapScan.FileColumn, vs) => vs.exists(v => e.path == v)
+    case EqualTo(a, v: String) =>
+      e.sRanges.get(a).forall { case (lo, hi) =>
+        val b = sBytes(v); cmpB(lo, b) <= 0 && cmpB(b, hi) <= 0
+      }
+    case EqualTo(a, v) =>
+      val value = long(v)
+      val zoneOk = e.ranges.get(a) match {
+        case Some((mn, mx)) => mn <= value && value <= mx
+        case None           => true
+      }
+      val bloomOk = p.bloom match {
+        case Some((bc, m)) if bc == a && e.bloomAt >= 0 =>
+          val (p1, p2) = p.bloomBits(value, m)
+          bloomBit(e, p1) && bloomBit(e, p2)
+        case _ => true // no bitmap for this column or file: never prune
+      }
+      zoneOk && bloomOk
+    case GreaterThan(a, v: String) =>
+      e.sRanges.get(a).forall { case (_, hi) => cmpB(hi, sBytes(v)) > 0 }
+    case GreaterThan(a, v) =>
+      e.ranges.get(a).forall { case (_, mx) => mx > long(v) }
+    case GreaterThanOrEqual(a, v: String) =>
+      e.sRanges.get(a).forall { case (_, hi) => cmpB(hi, sBytes(v)) >= 0 }
+    case GreaterThanOrEqual(a, v) =>
+      e.ranges.get(a).forall { case (_, mx) => mx >= long(v) }
+    case LessThan(a, v: String) =>
+      e.sRanges.get(a).forall { case (lo, _) => cmpB(lo, sBytes(v)) < 0 }
+    case LessThan(a, v) =>
+      e.ranges.get(a).forall { case (mn, _) => mn < long(v) }
+    case LessThanOrEqual(a, v: String) =>
+      e.sRanges.get(a).forall { case (lo, _) => cmpB(lo, sBytes(v)) <= 0 }
+    case LessThanOrEqual(a, v) =>
+      e.ranges.get(a).forall { case (mn, _) => mn <= long(v) }
+    // a string with prefix p lies in [p, succ(p)): the file can hold
+    // one iff its [lo, hi] intersects that range (conservative under
+    // the cells' own truncation — lo <= trueMin, hi >= trueMax)
+    case StringStartsWith(a, pfx) =>
+      e.sRanges.get(a).forall { case (lo, hi) =>
+        val b = sBytes(pfx)
+        cmpB(hi, b) >= 0 && succB(b).forall(sp => cmpB(lo, sp) < 0)
+      }
+    case In(a, vs)  => vs.exists(v => canMatch(p, e, EqualTo(a, v)))
+    // NULL-membership from the per-file counts (round 12): a file
+    // whose non-null count for a STAT column equals its row count
+    // holds no NULLs there; one whose non-null count is 0 holds
+    // nothing BUT NULLs. Absent counts (legacy lines, non-stat
+    // columns) → unknown → never prune.
+    case IsNull(a) =>
+      (e.nRows, e.nonNull.get(a)) match {
+        case (Some(n), Some(nn)) => nn < n
+        case _                   => true
+      }
+    case IsNotNull(a) =>
+      e.nonNull.get(a) match {
+        case Some(nn) => nn > 0
+        // a zero-row file can't match ANY predicate; recorded row
+        // count 0 prunes even without a per-column non-null count
+        case None     => !e.nRows.contains(0L)
+      }
+    case And(l, r)  => canMatch(p, e, l) && canMatch(p, e, r)
+    case Or(l, r)   => canMatch(p, e, l) || canMatch(p, e, r)
+    case Not(inner) => canMatchNeg(p, e, inner)
+    case _          => true
+  }
+
+  /** Tri-state "file `e` CAN contain a row where `f` is FALSE" (a row
+    * where f is NULL does not match NOT f under SQL semantics, and the
+    * zone cells describe only non-null values — so the complement
+    * rewrites below are exact): unknown → true, never prune. */
+  private def canMatchNeg(p: TablePlan, e: PlanEntry,
+                          f: Filter): Boolean = f match {
+    // NOT k=v: prunable only when the zone PROVES every non-null
+    // value equals v. For strings the bounds are truncated (Iceberg
+    // rule) — lo==hi only proves min==max when the cell is shorter
+    // than the 16-byte truncation width (an untruncated bound IS the
+    // value)
+    case EqualTo(a, v: String) =>
+      !e.sRanges.get(a).exists { case (lo, hi) =>
+        val b = sBytes(v)
+        b.length < 16 && java.util.Arrays.equals(lo, b) &&
+          java.util.Arrays.equals(hi, b)
+      }
+    case EqualTo(a, v) =>
+      !e.ranges.get(a).contains((long(v), long(v)))
+    // complements of the range shapes are ranges themselves; the
+    // zone checks already quantify over non-null values only
+    case GreaterThan(a, v)        => canMatch(p, e, LessThanOrEqual(a, v))
+    case GreaterThanOrEqual(a, v) => canMatch(p, e, LessThan(a, v))
+    case LessThan(a, v)           => canMatch(p, e, GreaterThanOrEqual(a, v))
+    case LessThanOrEqual(a, v)    => canMatch(p, e, GreaterThan(a, v))
+    case IsNull(a)                => canMatch(p, e, IsNotNull(a))
+    case IsNotNull(a)             => canMatch(p, e, IsNull(a))
+    // NOT IN prunes when the zone proves all values equal some
+    // member — exactly when some member's NOT= pruned
+    case In(a, vs) => vs.forall(v => canMatchNeg(p, e, EqualTo(a, v)))
+    // NOT startsWith(p): if BOTH recorded bounds start with p, every
+    // string in [lo, hi] must too (binary order: a string below the
+    // prefix sorts before lo, above it sorts after hi) — even under
+    // truncation, [trueMin, trueMax] ⊆ [lo, hi]
+    case StringStartsWith(a, pfx) =>
+      !e.sRanges.get(a).exists { case (lo, hi) =>
+        val b = sBytes(pfx)
+        lo.length >= b.length && hi.length >= b.length &&
+          java.util.Arrays.equals(java.util.Arrays.copyOf(lo, b.length), b) &&
+          java.util.Arrays.equals(java.util.Arrays.copyOf(hi, b.length), b)
+      }
+    case And(l, r)  => canMatchNeg(p, e, l) || canMatchNeg(p, e, r) // De Morgan
+    case Or(l, r)   => canMatchNeg(p, e, l) && canMatchNeg(p, e, r)
+    case Not(inner) => canMatch(p, e, inner)
+    case _          => true
+  }
+
+  /** A stat column's [lo, hi] hint as evaluator filters — the form
+    * `readWhere`, `delete` and `update` state their public range hints
+    * in. */
+  private def rangeFilters(p: TablePlan, c: String, lo: Long,
+                           hi: Long): Seq[Filter] =
+    if (c == null) Nil
+    else {
+      require(p.statCols.contains(c),
+        s"no recorded stats for $c (have ${p.statCols})")
+      Seq(GreaterThanOrEqual(c, lo), LessThanOrEqual(c, hi))
+    }
 
   /** Latest committed version, 0 if the table has none. */
   def latestVersion(spark: SparkSession, dir: String): Int = {
@@ -379,8 +616,7 @@ object SnapTable {
     def field(i: Int) = s"try_element_at(_p, $i)"
     def longCell(s: String) =
       expr(s"try_cast(nullif(nullif($s, '-'), '') as long)")
-    val lines = spark.read.text(manifestPath(dir, v).toString)
-      .where(!col("value").startsWith("#") && col("value") =!= "")
+    val lines = fileLineScan(spark, dir, v)
       .select(split(col("value"), "\t").as("_p"))
     val base = lines.select(
       element_at(col("_p"), 1).as("file"), // index 1 always exists
@@ -414,29 +650,13 @@ object SnapTable {
   private def manifestLines(f: FileSystem, dir: String, v: Int): Seq[String] =
     readSmall(f, manifestPath(dir, v)).split("\n").toSeq.filter(_.nonEmpty)
 
-  // ---- manifest model ------------------------------------------------
-
-  private final case class FileEntry(rel: String,
-                                     ranges: Seq[Option[(Long, Long)]],
-                                     bloomHex: Option[String],
-                                     nRows: Option[Long],
-                                     nonNull: Seq[Option[Long]],
-                                     sRanges: Seq[Option[(String, String)]],
-                                     raw: String)
-
   /** Do these (already-parsed) lines all record row + non-null counts?
     * Drives `#counts:full` propagation through DML rewrites and clones
     * — exact, since the caller holds the parsed entries anyway. */
-  private def linesCounted(files: Seq[FileEntry]): Boolean =
-    files.forall(e => e.nRows.isDefined && e.nonNull.forall(_.isDefined))
+  private def linesCounted(p: TablePlan, files: Seq[PlanEntry]): Boolean =
+    files.forall(e => e.nRows.isDefined && p.statCols.forall(e.nonNull.contains))
 
-  private final case class ManifestInfo(statCols: Seq[String],
-                                        bloom: Option[(String, Int)],
-                                        schema: Option[String],
-                                        sStatCols: Seq[String],
-                                        files: Seq[FileEntry])
-
-  private def parseManifest(f: FileSystem, dir: String, v: Int): ManifestInfo = {
+  private def parseManifest(f: FileSystem, dir: String, v: Int): TablePlan = {
     val lines = manifestLines(f, dir, v)
     val statCols = lines.find(_.startsWith("#stats:"))
       .map(_.stripPrefix("#stats:").split(",").toSeq).getOrElse(Nil)
@@ -451,18 +671,19 @@ object SnapTable {
     val files = lines.filterNot(_.startsWith("#")).map { line =>
       val parts = line.split("\t", -1)
       val rel = parts(0)
-      val cells =
+      val ranges =
         if (parts.length > 1 && parts(1).nonEmpty) {
           val cs = parts(1).split(",")
-          statCols.indices.map { k =>
+          statCols.indices.flatMap { k =>
             val lo = cs(2 * k); val hi = cs(2 * k + 1)
-            if (lo == "-" || hi == "-") None else Some((lo.toLong, hi.toLong))
-          }
-        } else statCols.map(_ => None)
-      val bh =
+            if (lo == "-" || hi == "-") None
+            else Some(statCols(k) -> (lo.toLong, hi.toLong))
+          }.toMap
+        } else Map.empty[String, (Long, Long)]
+      val bloomAt =
         if (parts.length > 2 && parts(2).startsWith("B"))
-          Some(parts(2).stripPrefix("B"))
-        else None
+          rel.length + parts(1).length + 3 // two tabs and the 'B'
+        else -1
       // round-12 fields; absent on carried pre-round-12 lines
       val n =
         if (parts.length > 3 && parts(3).nonEmpty) Some(parts(3).toLong)
@@ -470,26 +691,53 @@ object SnapTable {
       val nn =
         if (parts.length > 4 && parts(4).nonEmpty) {
           val cs = parts(4).split(",")
-          statCols.indices.map(k =>
-            if (k < cs.length && cs(k).nonEmpty) Some(cs(k).toLong) else None)
-        } else statCols.map(_ => None)
+          statCols.indices.collect {
+            case k if k < cs.length && cs(k).nonEmpty =>
+              statCols(k) -> cs(k).toLong
+          }.toMap
+        } else Map.empty[String, Long]
       // field 6 (round 12): STRING zone cells — hex-of-UTF-8 truncated
       // bounds per #sstats column ("-" = unknown/all-null, never prune)
       val sr =
         if (parts.length > 5 && parts(5).nonEmpty) {
           val cs = parts(5).split(",")
-          sStatCols.indices.map { k =>
+          sStatCols.indices.flatMap { k =>
             if (2 * k + 1 >= cs.length) None
             else {
               val lo = cs(2 * k); val hi = cs(2 * k + 1)
-              if (lo == "-" || hi == "-") None else Some((lo, hi))
+              if (lo == "-" || hi == "-") None
+              else Some(sStatCols(k) -> (hexBytes(lo), hexBytes(hi)))
             }
-          }
-        } else sStatCols.map(_ => None)
-      FileEntry(rel, cells, bh, n, nn, sr, line)
+          }.toMap
+        } else Map.empty[String, (Array[Byte], Array[Byte])]
+      PlanEntry(rel, resolvePath(dir, rel), ranges, bloomAt, n, nn, sr, line)
     }
-    ManifestInfo(statCols, bloom, schema, sStatCols, files)
+    TablePlan(v, statCols, bloom, schema, sStatCols, files)
   }
+
+  /** The file lines of manifest `v` as a text relation, read
+    * executor-side (column `value`). */
+  private def fileLineScan(spark: SparkSession, dir: String, v: Int): DataFrame =
+    spark.read.text(manifestPath(dir, v).toString)
+      .where(!col("value").startsWith("#") && col("value") =!= "")
+
+  /** Manifest file lines as carried `(k, line)` rows — the sort keys
+    * place them after the header and before the new files' lines. */
+  private def asCarried(lines: DataFrame): DataFrame =
+    lines.select(concat(lit("1"),
+      lpad(monotonically_increasing_id().cast("string"), 12, "0"))
+      .as("k"), col("value").as("line"))
+
+  /** `files` of `p` as one relation. The manifest's recorded schema
+    * (when present) is the READ schema: under add-column evolution,
+    * files committed before a column was added lack it physically — the
+    * declared schema makes the parquet reader null-fill them instead of
+    * failing or silently dropping the column depending on which file's
+    * footer got sampled. */
+  private def readFiles(spark: SparkSession, p: TablePlan,
+                        files: Seq[PlanEntry]): DataFrame =
+    p.schema.fold(spark.read)(sc => spark.read.schema(schemaOf(sc)))
+      .parquet(files.map(_.path): _*)
 
   // MANIFEST-EXEC-SIDE-BEGIN (SnapTableSpec pins this region collect-free)
   // Per-file zone cells, bloom bitmaps, and the fully-formatted manifest
@@ -1042,11 +1290,7 @@ object SnapTable {
                 s"missing or retyped in the append: ${lost.mkString(", ")}")
           }
         }
-        (spark.read.text(manifestPath(dir, prevV).toString)
-          .where(!col("value").startsWith("#") && col("value") =!= "")
-          .select(concat(lit("1"),
-            lpad(monotonically_increasing_id().cast("string"), 12, "0"))
-            .as("k"), col("value").as("line")), h.counts)
+        (asCarried(fileLineScan(spark, dir, prevV)), h.counts)
       } else (carriedDf(spark, Nil), true)
     val (carried, carriedCounts) = carriedFor(prev)
     writeCommit(spark, dir, df, carried, statCols, bloom, meta,
@@ -1094,11 +1338,7 @@ object SnapTable {
             s"stream schema does not match the committed table schema\n" +
               s"  committed: $prevSchema\n  stream:    $cur")
         }
-        (spark.read.text(manifestPath(dir, prevV).toString)
-          .where(!col("value").startsWith("#") && col("value") =!= "")
-          .select(concat(lit("1"),
-            lpad(monotonically_increasing_id().cast("string"), 12, "0"))
-            .as("k"), col("value").as("line")), h.counts)
+        (asCarried(fileLineScan(spark, dir, prevV)), h.counts)
       } else (carriedDf(spark, Nil), true)
     }
     val (carried, counts) = carriedFor(prev)
@@ -1149,13 +1389,9 @@ object SnapTable {
       if (p.startsWith(s"$dir/")) p.stripPrefix(s"$dir/") else p)
     val replDf = spark.createDataset(replRel)(
       org.apache.spark.sql.Encoders.STRING).toDF("_r")
-    val carried = spark.read.text(manifestPath(dir, prev).toString)
-      .where(!col("value").startsWith("#") && col("value") =!= "")
+    val carried = asCarried(fileLineScan(spark, dir, prev)
       .withColumn("_path", element_at(split(col("value"), "\t"), 1))
-      .join(broadcast(replDf), col("_path") === col("_r"), "left_anti")
-      .select(concat(lit("1"),
-        lpad(monotonically_increasing_id().cast("string"), 12, "0"))
-        .as("k"), col("value").as("line"))
+      .join(broadcast(replDf), col("_path") === col("_r"), "left_anti"))
     commitNamed(spark, dir, commitId, names, schemaFingerprint(schema),
       carried, h.statCols, h.bloom, meta, h.sStatCols,
       // a subset of counted lines stays counted; new lines always are
@@ -1204,43 +1440,20 @@ object SnapTable {
     * delete that matches nothing commits nothing and reports 0. */
   def delete(spark: SparkSession, dir: String, cond: Column,
              pruneCol: String = null, lo: Long = Long.MinValue,
-             hi: Long = Long.MaxValue): DeleteResult = {
-    val f = fs(spark, dir)
-    val v = latestVersion(spark, dir)
-    require(v > 0, s"no committed version at $dir")
-    val info = parseManifest(f, dir, v)
-    val k = if (pruneCol == null) -1 else {
-      val i = info.statCols.indexOf(pruneCol)
-      require(i >= 0, s"no recorded stats for $pruneCol (have ${info.statCols})")
-      i
-    }
-    val (cand, untouched) = info.files.partition { e =>
-      k < 0 || (e.ranges(k) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None           => true // unknown stats: must treat as candidate
-      })
-    }
-    if (cand.isEmpty) return DeleteResult(v, 0L, 0, info.files.size)
-    // candidates read under the recorded schema: an evolved table's
-    // older files null-fill added columns, so the rewrite preserves
-    // the full latest schema instead of dropping it
-    val candDf = info.schema.map(sc => spark.read.schema(schemaOf(sc)))
-      .getOrElse(spark.read)
-      .parquet(cand.map(e => resolvePath(dir, e.rel)): _*)
-    val deleted = candDf.filter(cond).count()
-    if (deleted == 0L) return DeleteResult(v, 0L, 0, info.files.size)
-    // SQL DELETE semantics under three-valued logic (round-14 advisory
-    // fix): a row whose predicate evaluates to NULL must SURVIVE —
-    // `!cond` alone maps NULL to NULL and the filter silently dropped
-    // it (without counting it in `deleted`). Survivors are the rows
-    // where cond is not TRUE.
-    val (nv, _) = writeCommit(spark, dir,
-      candDf.filter(!coalesce(cond, lit(false))),
-      carriedDf(spark, untouched.map(_.raw)), info.statCols, info.bloom,
-      Map("deleteFrom" -> v.toString), info.sStatCols,
-      countsComplete = linesCounted(untouched), basedOnPrev = v)
-    DeleteResult(nv, deleted, cand.size, info.files.size)
-  }
+             hi: Long = Long.MaxValue): DeleteResult =
+    deleteMatching(spark, dir, cond, rangeFilters(_, pruneCol, lo, hi))
+
+  /** The delete core: `hint` states, as evaluator filters over the
+    * parsed manifest, what every row matching `cond` also matches (SQL
+    * DELETE passes its prunable conjuncts). SQL DELETE semantics under
+    * three-valued logic (round-14 advisory fix): a row whose predicate
+    * evaluates to NULL must SURVIVE — `!cond` alone maps NULL to NULL
+    * and the filter silently dropped it (without counting it in the
+    * deleted rows). Survivors are the rows where cond is not TRUE. */
+  private[graft] def deleteMatching(spark: SparkSession, dir: String,
+      cond: Column, hint: TablePlan => Seq[Filter]): DeleteResult =
+    rewriteFiles(spark, dir, cond, hint, "deleteFrom")(
+      _.filter(!coalesce(cond, lit(false))))
 
   /** ROW-LEVEL UPDATE — the third copy-on-write DML verb (MERGE lives
     * in [[Lakehouse]], DELETE above): rows matching `cond` take the
@@ -1251,47 +1464,44 @@ object SnapTable {
     * column's range keeps pruning truthful. */
   def update(spark: SparkSession, dir: String, cond: Column,
              set: Map[String, Column], pruneCol: String = null,
-             lo: Long = Long.MinValue, hi: Long = Long.MaxValue): DeleteResult = {
-    val f = fs(spark, dir)
-    val v = latestVersion(spark, dir)
-    require(v > 0, s"no committed version at $dir")
-    val info = parseManifest(f, dir, v)
-    val k = if (pruneCol == null) -1 else {
-      val i = info.statCols.indexOf(pruneCol)
-      require(i >= 0, s"no recorded stats for $pruneCol (have ${info.statCols})")
-      i
+             lo: Long = Long.MinValue, hi: Long = Long.MaxValue): DeleteResult =
+    rewriteFiles(spark, dir, cond, rangeFilters(_, pruneCol, lo, hi),
+      "updateFrom") { candDf =>
+      require(set.keySet.subsetOf(candDf.columns.toSet),
+        s"unknown update columns: ${set.keySet -- candDf.columns.toSet}")
+      // one select so cond and every RHS evaluate against the ORIGINAL
+      // row (chained withColumn would let later expressions see earlier
+      // updates — not SQL UPDATE semantics)
+      candDf.select(candDf.columns.map { c =>
+        set.get(c) match {
+          case Some(e) => when(cond, e).otherwise(col(c)).as(c)
+          case None    => col(c)
+        }
+      }: _*)
     }
-    val (cand, untouched) = info.files.partition { e =>
-      k < 0 || (e.ranges(k) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None           => true
-      })
-    }
-    if (cand.isEmpty) return DeleteResult(v, 0L, 0, info.files.size)
-    // candidates read under the recorded schema: an evolved table's
-    // older files null-fill added columns, so the rewrite preserves
-    // the full latest schema instead of dropping it
-    val candDf = info.schema.map(sc => spark.read.schema(schemaOf(sc)))
-      .getOrElse(spark.read)
-      .parquet(cand.map(e => resolvePath(dir, e.rel)): _*)
-    val updated = candDf.filter(cond).count()
-    if (updated == 0L) return DeleteResult(v, 0L, 0, info.files.size)
-    require(set.keySet.subsetOf(candDf.columns.toSet),
-      s"unknown update columns: ${set.keySet -- candDf.columns.toSet}")
-    // one select so cond and every RHS evaluate against the ORIGINAL
-    // row (chained withColumn would let later expressions see earlier
-    // updates — not SQL UPDATE semantics)
-    val applied = candDf.select(candDf.columns.map { c =>
-      set.get(c) match {
-        case Some(e) => when(cond, e).otherwise(col(c)).as(c)
-        case None    => col(c)
-      }
-    }: _*)
-    val (nv, _) = writeCommit(spark, dir, applied,
-      carriedDf(spark, untouched.map(_.raw)), info.statCols, info.bloom,
-      Map("updateFrom" -> v.toString), info.sStatCols,
-      countsComplete = linesCounted(untouched), basedOnPrev = v)
-    DeleteResult(nv, updated, cand.size, info.files.size)
+
+  /** The copy-on-write body of `delete` and `update`: the files the
+    * evaluator admits under `hint` are the candidates; when `cond`
+    * matches a row of theirs, they rewrite through `rewrite` and every
+    * other file carries into the new manifest verbatim. Candidates read
+    * under the recorded schema, so an evolved table's older files
+    * null-fill added columns and the rewrite keeps the full latest
+    * schema. */
+  private def rewriteFiles(spark: SparkSession, dir: String, cond: Column,
+      hint: TablePlan => Seq[Filter], metaKey: String)(
+      rewrite: DataFrame => DataFrame): DeleteResult = {
+    val p = plan(spark, dir)
+    val filters = hint(p)
+    val (cand, untouched) = p.files.partition(canMatchAll(p, _, filters))
+    if (cand.isEmpty) return DeleteResult(p.version, 0L, 0, p.files.size)
+    val candDf = readFiles(spark, p, cand)
+    val matched = candDf.filter(cond).count()
+    if (matched == 0L) return DeleteResult(p.version, 0L, 0, p.files.size)
+    val (nv, _) = writeCommit(spark, dir, rewrite(candDf),
+      carriedDf(spark, untouched.map(_.raw)), p.statCols, p.bloom,
+      Map(metaKey -> p.version.toString), p.sStatCols,
+      countsComplete = linesCounted(p, untouched), basedOnPrev = p.version)
+    DeleteResult(nv, matched, cand.size, p.files.size)
   }
 
   /** SHALLOW CLONE: a new table whose first version REFERENCES the
@@ -1309,24 +1519,20 @@ object SnapTable {
   def shallowClone(spark: SparkSession, srcDir: String, dstDir: String,
                    version: Int = 0): Int = {
     val sf = fs(spark, srcDir)
-    val v = if (version > 0) version else latestVersion(spark, srcDir)
-    require(v > 0, s"no committed version at $srcDir")
+    val p = plan(spark, srcDir, version)
     require(latestVersion(spark, dstDir) == 0, s"clone target $dstDir not empty")
-    val info = parseManifest(sf, srcDir, v)
-    val lines = info.files.map { e =>
-      val abs = sf.makeQualified(new Path(resolvePath(srcDir, e.rel)))
-        .toUri.getPath
-      abs + e.raw.stripPrefix(e.rel)
+    val lines = p.files.map { e =>
+      sf.makeQualified(new Path(e.path)).toUri.getPath + e.raw.stripPrefix(e.rel)
     }
     val header =
-      (if (info.statCols.nonEmpty) Seq(s"#stats:${info.statCols.mkString(",")}")
+      (if (p.statCols.nonEmpty) Seq(s"#stats:${p.statCols.mkString(",")}")
        else Nil) ++
-        info.bloom.map { case (c, m) => s"#bloom:$c:$m" }.toSeq ++
-        info.schema.map(s => s"#schema:$s").toSeq ++
-        (if (info.sStatCols.nonEmpty)
-           Seq(s"#sstats:${info.sStatCols.mkString(",")}") else Nil) ++
-        (if (linesCounted(info.files)) Seq("#counts:full") else Nil) ++
-        Seq(s"#meta:clonedFrom=$srcDir@v$v")
+        p.bloom.map { case (c, m) => s"#bloom:$c:$m" }.toSeq ++
+        p.schema.map(s => s"#schema:$s").toSeq ++
+        (if (p.sStatCols.nonEmpty)
+           Seq(s"#sstats:${p.sStatCols.mkString(",")}") else Nil) ++
+        (if (linesCounted(p, p.files)) Seq("#counts:full") else Nil) ++
+        Seq(s"#meta:clonedFrom=$srcDir@v${p.version}")
     val df = fs(spark, dstDir)
     val manifest = manifestPath(dstDir, 1)
     if (df.exists(manifest)) throw new CommitConflictException(1)
@@ -1386,12 +1592,8 @@ object SnapTable {
   /** Relative data-file paths of a committed version, in manifest
     * order — the immutable membership a derived consumer (incremental
     * MV, index append, CDC reader) can re-derive forever. */
-  def files(spark: SparkSession, dir: String, version: Int = 0): Seq[String] = {
-    val f = fs(spark, dir)
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    require(v > 0, s"no committed version at $dir")
-    parseManifest(f, dir, v).files.map(_.rel)
-  }
+  def files(spark: SparkSession, dir: String, version: Int = 0): Seq[String] =
+    plan(spark, dir, version).files.map(_.rel)
 
   /** Commit metadata (`#meta:` header lines) of a version. */
   def meta(spark: SparkSession, dir: String, version: Int = 0): Map[String, String] = {
@@ -1412,19 +1614,16 @@ object SnapTable {
     * same fragment problem DedupIndex.compact solves for buckets). A
     * declared bloom column re-sketches on the new layout. */
   def compact(spark: SparkSession, dir: String, targetFiles: Int): Int = {
-    val f = fs(spark, dir)
-    val v = latestVersion(spark, dir)
-    require(v > 0, s"no committed version at $dir")
-    val info = parseManifest(f, dir, v)
+    val p = plan(spark, dir)
     val cur = read(spark, dir)
-    val laidOut = info.statCols.headOption match {
+    val laidOut = p.statCols.headOption match {
       case Some(c) => cur.repartitionByRange(targetFiles, col(c))
       case None    => cur.repartition(targetFiles)
     }
     writeCommit(spark, dir, laidOut, carriedDf(spark, Nil),
-      info.statCols, info.bloom,
-      Map("compactedFrom" -> v.toString), info.sStatCols,
-      basedOnPrev = v)._1
+      p.statCols, p.bloom,
+      Map("compactedFrom" -> p.version.toString), p.sStatCols,
+      basedOnPrev = p.version)._1
   }
 
   /** OPTIMIZE ZORDER (round 13): rewrite the current snapshot
@@ -1444,10 +1643,7 @@ object SnapTable {
                     targetFiles: Int, zCols: Seq[String]): Int = {
     require(zCols.size == 2,
       s"compactZorder interleaves exactly 2 columns, got $zCols")
-    val f = fs(spark, dir)
-    val v = latestVersion(spark, dir)
-    require(v > 0, s"no committed version at $dir")
-    val info = parseManifest(f, dir, v)
+    val p = plan(spark, dir)
     val cur = read(spark, dir)
     zCols.foreach { c =>
       val dt = cur.schema(c).dataType
@@ -1482,10 +1678,10 @@ object SnapTable {
       .sortWithinPartitions("_zkey")
       .drop("_zkey")
     writeCommit(spark, dir, laidOut, carriedDf(spark, Nil),
-      info.statCols, info.bloom,
-      Map("zorderedFrom" -> v.toString,
+      p.statCols, p.bloom,
+      Map("zorderedFrom" -> p.version.toString,
         "zorderCols" -> zCols.mkString(",")),
-      info.sStatCols, basedOnPrev = v)._1
+      p.sStatCols, basedOnPrev = p.version)._1
   }
 
   /** Read a snapshot (default: latest). The scan is exactly the
@@ -1499,35 +1695,14 @@ object SnapTable {
   def readWhere(spark: SparkSession, dir: String, version: Int = 0,
                 statCol: String = null, lo: Long = Long.MinValue,
                 hi: Long = Long.MaxValue): ScanPlan = {
-    val f = fs(spark, dir)
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    require(v > 0, s"no committed version at $dir")
-    val info = parseManifest(f, dir, v)
-    val keep =
-      if (statCol == null) info.files
-      else {
-        val k = info.statCols.indexOf(statCol)
-        require(k >= 0, s"no recorded stats for $statCol (have ${info.statCols})")
-        info.files.filter { e =>
-          e.ranges(k) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi // ranges intersect
-            case None           => true                 // unknown: never prune
-          }
-        }
-      }
+    val p = plan(spark, dir, version)
+    val keep = candidates(p, rangeFilters(p, statCol, lo, hi))
     require(keep.nonEmpty, "empty scan set: no file can match")
-    // the manifest's recorded schema (when present) is the READ schema:
-    // under add-column evolution, files committed before a column was
-    // added lack it physically — the declared schema makes the parquet
-    // reader null-fill them instead of failing or silently dropping the
-    // column depending on which file's footer got sampled
-    val reader = info.schema.map(sc => spark.read.schema(schemaOf(sc)))
-      .getOrElse(spark.read)
-    val df0 = reader.parquet(keep.map(e => resolvePath(dir, e.rel)): _*)
+    val df0 = readFiles(spark, p, keep)
     val df =
       if (statCol == null) df0
       else df0.filter(col(statCol) >= lo && col(statCol) <= hi)
-    ScanPlan(df, keep.size, info.files.size)
+    ScanPlan(df, keep.size, p.files.size)
   }
 
   /** POINT LOOKUP with bloom file skipping: scan only the files whose
@@ -1538,40 +1713,22 @@ object SnapTable {
     * functions mean the same table always opens the same files. */
   def readWhereEq(spark: SparkSession, dir: String, value: Long,
                   version: Int = 0): ScanPlan = {
-    val f = fs(spark, dir)
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    require(v > 0, s"no committed version at $dir")
-    val info = parseManifest(f, dir, v)
-    val (bc, m) = info.bloom.getOrElse(
+    val p = plan(spark, dir, version)
+    val (bc, _) = p.bloom.getOrElse(
       throw new IllegalArgumentException(s"no bloom column declared at $dir"))
-    // probe bit positions computed through the SAME Catalyst expression
-    // that built the bitmaps (bloomPositions — direct XxHash64 eval)
-    val (p1, p2) = bloomPositions(spark, value, m)
-    val zk = info.statCols.indexOf(bc)
-    val keep = info.files.filter { e =>
-      val zoneOk = zk < 0 || (e.ranges(zk) match {
-        case Some((mn, mx)) => mn <= value && value <= mx
-        case None           => true
-      })
-      zoneOk && (e.bloomHex match {
-        case Some(hex) => bloomHexHas(hex, p1) && bloomHexHas(hex, p2)
-        case None      => true // no bitmap recorded: never prune
-      })
-    }
+    // equality on the bloom column: its zone cell and both bloom bits
+    val keep = candidates(p, Seq(EqualTo(bc, value)))
     if (keep.isEmpty) {
       // provably-absent value: empty relation with the table's schema
-      val schema = info.schema.map(schemaOf).getOrElse(
-        spark.read.parquet(resolvePath(dir, info.files.head.rel)).schema)
+      val schema = p.schema.map(schemaOf).getOrElse(
+        spark.read.parquet(p.files.head.path).schema)
       return ScanPlan(
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           schema),
-        0, info.files.size)
+        0, p.files.size)
     }
-    val reader = info.schema.map(sc => spark.read.schema(schemaOf(sc)))
-      .getOrElse(spark.read)
-    val df = reader.parquet(keep.map(e => resolvePath(dir, e.rel)): _*)
-      .filter(col(bc).cast("long") === value)
-    ScanPlan(df, keep.size, info.files.size)
+    val df = readFiles(spark, p, keep).filter(col(bc).cast("long") === value)
+    ScanPlan(df, keep.size, p.files.size)
   }
 
   /** SNAPSHOT DIFF — the CDC report between two committed versions:

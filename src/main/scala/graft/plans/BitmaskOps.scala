@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** Native bitmask kernels for the dictionary-bitmask Jaccard family
   * (guide §4: per-row hot-path work as codegen'd JVM loops, not
@@ -76,12 +77,18 @@ case class Bitmask64(left: Expression, right: Expression)
     case _ => false
   }
 
+  // a foldable wmax is checked against the array limit at analysis; a
+  // column wmax fails the same check per row in build64
   override def checkInputDataTypes(): TypeCheckResult =
-    if (okArr(left.dataType) && right.dataType == LongType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bitmask64 expects (ARRAY<BIGINT>, BIGINT), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+    if (!okArr(left.dataType) || right.dataType != LongType)
+      TypeCheckResult.TypeCheckFailure(
+        s"bitmask64 expects (ARRAY<BIGINT>, BIGINT), got " +
+          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
+    else (if (right.foldable) right.eval() else null) match {
+      case w: Long if !Bitmask64.fits(w) =>
+        TypeCheckResult.TypeCheckFailure(Bitmask64.tooWide(w))
+      case _ => TypeCheckResult.TypeCheckSuccess
+    }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "bitmask64"
@@ -98,7 +105,17 @@ case class Bitmask64(left: Expression, right: Expression)
 }
 
 object Bitmask64 {
+  /** Most words one mask may hold: the largest JVM array Spark allocates. */
+  private val MaxWords = ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH.toLong
+
+  private[plans] def fits(wmax: Long): Boolean = wmax < MaxWords
+
+  private[plans] def tooWide(wmax: Long): String =
+    s"bitmask64: wmax $wmax asks for ${BigInt(wmax) + 1} words, more than " +
+      s"one array holds ($MaxWords)"
+
   def build64(tis: ArrayData, wmax: Long): ArrayData = {
+    if (!fits(wmax)) throw new IllegalArgumentException(tooWide(wmax))
     // wmax = -1 is the empty mask, and no word w >= 0 satisfies
     // w <= wmax < 0, so every negative wmax is the empty mask too
     val words = new Array[Long](math.max(wmax, -1L).toInt + 1)

@@ -139,9 +139,11 @@ final class SnapScanTable(declared: StructType, props: Map[String, String])
     * from plain SQL. `canDeleteWhere` accepts exactly the predicates
     * that translate losslessly to the library's Column condition —
     * anything else makes Spark fail the statement loudly rather than
-    * delete the wrong rows. The zone-map hint derives from the
-    * predicate's own conjuncts on stat columns (the condition implies
-    * each of its conjuncts, so the implied-range contract holds). */
+    * delete the wrong rows. Files prune through the scan's evaluator
+    * (SnapTable.canMatch) over every conjunct it understands — ranges,
+    * equality with the bloom bits, IN, OR, NOT and NULL tests alike;
+    * the condition implies each of its conjuncts, so a file no conjunct
+    * can match holds no row to delete. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(f => SnapScanTable.filterToColumn(f).isDefined)
 
@@ -155,11 +157,8 @@ final class SnapScanTable(declared: StructType, props: Map[String, String])
     val cond = filters.toSeq.flatMap(SnapScanTable.filterToColumn)
       .reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true))
-    val hint = SnapScanTable.deleteHint(spark, dir, filters.toSeq)
-    SnapTable.delete(spark, dir, cond,
-      pruneCol = hint.map(_._1).orNull,
-      lo = hint.map(_._2).getOrElse(Long.MinValue),
-      hi = hint.map(_._3).getOrElse(Long.MaxValue))
+    val prunable = filters.toSeq.filter(SnapTable.usableFilter(declared, _))
+    SnapTable.deleteMatching(spark, dir, cond, _ => prunable)
     ()
   }
   // BATCH_WRITE routes DataFrameWriter.save onto the V2 write plans;
@@ -280,53 +279,6 @@ object SnapScanTable {
       case _             => None
     }
   }
-
-  /** Zone-map hint for the COW delete: intersect the predicate's
-    * top-level conjuncts per stat column, take the first column any
-    * conjunct bounds. Sound because a condition implies each of its
-    * conjuncts — the delete's implied-range contract. */
-  private[sources] def deleteHint(spark: SparkSession, dir: String,
-                                  filters: Seq[Filter])
-      : Option[(String, Long, Long)] = {
-    val statCols =
-      try SnapTable.header(spark, dir).statCols
-      catch { case scala.util.control.NonFatal(_) => return None }
-    if (statCols.isEmpty) return None
-    def conjuncts(f: Filter): Seq[Filter] = f match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other     => Seq(other)
-    }
-    val flat = filters.flatMap(conjuncts)
-    def longOf(v: Any): Option[Long] = v match {
-      case l: Long  => Some(l)
-      case i: Int   => Some(i.toLong)
-      case s: Short => Some(s.toLong)
-      case b: Byte  => Some(b.toLong)
-      case _        => None
-    }
-    statCols.iterator.map { c =>
-      var lo = Long.MinValue; var hi = Long.MaxValue; var any = false
-      flat.foreach {
-        case EqualTo(a, v) if a == c => longOf(v).foreach { x =>
-          lo = math.max(lo, x); hi = math.min(hi, x); any = true }
-        case GreaterThan(a, v) if a == c => longOf(v).foreach { x =>
-          if (x < Long.MaxValue) { lo = math.max(lo, x + 1); any = true } }
-        case GreaterThanOrEqual(a, v) if a == c => longOf(v).foreach { x =>
-          lo = math.max(lo, x); any = true }
-        case LessThan(a, v) if a == c => longOf(v).foreach { x =>
-          if (x > Long.MinValue) { hi = math.min(hi, x - 1); any = true } }
-        case LessThanOrEqual(a, v) if a == c => longOf(v).foreach { x =>
-          hi = math.min(hi, x); any = true }
-        case In(a, vs) if a == c =>
-          val ls = vs.flatMap(longOf)
-          if (ls.length == vs.length && ls.nonEmpty) {
-            lo = math.max(lo, ls.min); hi = math.min(hi, ls.max); any = true
-          }
-        case _ => ()
-      }
-      (c, lo, hi, any)
-    }.collectFirst { case (c, lo, hi, true) => (c, lo, hi) }
-  }
 }
 
 /** A metadata-answerable pushed aggregate over a snapshot. */
@@ -348,57 +300,6 @@ object SnapScan {
   val RowLevelOpt = "__rowlevel"
 }
 
-object SnapScanBuilder {
-  /** A filter participates in file pruning when every referenced column
-    * is integer-typed (the manifest's zone cells are LONG) or
-    * string-typed (round-12 `#sstats:` truncated string bounds) — the
-    * evaluator itself decides per file what it can conclude. Shared by
-    * planning-time pushdown and round-13 runtime filtering (the pruning
-    * evaluator's value coercions only understand these shapes). */
-  private[sources] def usableFilter(full: StructType, f: Filter): Boolean = {
-    def integerCol(name: String): Boolean =
-      full.fields.exists(fd => fd.name == name && (fd.dataType match {
-        case LongType | IntegerType | ShortType | ByteType => true
-        case _ => false
-      }))
-    def stringCol(name: String): Boolean =
-      full.fields.exists(fd => fd.name == name && fd.dataType == StringType)
-    def str(v: Any): Boolean = v.isInstanceOf[String]
-    def integral(v: Any): Boolean = v match {
-      case _: Long | _: Int | _: Short | _: Byte => true
-      case _ => false
-    }
-    def usable(f: Filter): Boolean = f match {
-      case EqualTo(a, v) =>
-        (integerCol(a) && integral(v)) || (stringCol(a) && str(v))
-      case GreaterThan(a, v) =>
-        (integerCol(a) && integral(v)) || (stringCol(a) && str(v))
-      case GreaterThanOrEqual(a, v) =>
-        (integerCol(a) && integral(v)) || (stringCol(a) && str(v))
-      case LessThan(a, v) =>
-        (integerCol(a) && integral(v)) || (stringCol(a) && str(v))
-      case LessThanOrEqual(a, v) =>
-        (integerCol(a) && integral(v)) || (stringCol(a) && str(v))
-      case In(a, vs) =>
-        (integerCol(a) && vs.forall(integral)) ||
-          (stringCol(a) && vs.forall(str))
-      case StringStartsWith(a, _)   => stringCol(a)
-      // NULL-membership prunes off the round-12 per-file counts (any
-      // column type — the evaluator needs only the counts, not values)
-      case IsNull(_) | IsNotNull(_) => true
-      case And(l, r)                => usable(l) && usable(r)
-      case Or(l, r)                 => usable(l) && usable(r)
-      // negations prune through De Morgan + complement rewrites over
-      // the SAME shape set (round 13): NOT k=v prunes a file whose zone
-      // is [v,v], NOT k>v prunes like k<=v, NOT startsWith prunes a
-      // file whose whole range shares the prefix
-      case Not(inner)               => usable(inner)
-      case _                        => false
-    }
-    usable(f)
-  }
-}
-
 // not final: a row-level operation subclasses it to capture the built
 // scan (whose post-runtime-filter survivors are the replaced groups)
 class SnapScanBuilder(full: StructType, opts: Map[String, String])
@@ -410,8 +311,7 @@ class SnapScanBuilder(full: StructType, opts: Map[String, String])
   private var pushedFiltersAny: Boolean = false
   private var metaAgg: Seq[SnapAgg] = Nil
 
-  private def usable(f: Filter): Boolean =
-    SnapScanBuilder.usableFilter(full, f)
+  private def usable(f: Filter): Boolean = SnapTable.usableFilter(full, f)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     pushedFiltersAny = filters.nonEmpty
@@ -660,7 +560,7 @@ final class SnapScan(full: StructType, required: StructType,
         org.apache.spark.sql.GraftBridge.predicateToV1(p))
       .filter(f => f.references.nonEmpty &&
         (f.references.forall(_ == SnapScan.FileColumn) ||
-          SnapScanBuilder.usableFilter(full, f)))
+          SnapTable.usableFilter(full, f)))
     if (v1.nonEmpty) runtimeFilters = runtimeFilters ++ v1
   }
 
@@ -687,170 +587,12 @@ final class SnapScan(full: StructType, required: StructType,
     }
   }
 
+  // a file whose recorded row count is 0 can contribute nothing to ANY
+  // scan — dropped unconditionally (results can never change)
   private def pruneEntries(filters: Seq[Filter])
-      : Seq[SnapTable.PlanEntry] = {
-    val spark = SparkSession.active
-    val plan = tablePlan
-    val bloomPos = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-    def positions(v: Long, m: Int): (Long, Long) =
-      bloomPos.getOrElseUpdate(v, SnapTable.bloomPositions(spark, v, m))
-
-    def long(v: Any): Long = v match {
-      case l: Long => l; case i: Int => i.toLong
-      case s: Short => s.toLong; case b: Byte => b.toLong
-    }
-    // STRING bounds compare as unsigned UTF-8 bytes — exactly
-    // UTF8String's binary ordering, which is what the truncated
-    // manifest cells were derived under (Java String.compareTo orders
-    // UTF-16 units and DIVERGES for supplementary characters)
-    def sBytes(v: Any): Array[Byte] =
-      v.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    def cmpB(a: Array[Byte], b: Array[Byte]): Int = {
-      var i = 0
-      while (i < a.length && i < b.length) {
-        val d = (a(i) & 0xff) - (b(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      a.length - b.length
-    }
-    // smallest byte string strictly greater than every string with
-    // prefix p: increment the last non-0xFF byte and truncate; all-0xFF
-    // has no successor (None = no upper constraint)
-    def succB(p: Array[Byte]): Option[Array[Byte]] = {
-      var i = p.length - 1
-      while (i >= 0 && p(i) == 0xff.toByte) i -= 1
-      if (i < 0) None
-      else {
-        val out = java.util.Arrays.copyOf(p, i + 1)
-        out(i) = (out(i) + 1).toByte
-        Some(out)
-      }
-    }
-    // tri-state "this file CAN contain a matching row": unknown → true
-    val FileCol = SnapScan.FileColumn
-    def canMatch(e: SnapTable.PlanEntry, f: Filter): Boolean = f match {
-      // `_file` is exact membership, not a zone: the runtime group
-      // filter hands back the very paths this scan emitted
-      case EqualTo(`FileCol`, v: String) => e.path == v
-      case In(`FileCol`, vs) => vs.exists(v => e.path == v)
-      case EqualTo(a, v: String) =>
-        e.sRanges.get(a).forall { case (lo, hi) =>
-          val b = sBytes(v); cmpB(lo, b) <= 0 && cmpB(b, hi) <= 0
-        }
-      case EqualTo(a, v) =>
-        val value = long(v)
-        val zoneOk = e.ranges.get(a) match {
-          case Some((mn, mx)) => mn <= value && value <= mx
-          case None           => true
-        }
-        val bloomOk = plan.bloom match {
-          case Some((bc, m)) if bc == a => e.bloomHex match {
-            case Some(hex) =>
-              val (p1, p2) = positions(value, m)
-              SnapTable.bloomHexHas(hex, p1) && SnapTable.bloomHexHas(hex, p2)
-            case None => true
-          }
-          case _ => true
-        }
-        zoneOk && bloomOk
-      case GreaterThan(a, v: String) =>
-        e.sRanges.get(a).forall { case (_, hi) => cmpB(hi, sBytes(v)) > 0 }
-      case GreaterThan(a, v) =>
-        e.ranges.get(a).forall { case (_, mx) => mx > long(v) }
-      case GreaterThanOrEqual(a, v: String) =>
-        e.sRanges.get(a).forall { case (_, hi) => cmpB(hi, sBytes(v)) >= 0 }
-      case GreaterThanOrEqual(a, v) =>
-        e.ranges.get(a).forall { case (_, mx) => mx >= long(v) }
-      case LessThan(a, v: String) =>
-        e.sRanges.get(a).forall { case (lo, _) => cmpB(lo, sBytes(v)) < 0 }
-      case LessThan(a, v) =>
-        e.ranges.get(a).forall { case (mn, _) => mn < long(v) }
-      case LessThanOrEqual(a, v: String) =>
-        e.sRanges.get(a).forall { case (lo, _) => cmpB(lo, sBytes(v)) <= 0 }
-      case LessThanOrEqual(a, v) =>
-        e.ranges.get(a).forall { case (mn, _) => mn <= long(v) }
-      // a string with prefix p lies in [p, succ(p)): the file can hold
-      // one iff its [lo, hi] intersects that range (conservative under
-      // the cells' own truncation — lo <= trueMin, hi >= trueMax)
-      case StringStartsWith(a, pfx) =>
-        e.sRanges.get(a).forall { case (lo, hi) =>
-          val p = sBytes(pfx)
-          cmpB(hi, p) >= 0 && succB(p).forall(sp => cmpB(lo, sp) < 0)
-        }
-      case In(a, vs)  => vs.exists(v => canMatch(e, EqualTo(a, v)))
-      // NULL-membership from the per-file counts (round 12): a file
-      // whose non-null count for a STAT column equals its row count
-      // holds no NULLs there; one whose non-null count is 0 holds
-      // nothing BUT NULLs. Absent counts (legacy lines, non-stat
-      // columns) → unknown → never prune.
-      case IsNull(a) =>
-        (e.nRows, e.nonNull.get(a)) match {
-          case (Some(n), Some(nn)) => nn < n
-          case _                   => true
-        }
-      case IsNotNull(a) =>
-        e.nonNull.get(a) match {
-          case Some(nn) => nn > 0
-          // a zero-row file can't match ANY predicate; recorded row
-          // count 0 prunes even without a per-column non-null count
-          case None     => !e.nRows.contains(0L)
-        }
-      case And(l, r)  => canMatch(e, l) && canMatch(e, r)
-      case Or(l, r)   => canMatch(e, l) || canMatch(e, r)
-      case Not(inner) => canMatchNeg(e, inner)
-      case _          => true
-    }
-    // tri-state "this file CAN contain a row where `f` is FALSE" (a row
-    // where f is NULL does not match NOT f under SQL semantics, and the
-    // zone cells describe only non-null values — so the complement
-    // rewrites below are exact): unknown → true, never prune
-    def canMatchNeg(e: SnapTable.PlanEntry, f: Filter): Boolean = f match {
-      // NOT k=v: prunable only when the zone PROVES every non-null
-      // value equals v. For strings the bounds are truncated (Iceberg
-      // rule) — lo==hi only proves min==max when the cell is shorter
-      // than the 16-byte truncation width (an untruncated bound IS the
-      // value)
-      case EqualTo(a, v: String) =>
-        !e.sRanges.get(a).exists { case (lo, hi) =>
-          val b = sBytes(v)
-          b.length < 16 && java.util.Arrays.equals(lo, b) &&
-            java.util.Arrays.equals(hi, b)
-        }
-      case EqualTo(a, v) =>
-        !e.ranges.get(a).contains((long(v), long(v)))
-      // complements of the range shapes are ranges themselves; the
-      // zone checks already quantify over non-null values only
-      case GreaterThan(a, v)        => canMatch(e, LessThanOrEqual(a, v))
-      case GreaterThanOrEqual(a, v) => canMatch(e, LessThan(a, v))
-      case LessThan(a, v)           => canMatch(e, GreaterThanOrEqual(a, v))
-      case LessThanOrEqual(a, v)    => canMatch(e, GreaterThan(a, v))
-      case IsNull(a)                => canMatch(e, IsNotNull(a))
-      case IsNotNull(a)             => canMatch(e, IsNull(a))
-      // NOT IN prunes when the zone proves all values equal some
-      // member — exactly when some member's NOT= pruned
-      case In(a, vs) => vs.forall(v => canMatchNeg(e, EqualTo(a, v)))
-      // NOT startsWith(p): if BOTH recorded bounds start with p, every
-      // string in [lo, hi] must too (binary order: a string below the
-      // prefix sorts before lo, above it sorts after hi) — even under
-      // truncation, [trueMin, trueMax] ⊆ [lo, hi]
-      case StringStartsWith(a, pfx) =>
-        !e.sRanges.get(a).exists { case (lo, hi) =>
-          val p = sBytes(pfx)
-          lo.length >= p.length && hi.length >= p.length &&
-            java.util.Arrays.equals(java.util.Arrays.copyOf(lo, p.length), p) &&
-            java.util.Arrays.equals(java.util.Arrays.copyOf(hi, p.length), p)
-        }
-      case And(l, r)  => canMatchNeg(e, l) || canMatchNeg(e, r) // De Morgan
-      case Or(l, r)   => canMatchNeg(e, l) && canMatchNeg(e, r)
-      case Not(inner) => canMatch(e, inner)
-      case _          => true
-    }
-    // a file whose recorded row count is 0 can contribute nothing to
-    // ANY scan — dropped unconditionally (results can never change)
-    plan.files.filter(e =>
-      !e.nRows.contains(0L) && filters.forall(f => canMatch(e, f)))
-  }
+      : Seq[SnapTable.PlanEntry] =
+    tablePlan.files.filter(e =>
+      !e.nRows.contains(0L) && SnapTable.canMatchAll(tablePlan, e, filters))
 
   def survivors: Seq[String] = survivorEntries.map(_.path)
 

@@ -64,6 +64,22 @@ class BitmaskOpsSpec extends AnyFunSuite {
     assert(byCol.getSeq[Long](0).isEmpty)
   }
 
+  test("bitmask64 rejects a wmax wider than one array: literal at analysis, column per row") {
+    // 2^32 used to wrap to 0 words (ArrayIndexOutOfBoundsException) and
+    // Int.MaxValue to a negative size (NegativeArraySizeException)
+    Seq(4294967296L, Int.MaxValue.toLong).foreach { w =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT bitmask64(array(64L), ${w}L)").collect())
+      assert(e.getMessage.contains("bitmask64"), e.getMessage)
+    }
+    val e = intercept[Exception](spark.range(1)
+      .selectExpr("array(64L) AS tis", "id + 4294967296L AS wmax")
+      .selectExpr("bitmask64(tis, wmax)").collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("bitmask64: wmax 4294967296")), msgs.mkString("\n"))
+  }
+
   test("kernels participate in whole-stage codegen") {
     val df = spark.range(100)
       .selectExpr("array(id, id * 7L) AS a", "array(id, id + 1L) AS b",

@@ -2,7 +2,7 @@ package graft
 
 import graft.operators.SnapTable
 import graft.sources.SnapScan
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,26 +11,21 @@ import org.scalatest.funsuite.AnyFunSuite
   * randomized snapshot (skewed keys, nulls in the bloom column, several
   * append commits with different layouts), every randomized
   * range/eq/IN/AND/OR predicate must return EXACTLY the rows of the
-  * unpruned relation filtered post-hoc — file pruning is a pure
+  * unpruned relation filtered post-hoc — through the connector's scan
+  * and through every library caller of the same evaluator
+  * (`readWhere`, `readWhereEq`, `delete`) — file pruning is a pure
   * optimization and a pruning bug is the class that silently returns
   * wrong (not slow) answers. Deterministic seeds: a failure
   * reproduces. Also asserts the guard is non-vacuous: across the
   * predicate sweep, pruning must actually fire (some predicate scans
   * strictly fewer than all files) — otherwise this spec would pass on
   * a scanner that never prunes. */
-class GraftSnapPropSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
-
-  private def scanOf(df: DataFrame): SnapScan = {
-    df.collect()
-    df.queryExecution.executedPlan.collectFirst {
-      case b: BatchScanExec => b.scan.asInstanceOf[SnapScan]
-    }.getOrElse(fail("no BatchScanExec in plan"))
-  }
-
-  test("randomized predicates: pruned scan ≡ unpruned + filter, at every seed") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-snap-prop").toString + "/t"
+object GraftSnapPropSpec {
+  /** The randomized three-commit snapshot at `dir`: 4000 rows of (id,
+    * k, bk, v) with skewed keys `k` (the stat column) and ~8% null
+    * bloom keys `bk`, committed in three different physical layouts.
+    * Returns the rows as a local relation. */
+  def threeCommitTable(spark: SparkSession, dir: String): DataFrame = {
     val rnd = new scala.util.Random(20260816L)
     // skewed key distribution + ~8% null bloom keys
     val rows = (0 until 4000).map { i =>
@@ -53,6 +48,24 @@ class GraftSnapPropSpec extends AnyFunSuite {
     SnapTable.commit(spark, dir,
       df.filter(col("id") % 3 === 2).coalesce(1),
       append = true, statCols = Seq("k"), bloomCol = "bk", bloomBits = 2048)
+    df
+  }
+}
+
+class GraftSnapPropSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  private def scanOf(df: DataFrame): SnapScan = {
+    df.collect()
+    df.queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b.scan.asInstanceOf[SnapScan]
+    }.getOrElse(fail("no BatchScanExec in plan"))
+  }
+
+  test("randomized predicates: pruned scan ≡ unpruned + filter, at every seed") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-snap-prop")
+    val dir = tmp.toString + "/t"
+    GraftSnapPropSpec.threeCommitTable(spark, dir)
 
     val all = spark.read.format("graft-snap").load(dir)
     val reference = all.collect()
@@ -64,42 +77,95 @@ class GraftSnapPropSpec extends AnyFunSuite {
 
     var anyPruned = false
     val prnd = new scala.util.Random(7L)
-    def randPred(): Column = prnd.nextInt(9) match {
-      case 0 => col("k") === prnd.nextInt(5200).toLong
-      case 1 => col("k") >= prnd.nextInt(5200).toLong
+    // each draw: the predicate, the k range it implies (the readWhere /
+    // delete hint), and a bloom-column probe value (readWhereEq)
+    final case class Draw(p: Column, range: Option[(Long, Long)],
+                          eq: Option[Long])
+    def randPred(): Draw = prnd.nextInt(9) match {
+      case 0 =>
+        val v = prnd.nextInt(5200).toLong
+        Draw(col("k") === v, Some((v, v)), None)
+      case 1 =>
+        val v = prnd.nextInt(5200).toLong
+        Draw(col("k") >= v, Some((v, Long.MaxValue)), None)
       case 2 =>
         val lo = prnd.nextInt(5000).toLong
-        col("k").between(lo, lo + prnd.nextInt(400).toLong)
-      case 3 => col("bk") === prnd.nextInt(400).toLong
-      case 4 => col("bk").isin(
-        (0 until 1 + prnd.nextInt(4)).map(_ => prnd.nextInt(400).toLong): _*)
+        val hi = lo + prnd.nextInt(400).toLong
+        Draw(col("k").between(lo, hi), Some((lo, hi)), None)
+      case 3 =>
+        val v = prnd.nextInt(400).toLong
+        Draw(col("bk") === v, None, Some(v))
+      case 4 => Draw(col("bk").isin(
+        (0 until 1 + prnd.nextInt(4)).map(_ => prnd.nextInt(400).toLong): _*),
+        None, None)
       case 5 =>
         // composite: AND/OR over a range and a bloom point
-        val base = col("k") <= prnd.nextInt(5000).toLong
-        val pt = col("bk") === prnd.nextInt(400).toLong
-        if (prnd.nextBoolean()) base && pt else base || pt
+        val hi = prnd.nextInt(5000).toLong
+        val v = prnd.nextInt(400).toLong
+        val base = col("k") <= hi
+        val pt = col("bk") === v
+        if (prnd.nextBoolean()) Draw(base && pt, Some((Long.MinValue, hi)), Some(v))
+        else Draw(base || pt, None, None)
       // round-13 negations — the complement-rewrite pruning paths must
       // hold exactness under the same sweep (nulls in bk make SQL's
       // "NULL doesn't match NOT f" semantics load-bearing)
-      case 6 => !(col("k") === prnd.nextInt(5200).toLong)
-      case 7 => !(col("k") >= prnd.nextInt(5200).toLong)
+      case 6 => Draw(!(col("k") === prnd.nextInt(5200).toLong), None, None)
+      case 7 => Draw(!(col("k") >= prnd.nextInt(5200).toLong), None, None)
       case 8 =>
-        if (prnd.nextBoolean()) !col("bk").isin(
-          (0 until 1 + prnd.nextInt(3)).map(_ => prnd.nextInt(400).toLong): _*)
-        else !(col("k") <= prnd.nextInt(5000).toLong &&
-          col("bk") === prnd.nextInt(400).toLong)
+        if (prnd.nextBoolean()) Draw(!col("bk").isin(
+          (0 until 1 + prnd.nextInt(3)).map(_ => prnd.nextInt(400).toLong): _*),
+          None, None)
+        else Draw(!(col("k") <= prnd.nextInt(5000).toLong &&
+          col("bk") === prnd.nextInt(400).toLong), None, None)
     }
+    var libPruned = false
+    var deletePruned = false
     (1 to 40).foreach { i =>
-      val p = randPred()
+      val Draw(p, range, eq) = randPred()
       val pruned = spark.read.format("graft-snap").load(dir).filter(p)
       val got = canon(pruned)
       val want = canon(all.filter(p))
       assert(got === want, s"trial $i diverged for predicate $p")
       val sc = scanOf(pruned)
       if (sc.survivors.size < sc.total) anyPruned = true
+      range.foreach { case (lo, hi) =>
+        // a range no file can hold is the documented empty-scan error
+        val (rows, scanned) =
+          try {
+            val sp = SnapTable.readWhere(spark, dir, 0, "k", lo, hi)
+            (canon(sp.df), sp.filesScanned)
+          } catch {
+            case e: IllegalArgumentException
+                if e.getMessage.contains("empty scan set") => (Nil, 0)
+          }
+        assert(rows === canon(all.filter(col("k").between(lo, hi))),
+          s"trial $i: readWhere($lo, $hi) diverged")
+        if (scanned < sc.total) libPruned = true
+      }
+      eq.foreach { v =>
+        assert(canon(SnapTable.readWhereEq(spark, dir, v).df) ===
+          canon(all.filter(col("bk") === v)), s"trial $i: readWhereEq($v) diverged")
+      }
+      if (i % 3 == 0) {
+        // delete on a shallow clone, hinted by the implied range when
+        // the draw has one: survivors = the rows where p is not TRUE
+        val clone = s"$tmp/del$i"
+        SnapTable.shallowClone(spark, dir, clone)
+        val (lo, hi) = range.getOrElse((Long.MinValue, Long.MaxValue))
+        val res = SnapTable.delete(spark, clone, p,
+          if (range.isDefined) "k" else null, lo, hi)
+        assert(canon(SnapTable.read(spark, clone)) ===
+          canon(all.filter(!coalesce(p, lit(false)))),
+          s"trial $i: delete diverged for predicate $p")
+        assert(res.rowsDeleted === all.filter(p).count())
+        if (res.rowsDeleted > 0 && res.filesRewritten < res.filesTotal)
+          deletePruned = true
+      }
     }
     assert(anyPruned,
       "vacuous sweep: no predicate pruned any file — the guard proves nothing")
+    assert(libPruned, "vacuous sweep: no readWhere range pruned any file")
+    assert(deletePruned, "vacuous sweep: every delete rewrote every file")
   }
 
   test("randomized STRING predicates: pruned scan ≡ unpruned + filter") {

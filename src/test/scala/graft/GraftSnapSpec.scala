@@ -599,4 +599,43 @@ class GraftSnapSpec extends AnyFunSuite {
     val unprunedRows = SnapTable.read(spark, dir).count()
     assert(stats.numRows().getAsLong < unprunedRows)
   }
+
+  test("SQL DELETE prunes an OR of ranges and a bloom equality like a scan") {
+    // neither predicate bounds the stat column with a top-level
+    // conjunct, so a single (column, lo, hi) hint would rewrite every
+    // file; the scan's evaluator rewrites only the files that can hold
+    // a matching row
+    spark.conf.set("spark.sql.catalog.snapg",
+      classOf[graft.sources.SnapCatalog].getName)
+    spark.conf.set("spark.sql.catalog.snapg.warehouse",
+      "target/graft-snap-sqldel")
+    val d = "target/graft-snap-sqldel/db/d"
+    SnapTable.destroy(spark, d)
+    SnapTable.commit(spark, d,
+      spark.range(1000).selectExpr("id", "id AS k", "(id * 7) % 1000 AS b")
+        .repartitionByRange(8, col("k")),
+      statCols = Seq("k"), bloomCol = "b", bloomBits = 4096)
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    def deleteVia(where: String, gone: Long => Boolean): Unit = {
+      val v0 = SnapTable.latestVersion(spark, d)
+      val before = SnapTable.files(spark, d).toSet
+      val rowsBefore = rowsOf(SnapTable.read(spark, d))
+      val want = rowsBefore.filterNot(gone)
+      assert(want.size < rowsBefore.size, s"vacuous: $where matches nothing")
+      spark.sql(s"DELETE FROM snapg.db.d WHERE $where")
+      val after = SnapTable.files(spark, d).toSet
+      val rewritten = before.diff(after)
+      assert(rewritten.nonEmpty && rewritten.size < before.size,
+        s"DELETE WHERE $where rewrote ${rewritten.size}/${before.size} files")
+      assert(rowsOf(SnapTable.read(spark, d)) === want, s"rows after $where")
+      // history still reads: the pre-delete version is intact
+      assert(rowsOf(SnapTable.read(spark, d, v0)) === rowsBefore)
+      assert(SnapTable.history(spark, d).count() === v0 + 1)
+    }
+    deleteVia("k < 100 OR k >= 900", id => id < 100 || id >= 900)
+    // 7 is invertible mod 1000, so only row 500 carries b = 500
+    deleteVia("b = 500", id => (id * 7) % 1000 == 500)
+    SnapTable.destroy(spark, d)
+  }
 }
