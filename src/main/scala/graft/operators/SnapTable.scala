@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.Abs
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, GreaterThan,
   GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not,
@@ -557,16 +559,26 @@ object SnapTable {
         org.apache.spark.sql.types.DataType.fromDDL(t))
     })
 
-  /** The committed version's recorded schema, if the manifest carries
-    * one (round 12+) — the authoritative READ schema under add-column
-    * evolution: files older than an added column null-fill it. */
-  private[graft] def headerSchemaOf(spark: SparkSession, dir: String,
-                                    version: Int = 0)
-      : Option[org.apache.spark.sql.types.StructType] = {
+  /** The READ schema of a committed version: the manifest's recorded
+    * `#schema:` header (round 12+; authoritative under add-column
+    * evolution, where files older than an added column null-fill it, and
+    * read without opening any data file), else, for a legacy manifest
+    * whose files share one schema, one footer read of its first data
+    * file. A legacy version with no data files has no schema to read:
+    * the caller must declare one. */
+  private[graft] def readSchema(spark: SparkSession, dir: String,
+                                version: Int = 0)
+      : org.apache.spark.sql.types.StructType = {
     val f = fs(spark, dir)
     val v = if (version > 0) version else latestVersion(spark, dir)
     require(v > 0, s"no committed version at $dir")
-    readHeader(f, dir, v).schema.map(schemaOf)
+    readHeader(f, dir, v).schema.map(schemaOf).getOrElse {
+      val files = parseManifest(f, dir, v).files
+      require(files.nonEmpty,
+        s"snapshot table $dir version $v records no schema and has no data " +
+          "files; declare a schema to read it as an empty relation")
+      spark.read.parquet(files.head.path).schema
+    }
   }
 
   /** Header-only config of a committed version: (statCols, bloom) —
@@ -1720,8 +1732,7 @@ object SnapTable {
     val keep = candidates(p, Seq(EqualTo(bc, value)))
     if (keep.isEmpty) {
       // provably-absent value: empty relation with the table's schema
-      val schema = p.schema.map(schemaOf).getOrElse(
-        spark.read.parquet(p.files.head.path).schema)
+      val schema = readSchema(spark, dir, p.version)
       return ScanPlan(
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           schema),
@@ -1758,25 +1769,28 @@ object SnapTable {
     // (max(x−y,0) on one side is nonzero only when the other side's is
     // zero, and |d| is that nonzero count; NULL group keys compare
     // equal in both formulations). SnapDiffEquivSpec pins row-level
-    // multiset equality against the exceptAll form.
+    // multiset equality against the exceptAll form. The replication is
+    // a streaming generator (`RepeatRows`), so no task holds |d| of
+    // anything for a row repeated |d| times.
     // the helper columns take names no table column has (compared
     // case-insensitively, as the analyzer resolves them), so a table with
-    // a `_w`, `_d` or `_i` column diffs like any other
+    // a `_w` or `_d` column diffs like any other
     val cols = b.columns.toSeq
     val taken = cols.map(_.toLowerCase).toSet
     def fresh(base: String): String =
       Iterator.iterate(base)(_ + "_").find(n => !taken(n.toLowerCase)).get
-    val (w, d, i) = (fresh("_w"), fresh("_d"), fresh("_i"))
+    val (w, d) = (fresh("_w"), fresh("_d"))
+    def attr(n: String) = UnresolvedAttribute.quoted(n)
     b.select(cols.map(col) :+ lit(1L).as(w): _*)
       .unionByName(a.select(cols.map(col) :+ lit(-1L).as(w): _*))
       .groupBy(cols.map(col): _*)
       .agg(sum(col(w)).as(d))
       .filter(col(d) =!= 0L)
-      .select(cols.map(col) :+
-        when(col(d) > 0L, lit("added")).otherwise(lit("removed"))
-          .as("change") :+
-        explode(sequence(lit(1L), abs(col(d)))).as(i): _*)
-      .select((cols :+ "change").map(col): _*)
+      .withColumn("change",
+        when(col(d) > 0L, lit("added")).otherwise(lit("removed")))
+      .select(org.apache.spark.sql.GraftBridge.column(
+        graft.plans.RepeatRows(Abs(attr(d)) +: (cols :+ "change").map(attr)))
+        .as(cols :+ "change"))
   }
 
   /** DESCRIBE HISTORY: one row per surviving committed version —

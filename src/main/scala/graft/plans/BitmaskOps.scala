@@ -19,7 +19,10 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
   * near-dedup verify joins (q28/qd1/qd24/qc1/qc3/TrainingData.clean).
   * Same result by construction: both forms reduce bit_count(a & b) over
   * index-aligned words (masks share one dictionary, so widths match;
-  * the min-length guard only defends malformed input).
+  * the min-length guard only defends malformed input), and a NULL word
+  * makes the result NULL, as `x & NULL` does in the lambda form. Only an
+  * input type whose elements may be NULL pays that check: `bitmask64`
+  * masks never carry one.
   *
   * `bitmask64(tis, wmax)` — the (wmax+1)-word bitmask with bit t set at
   * word t/64, position t%64, for every t in `tis` with 0 ≤ t/64 ≤ wmax.
@@ -47,11 +50,24 @@ case class PopcountAnd(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "popcount_and"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PopcountAnd.popAnd(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  private lazy val nullWords = Seq(left, right).exists(_.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  })
+  override def nullable: Boolean = super.nullable || nullWords
+
+  override protected def nullSafeEval(a: Any, b: Any): Any = {
+    val s = PopcountAnd.popAnd(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData], nullWords)
+    if (s < 0) null else s
+  }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.PopcountAnd.popAnd($a, $b)")
+    if (!nullWords)
+      defineCodeGen(ctx, ev, (a, b) => s"graft.plans.PopcountAnd.popAnd($a, $b, false)")
+    else nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.plans.PopcountAnd.popAnd($a, $b, true);
+         |${ev.isNull} = ${ev.value} < 0;""".stripMargin)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -59,10 +75,13 @@ case class PopcountAnd(left: Expression, right: Expression)
 }
 
 object PopcountAnd {
-  def popAnd(a: ArrayData, b: ArrayData): Long = {
+  /** Σ bit_count(a[i] & b[i]) over the common prefix, or -1 when `nulls`
+    * is set and a word there is NULL. */
+  def popAnd(a: ArrayData, b: ArrayData, nulls: Boolean): Long = {
     val n = math.min(a.numElements(), b.numElements())
     var i = 0; var s = 0L
     while (i < n) {
+      if (nulls && (a.isNullAt(i) || b.isNullAt(i))) return -1L
       s += java.lang.Long.bitCount(a.getLong(i) & b.getLong(i))
       i += 1
     }

@@ -35,8 +35,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * Output: ARRAY<BIGINT> of length 2145, layout [n, s_1..s_64,
   * m_{1,1}, m_{1,2}, .., m_{1,64}, m_{2,2}, .., m_{64,64}] (row-major
-  * upper triangle). NULL arrays and arrays of length ≠ 64 are skipped
-  * (callers pre-filter; the guard keeps the kernel total).
+  * upper triangle). NULL arrays, arrays of length ≠ 64 and arrays
+  * holding a NULL element are skipped (callers pre-filter; the guard
+  * keeps the kernel total, and a NULL element is never read as 0).
   */
 case class CovAccum64(
     child: Expression,
@@ -59,7 +60,7 @@ case class CovAccum64(
     val v = child.eval(row)
     if (v != null) {
       val arr = v.asInstanceOf[ArrayData]
-      if (arr.numElements() == D) {
+      if (arr.numElements() == D && !(0 until D).exists(arr.isNullAt)) {
         val x = new Array[Long](D)
         var i = 0
         while (i < D) { x(i) = arr.getLong(i); i += 1 }

@@ -39,6 +39,8 @@ object NativeFunctions {
     fn("fuzzy_min_ms", 1)(a => FuzzyMs(a(0), isMin = true)),
     fn("fuzzy_max_ms", 1)(a => FuzzyMs(a(0), isMin = false)),
     fn("morton2", 2)(a => Morton2(a(0), a(1))),
+    // dot_long reads a NULL element as 0 by contract: the oracle's
+    // SUM(u.xi * v.xi) join skips a NULL product the same way
     fn("dot_long", 2)(a => DotLong(a(0), a(1))),
     fn("roll_hash31", 1)(a => RollHash31(a(0))),
     fn("shingle_set_hash31", 2)(a => ShingleSetHash31(a(0), a(1))),

@@ -81,18 +81,7 @@ class GraftSnap extends TableProvider with DataSourceRegister {
     val spark = SparkSession.active
     val dir = pathOf(options)
     val version = Option(options.get("version")).map(_.toInt).getOrElse(0)
-    // the manifest's recorded schema is authoritative (round 12): under
-    // add-column evolution the files do NOT share one physical schema,
-    // and sampling a pre-evolution footer would silently drop the added
-    // columns; it is also zero file opens
-    SnapTable.headerSchemaOf(spark, dir, version).getOrElse {
-      val plan = SnapTable.plan(spark, dir, version)
-      require(plan.files.nonEmpty,
-        s"graft-snap: version ${plan.version} has no data files; declare " +
-          "a schema with .schema(...) to read it as an empty relation")
-      // legacy manifest: one footer read — those files share one schema
-      spark.read.parquet(plan.files.head.path).schema
-    }
+    SnapTable.readSchema(spark, dir, version)
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],

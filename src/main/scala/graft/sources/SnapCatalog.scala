@@ -80,13 +80,8 @@ class SnapCatalog extends TableCatalog {
   private def loadAt(ident: Identifier, version: Int): Table = {
     val dir = pathOf(ident)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val schema = SnapTable.headerSchemaOf(spark, dir, version).getOrElse {
-      // legacy manifest without a #schema header: one footer read
-      val files = SnapTable.files(spark, dir, version)
-      require(files.nonEmpty, s"snap table $dir has no data files")
-      spark.read.parquet(SnapTable.resolvePath(dir, files.head)).schema
-    }
-    new SnapScanTable(schema, Map("path" -> dir) ++
+    new SnapScanTable(SnapTable.readSchema(spark, dir, version),
+      Map("path" -> dir) ++
       (if (version > 0) Map("version" -> version.toString) else Map.empty))
   }
 

@@ -11,6 +11,11 @@ object GraftBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
 
+  /** A Catalyst expression as a `Column` (the wrapper is `private[sql]`),
+    * for an expression no SQL function names. */
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
   /** Block until the async listener bus has delivered every queued
     * event (the bus is `private[spark]`) — measurement tooling reads
     * listener-accumulated metrics through this instead of a fixed

@@ -89,4 +89,23 @@ class BitmaskOpsSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*("), s"no codegen span in:\n$plan")
   }
+
+  test("popcount_and is NULL on a NULL word, as the zip_with form is") {
+    import spark.implicits._
+    val rows = Seq(
+      (Seq(Option(3L), None), Seq(Option(1L), Option(2L))),
+      (Seq(Option(7L), Option(1L)), Seq(Option(3L), None)),
+      (Seq(Option(7L), Option(1L)), Seq(Option(3L), Option(1L))))
+    val df = rows.toDF("ma", "mb")
+      .select(expr("popcount_and(ma, mb)").as("native"),
+        expr("aggregate(zip_with(ma, mb, (x, y) -> bit_count(x & y)), 0L, " +
+          "(acc, c) -> acc + CAST(c AS BIGINT))").as("ref"))
+    val got = df.collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSeq
+    assert(got === Seq((None, None), (None, None), (Some(3L), Some(3L))))
+    // the constant-folded (interpreted) path agrees
+    val lit = spark.sql("SELECT popcount_and(array(3L, NULL), array(1L, 2L))")
+      .collect()(0)
+    assert(lit.isNullAt(0))
+  }
 }
+

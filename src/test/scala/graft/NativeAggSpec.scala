@@ -79,4 +79,17 @@ class NativeAggSpec extends AnyFunSuite {
     assert(m(native) === m(decl))
     df.unpersist()
   }
+
+  test("cov_accum64 skips a vector holding a NULL element") {
+    import spark.implicits._
+    val clean = Seq.tabulate(64)(i => Option(i.toLong + 1))
+    val holed = clean.updated(5, None)
+    val both = Seq(clean, holed, Seq.fill(64)(Option.empty[Long])).toDF("v")
+    def acc(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.repartition(3).agg(expr("cov_accum64(v)")).collect()(0).getSeq[Long](0)
+    val got = acc(both)
+    assert(got.head === 1L, "only the NULL-free vector counts")
+    assert(got === acc(Seq(clean).toDF("v")))
+  }
 }
+

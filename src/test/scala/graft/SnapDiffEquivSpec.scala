@@ -99,4 +99,29 @@ class SnapDiffEquivSpec extends AnyFunSuite {
       "3|2|c|8|added", "4|0|_w_|1|added", "4|0|_w_|1|added"))
     SnapTable.destroy(spark, d)
   }
+
+  test("a row repeated 200 000 times diffs through a streaming generator") {
+    val d = s"$dir-repeated"
+    SnapTable.destroy(spark, d)
+    SnapTable.commit(spark, d,
+      spark.range(200000).select(lit(7L).as("k"), lit("x").as("v")))
+    SnapTable.commit(spark, d, spark.range(1).select(lit(7L).as("k"), lit("x").as("v")))
+
+    val a = SnapTable.read(spark, d, 1)
+    val b = SnapTable.read(spark, d, 2)
+    val expected = b.exceptAll(a).withColumn("change", lit("added"))
+      .unionByName(a.exceptAll(b).withColumn("change", lit("removed")))
+    val got = SnapTable.diff(spark, d, 1, 2)
+    def counts(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.groupBy("k", "v", "change").count().collect()
+        .map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(counts(got) === counts(expected))
+    assert(counts(got) === Seq("7|x|removed|199999"))
+    // the replication is a generator over one row, not an array of
+    // |d| elements built per distinct row
+    val plan = got.queryExecution.executedPlan.toString
+    assert(!plan.toLowerCase.contains("sequence"), plan)
+    assert(plan.contains("Generate"), plan)
+    SnapTable.destroy(spark, d)
+  }
 }
