@@ -26,7 +26,10 @@ object Bench {
     * shuffle machinery once, so the first timed query doesn't carry JVM
     * and Spark-session warmup costs that no steady-state deployment pays. */
   def warmUp(spark: SparkSession, sfDir: String): Unit = {
-    Tables.names.foreach { n =>
+    // events first: loading it sets a Parquet type-mapping conf that is
+    // part of every table's cached-schema key, so the tables read after
+    // it stay warm for the queries
+    ("events" +: Tables.names.filterNot(_ == "events")).foreach { n =>
       try Tables(spark, sfDir, n).count() catch { case _: Throwable => () }
     }
     // one-time bench-scale geo fixture generation happens here, not inside

@@ -117,7 +117,8 @@ object SnapMv {
       val prev: Set[String] =
         if (v == 1) Set.empty
         else SnapTable.files(spark, tableDir, v - 1).toSet
-      val cur = SnapTable.files(spark, tableDir, v)
+      val curPlan = SnapTable.plan(spark, tableDir, v)
+      val cur = curPlan.files.map(_.rel)
       val removed = prev -- cur.toSet
       if (removed.nonEmpty && fullRefreshOnRewrite) {
         // rewrite version: fold from scratch over the full snapshot —
@@ -134,12 +135,11 @@ object SnapMv {
         s"version $v removed ${removed.size} file(s) — SnapMv folds " +
           "append-only commits (retractions are out of scope; pass " +
           "fullRefreshOnRewrite = true to rebuild over such a version)")
-      val delta = cur.filterNot(prev)
+      // the delta reads under the version's recorded schema: no footer job
+      val delta = curPlan.files.filterNot(e => prev(e.rel))
       val deltaAgg =
         if (delta.isEmpty) None
-        else Some(partialAgg(
-          spark.read.parquet(
-            delta.map(r => SnapTable.resolvePath(tableDir, r)): _*), spec))
+        else Some(partialAgg(SnapTable.readFiles(spark, curPlan, delta), spec))
       val next = (st.generation, deltaAgg) match {
         case (0, None) =>
           // an empty first commit: an empty summary with the right schema
@@ -147,7 +147,9 @@ object SnapMv {
         case (0, Some(da)) => da
         case (g, None)     => spark.read.parquet(s"$mvDir/gen-$g")
         case (g, Some(da)) =>
-          val prevSum = spark.read.parquet(s"$mvDir/gen-$g")
+          // every generation is written by this fold over the same spec,
+          // so the delta's schema is the summary's: no footer job
+          val prevSum = spark.read.schema(da.schema).parquet(s"$mvDir/gen-$g")
           val merged = prevSum.unionByName(da)
           val folded = merged.groupBy(spec.groupCols.map(merged(_)): _*)
             .agg(
@@ -252,14 +254,13 @@ object SnapMv {
     val latest = SnapTable.latestVersion(spark, tableDir)
     while (st.syncedVersion < latest) {
       val v = st.syncedVersion + 1
-      val prev: Set[String] =
-        if (v == 1) Set.empty
-        else SnapTable.files(spark, tableDir, v - 1).toSet
-      val cur = SnapTable.files(spark, tableDir, v)
-      val removed = (prev -- cur.toSet).toSeq.sorted
-      val added = cur.filterNot(prev)
-      def readFiles(rel: Seq[String]): DataFrame =
-        spark.read.parquet(rel.map(r => SnapTable.resolvePath(tableDir, r)): _*)
+      val prevFiles =
+        if (v == 1) Nil else SnapTable.plan(spark, tableDir, v - 1).files
+      val curPlan = SnapTable.plan(spark, tableDir, v)
+      val prev = prevFiles.map(_.rel).toSet
+      val cur = curPlan.files.map(_.rel).toSet
+      val removed = prevFiles.filterNot(e => cur(e.rel)).sortBy(_.rel)
+      val added = curPlan.files.filterNot(e => prev(e.rel))
       val prevGen: DataFrame =
         if (st.generation == 0)
           signedAgg(SnapTable.read(spark, tableDir, v).limit(0), spec, 1)
@@ -267,7 +268,9 @@ object SnapMv {
       requireExactSumTypes(prevGen, spec)
       val parts = prevGen +:
         (Seq(added -> 1, removed -> -1).collect {
-          case (rel, sign) if rel.nonEmpty => signedAgg(readFiles(rel), spec, sign)
+          // both sides read under version v's recorded schema: no footer job
+          case (files, sign) if files.nonEmpty =>
+            signedAgg(SnapTable.readFiles(spark, curPlan, files), spec, sign)
         })
       val merged = parts.reduce(_.unionByName(_))
       val folded = merged.groupBy(spec.groupCols.map(merged(_)): _*)

@@ -746,8 +746,8 @@ object SnapTable {
     * declared schema makes the parquet reader null-fill them instead of
     * failing or silently dropping the column depending on which file's
     * footer got sampled. */
-  private def readFiles(spark: SparkSession, p: TablePlan,
-                        files: Seq[PlanEntry]): DataFrame =
+  private[graft] def readFiles(spark: SparkSession, p: TablePlan,
+                               files: Seq[PlanEntry]): DataFrame =
     p.schema.fold(spark.read)(sc => spark.read.schema(schemaOf(sc)))
       .parquet(files.map(_.path): _*)
 

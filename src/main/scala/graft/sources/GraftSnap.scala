@@ -4,22 +4,16 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.column.ColumnReader
-import org.apache.parquet.column.impl.ColumnReadStoreImpl
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -47,23 +41,20 @@ import graft.operators.SnapTable
   *     same claim-and-recheck protocol Spark's parquet source uses for
   *     row-group stats.
   *   - COLUMN PRUNING to the parquet projection: only required columns
-  *     decode (the projected MessageType drops the rest before record
-  *     assembly).
+  *     decode.
   *   - TIME TRAVEL as a reader option, composing with plain SQL
   *     (`CREATE TABLE t USING graft-snap OPTIONS (path ..., version 2)`).
   *
-  * The partition reader decodes parquet through the public
-  * parquet-hadoop Group API (no Spark-internal vectorized classes):
-  * supported physical types are the engine's own writer output —
-  * INT32/INT64 (plain, DATE, TIMESTAMP micros), FLOAT/DOUBLE, BOOLEAN,
-  * BINARY (UTF8 → string, else binary). INT96 timestamps are REJECTED
-  * with a pointer at `spark.sql.parquet.outputTimestampType=
-  * TIMESTAMP_MICROS` — a declared codec boundary, not a silent wrong
-  * answer. Surviving files larger than `splitBytes` (128 MiB default)
-  * tile into byte-range partitions; parquet's midpoint rule assigns
-  * each row group to exactly one range, so multi-gigabyte files read
-  * in parallel with no coordination — the same split protocol as
-  * Spark's own parquet source.
+  * One parquet codec serves every snapshot data file: `SnapTable`'s
+  * commits, this connector's streaming sink and SQL UPDATE/MERGE write
+  * through Spark's `ParquetFileFormat`, and this connector reads through
+  * Spark's parquet reader ([[SnapReaderFactory]]), so every type
+  * `SnapTable.commit` writes reads back here — INT96 timestamps, arrays
+  * and structs included. Surviving files larger than `splitBytes` (128
+  * MiB default) tile into byte-range partitions; parquet's midpoint
+  * rule assigns each row group to exactly one range, so multi-gigabyte
+  * files read in parallel with no coordination — the same split
+  * protocol as Spark's own parquet source.
   *
   * Scale: planning reads O(files) manifest lines on the driver — the
   * same planning class as Spark's own file index — and ships only the
@@ -287,6 +278,22 @@ object SnapScan {
     * metadata answers) and reports `_file` as a runtime-filterable
     * attribute so group filtering can narrow the rewrite. */
   val RowLevelOpt = "__rowlevel"
+
+  /** `_file` is read as each file's partition value when the scan needs
+    * it and the table has no data column of that name (a data column
+    * `_file` is read as data). */
+  private[sources] def fileIsPartitionValue(full: StructType,
+                                            required: StructType): Boolean =
+    required.fieldNames.contains(FileColumn) &&
+      !full.fieldNames.contains(FileColumn)
+
+  /** A scan's output: the data columns, then `_file` when it is a
+    * partition value — the order Spark's parquet reader emits. */
+  private[sources] def outputSchema(full: StructType,
+                                    required: StructType): StructType =
+    if (!fileIsPartitionValue(full, required)) required
+    else StructType(required.filterNot(_.name == FileColumn) :+
+      required(FileColumn))
 }
 
 // not final: a row-level operation subclasses it to capture the built
@@ -480,12 +487,15 @@ final class SnapMetaAggScan(aggs: Seq[SnapAgg],
 final case class SnapMetaAggPartition(cells: Array[(Long, Boolean)])
     extends InputPartition
 
-/** One byte range of one data file. Row groups are assigned to the
-  * range containing their MIDPOINT (parquet-hadoop's withRange rule),
-  * so ranges that tile a file read every group exactly once with no
-  * coordination — the same split protocol Spark's own parquet source
-  * and the graft-ndjson line splits use. */
-final case class SnapFilePartition(path: String, start: Long, length: Long)
+/** One byte range of one data file of `fileSize` bytes (Long.MaxValue:
+  * unknown, and then `length` is Long.MaxValue too — the whole file).
+  * Row groups are assigned to the range containing their MIDPOINT
+  * (parquet-hadoop's withRange rule), so ranges that tile a file read
+  * every group exactly once with no coordination — the same split
+  * protocol Spark's own parquet source and the graft-ndjson line splits
+  * use. */
+final case class SnapFilePartition(path: String, start: Long, length: Long,
+                                   fileSize: Long)
     extends InputPartition
 
 final class SnapScan(full: StructType, required: StructType,
@@ -496,7 +506,7 @@ final class SnapScan(full: StructType, required: StructType,
     throw new IllegalArgumentException("graft-snap: no path"))
   private val version = opts.get("version").map(_.toInt).getOrElse(0)
 
-  override def readSchema(): StructType = required
+  override def readSchema(): StructType = SnapScan.outputSchema(full, required)
   override def toBatch: Batch = this
 
   private val splitBytes = opts.get("splitbytes").map { v =>
@@ -605,10 +615,10 @@ final class SnapScan(full: StructType, required: StructType,
   // returns qualified URIs, and a raw string compare silently misses
   // (leaving every length unknown and every file unsplit). The WHOLE
   // listing is best-effort: lengths only improve splitting and stats,
-  // and readers open files directly without listing — so a denied or
-  // failing listStatus (list-bucket-denied object stores, transient
-  // errors) degrades to unsplit files and unknown size instead of
-  // crashing planning (the memo must not cache a throw:
+  // and a reader stats the one file it was handed when its length is
+  // unknown — so a denied or failing listStatus (list-bucket-denied
+  // object stores, transient errors) degrades to unsplit files and
+  // unknown size instead of crashing planning (the memo must not cache a throw:
   // planInputPartitions would re-raise it). Memoized per survivor set
   // — runtime filtering re-plans partitions after shrinking survivors,
   // and stale lengths for a different file set must not leak in.
@@ -645,9 +655,9 @@ final class SnapScan(full: StructType, required: StructType,
   override def planInputPartitions(): Array[InputPartition] =
     survivorLens.flatMap { case (p, len) =>
       if (len == Long.MaxValue || len <= splitBytes)
-        Seq(SnapFilePartition(p, 0L, Long.MaxValue))
+        Seq(SnapFilePartition(p, 0L, len, len))
       else (0L until len by splitBytes).map(start =>
-        SnapFilePartition(p, start, math.min(splitBytes, len - start)))
+        SnapFilePartition(p, start, math.min(splitBytes, len - start), len))
     }.toArray
 
   /** POST-PRUNING size statistics (metadata only): the surviving
@@ -680,10 +690,11 @@ final class SnapScan(full: StructType, required: StructType,
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new SnapReaderFactory(required,
-      org.apache.spark.sql.GraftBridge.hadoopConfBroadcast(
-        SparkSession.active))
+  // one reader (and one broadcast Hadoop conf) per scan: the planner asks
+  // again from each copy of the scan node, and runtime filters narrow
+  // only the partitions
+  private lazy val readerFactory = SnapReaderFactory(full, required, prunable)
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** STREAMING READ — snapshot versions as micro-batches (the
     * Delta-table-as-stream-source shape): the offset IS the committed
@@ -701,7 +712,7 @@ final class SnapScan(full: StructType, required: StructType,
     * committed after the failure arrives on the next trigger.) */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new SnapMicroBatchStream(dir, required,
+    new SnapMicroBatchStream(dir, full, required,
       opts.get("skipchangeversions").exists(_.toBoolean))
 }
 
@@ -710,8 +721,8 @@ final case class SnapVersionOffset(version: Int)
   override def json(): String = s"""{"version":$version}"""
 }
 
-final class SnapMicroBatchStream(dir: String, required: StructType,
-                                 skipChange: Boolean)
+final class SnapMicroBatchStream(dir: String, full: StructType,
+                                 required: StructType, skipChange: Boolean)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
   private def spark = SparkSession.active
@@ -748,278 +759,67 @@ final class SnapMicroBatchStream(dir: String, required: StructType,
         // change version skipped whole: its additions are rewrites of
         // already-streamed rows, not new data
       } else out ++= (cur -- prev).toSeq.sorted
-        .map(SnapFilePartition(_, 0L, Long.MaxValue))
+        .map(SnapFilePartition(_, 0L, Long.MaxValue, Long.MaxValue))
       prev = cur
     }
     out.result()
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapReaderFactory(required,
-      org.apache.spark.sql.GraftBridge.hadoopConfBroadcast(
-        SparkSession.active))
+    SnapReaderFactory(full, required, Array.empty)
 }
 
-/** Readers open files with the SESSION's Hadoop configuration (riding a
-  * broadcast): executor defaults would drop spark.hadoop.* settings —
-  * cloud-FS credentials, scheme mappings — and fail or misroute opens.
-  *
-  * Reads are COLUMNAR by default (round 13): the per-row Group decoder
-  * materialized one heap object per row plus one boxed value per field —
-  * at 100 TB, scan CPU dominates and that allocation tax is the
-  * difference between a decode-bound and an IO-bound scan. The columnar
-  * reader decodes each projected column in a tight per-column loop into
-  * Spark `OnHeapColumnVector`s and hands whole `ColumnarBatch`es to the
-  * engine, which keeps downstream operators in whole-stage codegen's
-  * columnar-to-row fast path — the same shape as Spark's own vectorized
-  * parquet reader, built on the public parquet-column API. */
-final class SnapReaderFactory(required: StructType,
-    hconf: org.apache.spark.broadcast.Broadcast[_])
+/** Every snapshot data file is read by Spark's own parquet reader
+  * (`ParquetPartitionReaderFactory`, the vectorized reader whenever the
+  * schema allows it): each [[SnapFilePartition]] becomes one
+  * `PartitionedFile` with the same byte range, so the row groups whose
+  * midpoint falls in the range are read. `_file`, when the scan needs it
+  * and no data column has the name, is that file's partition value and
+  * follows the data columns. A file the planner could not size is
+  * stat'ed here, once, with the session's Hadoop conf. */
+final class SnapReaderFactory private (parquet: FilePartitionReaderFactory,
+    withFile: Boolean, hconf: org.apache.spark.broadcast.Broadcast[_])
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+  private def filePartition(p: InputPartition): FilePartition = {
     val fp = p.asInstanceOf[SnapFilePartition]
-    new SnapFileReader(fp.path, fp.start, fp.length, required,
-      org.apache.spark.sql.GraftBridge.hadoopConf(hconf))
-  }
-  override def supportColumnarReads(p: InputPartition): Boolean = true
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val fp = p.asInstanceOf[SnapFilePartition]
-    new SnapColumnarFileReader(fp.path, fp.start, fp.length, required,
-      org.apache.spark.sql.GraftBridge.hadoopConf(hconf))
-  }
-}
-
-/** Shared projection logic of both readers: the projected MessageType
-  * keeps exactly the required columns physically present in the file
-  * (in required-field order) and maps each required field to its index
-  * in the projection, -1 for a column the file predates (add-column
-  * evolution — the reader null-fills it, exactly what Spark's own
-  * parquet reader does under a declared schema). */
-private[sources] object SnapParquet {
-  def project(fileSchema: MessageType, required: StructType)
-      : (MessageType, Array[Int]) = {
-    val groupIdx = new Array[Int](required.length)
-    var next = 0
-    val fields = required.fields.zipWithIndex.flatMap { case (f, i) =>
-      if (!fileSchema.containsField(f.name)) { groupIdx(i) = -1; Nil }
+    val size =
+      if (fp.fileSize != Long.MaxValue) fp.fileSize
       else {
-        val t = fileSchema.getType(fileSchema.getFieldIndex(f.name))
-        require(t.isPrimitive, s"graft-snap: nested column ${f.name} unsupported")
-        val prim = t.asPrimitiveType()
-        require(prim.getPrimitiveTypeName !=
-          PrimitiveType.PrimitiveTypeName.INT96,
-          "graft-snap: INT96 timestamps unsupported — write with " +
-            "spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS")
-        groupIdx(i) = next; next += 1
-        Seq(t)
+        val path = new Path(fp.path)
+        path.getFileSystem(GraftBridge.hadoopConf(hconf))
+          .getFileStatus(path).getLen
       }
-    }
-    (new MessageType(fileSchema.getName, fields: _*), groupIdx)
+    val values =
+      if (withFile) new GenericInternalRow(Array[Any](UTF8String.fromString(fp.path)))
+      else InternalRow.empty
+    FilePartition(0, Array(PartitionedFile(values,
+      SparkPath.fromPathString(fp.path), fp.start,
+      math.min(fp.length, size - fp.start), Array.empty, 0L, size)))
   }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    parquet.createReader(filePartition(p))
+  override def supportColumnarReads(p: InputPartition): Boolean =
+    parquet.supportColumnarReads(p)
+  override def createColumnarReader(p: InputPartition)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    parquet.createColumnarReader(filePartition(p))
 }
 
-/** Columnar parquet decode through the public parquet-column API:
-  * per row group, a `ColumnReadStoreImpl` hands one `ColumnReader` per
-  * projected column, and each batch fills the column's vector in a
-  * tight monomorphic loop (definition level < max → null, else the
-  * typed getter) — no per-row record assembly, no Group allocation.
-  * Flat schemas only (the engine's own writer output), so repetition
-  * levels are always 0 and a row group's value count equals its row
-  * count, which makes the batch boundary exact. */
-final class SnapColumnarFileReader(path: String, start: Long, length: Long,
-    required: StructType, conf: Configuration, batchSize: Int = 4096)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
-
-  private val reader = ParquetFileReader.open(
-    HadoopInputFile.fromPath(new Path(path), conf),
-    org.apache.parquet.HadoopReadOptions.builder(conf)
-      .withRange(start,
-        if (length == Long.MaxValue) Long.MaxValue else start + length)
-      .build())
-  private val fileMeta = reader.getFooter.getFileMetaData
-  private val (projected, groupIdx) =
-    SnapParquet.project(fileMeta.getSchema, required)
-  // ColumnReadStoreImpl needs a root converter only to probe dictionary
-  // support; the example GroupRecordConverter's primitive converters
-  // serve (no records are ever materialized through it)
-  private val converterRoot = new GroupRecordConverter(projected).getRootConverter
-  private val descriptors = projected.getColumns
-  private val vectors: Array[OnHeapColumnVector] =
-    OnHeapColumnVector.allocateColumns(batchSize, required)
-  private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
-  private val colReaders = new Array[ColumnReader](required.length)
-  // `_file` metadata column: constant per partition — the file path
-  private val pathBytes =
-    path.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-  private val isFileCol = required.fields.zipWithIndex.map { case (f, i) =>
-    groupIdx(i) < 0 && f.name == SnapScan.FileColumn
+object SnapReaderFactory {
+  /** The reader of `required` columns of a table whose data columns are
+    * `full`; `filters` reach the parquet reader's row-group pruning and
+    * stay residual, as every filter of this source does. */
+  def apply(full: StructType, required: StructType,
+            filters: Array[Filter]): SnapReaderFactory = {
+    val spark = SparkSession.active
+    val withFile = SnapScan.fileIsPartitionValue(full, required)
+    val data = StructType(required.filterNot(f =>
+      withFile && f.name == SnapScan.FileColumn))
+    val partition =
+      if (withFile) StructType(Seq(required(SnapScan.FileColumn)))
+      else new StructType()
+    new SnapReaderFactory(
+      GraftBridge.parquetReaderFactory(spark, full, data, partition, filters),
+      withFile, GraftBridge.hadoopConfBroadcast(spark))
   }
-  private var leftInGroup = 0L
-
-  override def next(): Boolean = {
-    while (leftInGroup == 0L) {
-      val pages = reader.readNextRowGroup()
-      if (pages == null) return false
-      // a projection can be EMPTY when every required column postdates
-      // this file (evolution): rows still exist — their count comes
-      // from the row-group metadata and the batch is all-null vectors
-      if (projected.getFieldCount > 0) {
-        val store = new ColumnReadStoreImpl(pages, converterRoot,
-          projected, fileMeta.getCreatedBy)
-        var i = 0
-        while (i < required.length) {
-          colReaders(i) =
-            if (groupIdx(i) < 0) null
-            else store.getColumnReader(descriptors.get(groupIdx(i)))
-          i += 1
-        }
-      }
-      leftInGroup = pages.getRowCount
-    }
-    val n = math.min(batchSize.toLong, leftInGroup).toInt
-    var i = 0
-    while (i < required.length) {
-      val v = vectors(i)
-      v.reset()
-      val r = colReaders(i)
-      if (r == null) {
-        if (isFileCol(i)) {
-          var j = 0
-          while (j < n) { v.putByteArray(j, pathBytes); j += 1 }
-        } else v.putNulls(0, n)
-      } else fill(r, v, n, required.fields(i).dataType,
-        descriptors.get(groupIdx(i)).getMaxDefinitionLevel)
-      i += 1
-    }
-    leftInGroup -= n
-    batch.setNumRows(n)
-    true
-  }
-
-  private def fill(r: ColumnReader, v: WritableColumnVector, n: Int,
-                   dt: DataType, maxDef: Int): Unit = dt match {
-    case LongType | TimestampType | TimestampNTZType =>
-      var i = 0
-      while (i < n) {
-        if (r.getCurrentDefinitionLevel < maxDef) v.putNull(i)
-        else v.putLong(i, r.getLong)
-        r.consume(); i += 1
-      }
-    case IntegerType | DateType =>
-      var i = 0
-      while (i < n) {
-        if (r.getCurrentDefinitionLevel < maxDef) v.putNull(i)
-        else v.putInt(i, r.getInteger)
-        r.consume(); i += 1
-      }
-    case DoubleType =>
-      var i = 0
-      while (i < n) {
-        if (r.getCurrentDefinitionLevel < maxDef) v.putNull(i)
-        else v.putDouble(i, r.getDouble)
-        r.consume(); i += 1
-      }
-    case FloatType =>
-      var i = 0
-      while (i < n) {
-        if (r.getCurrentDefinitionLevel < maxDef) v.putNull(i)
-        else v.putFloat(i, r.getFloat)
-        r.consume(); i += 1
-      }
-    case BooleanType =>
-      var i = 0
-      while (i < n) {
-        if (r.getCurrentDefinitionLevel < maxDef) v.putNull(i)
-        else v.putBoolean(i, r.getBoolean)
-        r.consume(); i += 1
-      }
-    case StringType | BinaryType =>
-      var i = 0
-      while (i < n) {
-        if (r.getCurrentDefinitionLevel < maxDef) v.putNull(i)
-        else { v.putByteArray(i, r.getBinary.getBytes); () }
-        r.consume(); i += 1
-      }
-    case other => throw new UnsupportedOperationException(
-      s"graft-snap: unsupported read type $other")
-  }
-
-  override def get(): ColumnarBatch = batch
-  override def close(): Unit = { batch.close(); reader.close() }
-}
-
-/** Parquet → InternalRow through the public Group API, decoding only
-  * the projected columns. */
-final class SnapFileReader(path: String, start: Long, length: Long,
-                           required: StructType, conf: Configuration)
-    extends PartitionReader[InternalRow] {
-  // withRange keeps exactly the row groups whose midpoint falls in
-  // [start, start+length) — tiling ranges read each group once
-  private val reader = ParquetFileReader.open(
-    HadoopInputFile.fromPath(new Path(path), conf),
-    org.apache.parquet.HadoopReadOptions.builder(conf)
-      .withRange(start,
-        if (length == Long.MaxValue) Long.MaxValue else start + length)
-      .build())
-  private val (projected, groupIdx) =
-    SnapParquet.project(reader.getFooter.getFileMetaData.getSchema, required)
-  private val colIO = new ColumnIOFactory().getColumnIO(projected)
-
-  private var group: Group = _
-  private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
-  private var leftInGroup = 0L
-
-  override def next(): Boolean = {
-    while (leftInGroup == 0L) {
-      val pages = reader.readNextRowGroup()
-      if (pages == null) return false
-      // a projection can be EMPTY when every required column postdates
-      // this file (evolution): rows still exist — count them from the
-      // row-group metadata and emit all-null rows with no record reader
-      recordReader =
-        if (projected.getFieldCount == 0) null
-        else colIO.getRecordReader(pages, new GroupRecordConverter(projected))
-      leftInGroup = pages.getRowCount
-    }
-    group = if (recordReader == null) null else recordReader.read()
-    leftInGroup -= 1
-    true
-  }
-
-  // `_file` metadata column: constant per partition — the file path
-  private val pathUtf8 = UTF8String.fromString(path)
-  private val isFileCol = required.fields.zipWithIndex.map { case (f, i) =>
-    groupIdx(i) < 0 && f.name == SnapScan.FileColumn
-  }
-
-  override def get(): InternalRow = {
-    val row = new GenericInternalRow(required.length)
-    var i = 0
-    while (i < required.length) {
-      val g = groupIdx(i)
-      if (g < 0 && isFileCol(i)) row.update(i, pathUtf8)
-      else if (g < 0 || group.getFieldRepetitionCount(g) == 0)
-        row.setNullAt(i)
-      else required.fields(i).dataType match {
-        case LongType | TimestampType | TimestampNTZType =>
-          row.setLong(i, group.getLong(g, 0))
-        case IntegerType | DateType => row.setInt(i, group.getInteger(g, 0))
-        case DoubleType  => row.setDouble(i, group.getDouble(g, 0))
-        case FloatType   => row.setFloat(i, group.getFloat(g, 0))
-        case BooleanType => row.setBoolean(i, group.getBoolean(g, 0))
-        case StringType  =>
-          row.update(i, UTF8String.fromBytes(group.getBinary(g, 0).getBytes))
-        case BinaryType  => row.update(i, group.getBinary(g, 0).getBytes)
-        case dt => throw new UnsupportedOperationException(
-          s"graft-snap: unsupported read type $dt for ${required.fields(i).name}")
-      }
-      i += 1
-    }
-    row
-  }
-
-  override def close(): Unit = reader.close()
 }

@@ -86,8 +86,10 @@ final class SnapRowLevelOperation(cmd: RowLevelOperation.Command,
     }
 }
 
-/** The replace-data write: per-task parquet writers (the streaming
-  * sink's writer, batch-driven) land the groups' replacement content;
+/** The replace-data write: per-task writers land the groups'
+  * replacement content through Spark's own parquet writer (the same
+  * [[SnapStreamDataWriter]] as the streaming sink, prepared once per
+  * statement), so every type `SnapTable.commit` accepts rewrites too;
   * commit swaps replaced-for-new in one snapshot version. */
 final class SnapCowWrite(dir: String, schema: StructType,
                          commandName: String,
@@ -101,9 +103,9 @@ final class SnapCowWrite(dir: String, schema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
-    new SnapBatchWriterFactory(genDir, schema,
-      org.apache.spark.sql.GraftBridge.hadoopConfBroadcast(
-        SparkSession.active))
+    new SnapBatchWriterFactory(genDir,
+      org.apache.spark.sql.GraftBridge.parquetWriteJob(
+        SparkSession.active, schema))
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
@@ -133,12 +135,11 @@ final class SnapCowWrite(dir: String, schema: StructType,
   }
 }
 
-final class SnapBatchWriterFactory(genDir: String, schema: StructType,
-    hconf: org.apache.spark.broadcast.Broadcast[_])
+final class SnapBatchWriterFactory(genDir: String,
+    job: org.apache.spark.sql.GraftBridge.ParquetWriteJob)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new SnapStreamDataWriter(genDir,
-      f"part-p$partitionId%05d-t$taskId.parquet", schema,
-      org.apache.spark.sql.GraftBridge.hadoopConf(hconf))
+      f"part-p$partitionId%05d-t$taskId.parquet", job)
 }

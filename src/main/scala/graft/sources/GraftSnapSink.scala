@@ -1,18 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetFileWriter
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.types._
 
 import graft.operators.SnapTable
@@ -40,42 +33,15 @@ import graft.operators.SnapTable
   * header on every epoch, so a streamed table keeps zone-map/bloom
   * pruning without per-query options.
   *
+  * Files are written by Spark's own parquet writer
+  * (`ParquetFileFormat.prepareWrite`, see [[SnapStreamDataWriter]]) —
+  * the codec `SnapTable.commit` writes with — so every type a commit
+  * accepts streams too, and timestamps follow the session's
+  * `spark.sql.parquet.outputTimestampType`.
+  *
   * Scale: each epoch is O(task files) executor writes + one O(files)
   * manifest job; the idempotence walk is header-only and O(1) in
   * steady state (the query's previous batch is the latest version). */
-private[sources] object SnapParquetWrite {
-  /** Spark → parquet schema for the sink's supported flat types (the
-    * same type surface the connector reads; timestamps are MICROS —
-    * the INT96 form is rejected on the read side by design). */
-  def messageTypeOf(schema: StructType): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.foreach { f =>
-      val t = f.dataType match {
-        case LongType    => Types.optional(INT64)
-        case TimestampType => Types.optional(INT64)
-          .as(LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-        case TimestampNTZType => Types.optional(INT64)
-          .as(LogicalTypeAnnotation.timestampType(false,
-            LogicalTypeAnnotation.TimeUnit.MICROS))
-        case IntegerType => Types.optional(INT32)
-        case DateType    => Types.optional(INT32)
-          .as(LogicalTypeAnnotation.dateType())
-        case DoubleType  => Types.optional(DOUBLE)
-        case FloatType   => Types.optional(FLOAT)
-        case BooleanType => Types.optional(BOOLEAN)
-        case StringType  => Types.optional(BINARY)
-          .as(LogicalTypeAnnotation.stringType())
-        case BinaryType  => Types.optional(BINARY)
-        case dt => throw new UnsupportedOperationException(
-          s"graft-snap sink: unsupported type $dt for column ${f.name}")
-      }
-      b.addField(t.named(f.name))
-    }
-    b.named("spark_schema")
-  }
-}
-
 final case class SnapStreamFileMessage(name: Option[String])
     extends WriterCommitMessage
 
@@ -87,9 +53,8 @@ final class SnapStreamingWrite(dir: String, schema: StructType,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory =
-    new SnapStreamWriterFactory(dir, schema, queryId,
-      org.apache.spark.sql.GraftBridge.hadoopConfBroadcast(
-        SparkSession.active))
+    new SnapStreamWriterFactory(dir, queryId,
+      GraftBridge.parquetWriteJob(SparkSession.active, schema))
 
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
@@ -135,8 +100,8 @@ final class SnapStreamingWrite(dir: String, schema: StructType,
   }
 }
 
-final class SnapStreamWriterFactory(dir: String, schema: StructType,
-    queryId: String, hconf: org.apache.spark.broadcast.Broadcast[_])
+final class SnapStreamWriterFactory(dir: String, queryId: String,
+    job: GraftBridge.ParquetWriteJob)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
@@ -144,50 +109,27 @@ final class SnapStreamWriterFactory(dir: String, schema: StructType,
       s"$dir/data/stream-$queryId-e$epochId",
       // taskId in the name keeps retried/speculative attempts disjoint;
       // the commit coordinator picks exactly one winner per partition
-      f"part-p$partitionId%05d-t$taskId.parquet",
-      schema, org.apache.spark.sql.GraftBridge.hadoopConf(hconf))
+      f"part-p$partitionId%05d-t$taskId.parquet", job)
 }
 
-/** Per-task parquet writer over the public Group API. The file is
-  * created LAZILY on the first row, so an empty partition emits no
-  * file at all (mirroring Spark's own writer rule the manifest
-  * cross-check pins). */
+/** Per-task writer of one parquet file through Spark's own parquet
+  * writer, whose job the driver prepared once. The file is created
+  * LAZILY on the first row, so an empty partition emits no file at all
+  * (mirroring Spark's own writer rule the manifest cross-check pins). */
 final class SnapStreamDataWriter(genDir: String, name: String,
-                                 schema: StructType, conf: Configuration)
+                                 job: GraftBridge.ParquetWriteJob)
     extends DataWriter[InternalRow] {
-  private var writer: org.apache.parquet.hadoop.ParquetWriter[Group] = _
-  private lazy val msgType = SnapParquetWrite.messageTypeOf(schema)
-  private lazy val groups = new SimpleGroupFactory(msgType)
+  private val path = new Path(s"$genDir/$name")
+  private var writer: OutputWriter = _
 
   override def write(row: InternalRow): Unit = {
-    if (writer == null)
-      writer = ExampleParquetWriter
-        .builder(new Path(s"$genDir/$name"))
-        .withType(msgType).withConf(conf)
-        // a retried attempt with the same taskId must not crash on its
-        // own partial file
-        .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
-        .build()
-    val g = groups.newGroup()
-    var i = 0
-    while (i < schema.length) {
-      if (!row.isNullAt(i)) schema.fields(i).dataType match {
-        case LongType | TimestampType | TimestampNTZType =>
-          g.add(i, row.getLong(i))
-        case IntegerType | DateType => g.add(i, row.getInt(i))
-        case DoubleType             => g.add(i, row.getDouble(i))
-        case FloatType              => g.add(i, row.getFloat(i))
-        case BooleanType            => g.add(i, row.getBoolean(i))
-        case StringType => g.add(i,
-          Binary.fromConstantByteArray(row.getUTF8String(i).getBytes))
-        case BinaryType => g.add(i,
-          Binary.fromConstantByteArray(row.getBinary(i)))
-        case dt => throw new UnsupportedOperationException(
-          s"graft-snap sink: unsupported type $dt")
-      }
-      i += 1
+    if (writer == null) {
+      // a replayed epoch after a restart reuses task ids, so its file
+      // may already hold an uncommitted attempt's partial output
+      path.getFileSystem(job.hadoopConf).delete(path, false)
+      writer = job.open(path.toString)
     }
-    writer.write(g)
+    writer.write(row)
   }
 
   override def commit(): WriterCommitMessage = {
@@ -198,8 +140,7 @@ final class SnapStreamDataWriter(genDir: String, name: String,
   override def abort(): Unit = {
     if (writer != null) {
       try writer.close() catch { case scala.util.control.NonFatal(_) => () }
-      val p = new Path(s"$genDir/$name")
-      try { p.getFileSystem(conf).delete(p, false); () }
+      try { path.getFileSystem(job.hadoopConf).delete(path, false); () }
       catch { case scala.util.control.NonFatal(_) => () }
     }
   }

@@ -1,7 +1,18 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{DataFrame => CDataFrame, Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** Package-private bridge: building a DataFrame from a custom LogicalPlan
   * (`Dataset.ofRows`) is `private[sql]`, so third-party operators that add
@@ -86,6 +97,64 @@ object GraftBridge {
   def sessionHadoopConf(spark: SparkSession)
       : org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[CSparkSession].sessionState.newHadoopConf()
+
+  /** Spark's own parquet reader for one scan, built the way
+    * `ParquetScan.createReaderFactory` builds it: one Hadoop conf per
+    * scan carrying the read-support entries, broadcast once. Columns of
+    * `partitionSchema` come from each `PartitionedFile`'s partition
+    * values and follow the `readDataSchema` columns in every row and
+    * batch. Data columns read nullable, as Spark's file sources read
+    * them: a file that predates a column null-fills it. */
+  def parquetReaderFactory(spark: SparkSession, dataSchema: StructType,
+      readDataSchema: StructType, partitionSchema: StructType,
+      filters: Array[Filter]): FilePartitionReaderFactory = {
+    val conf = spark.asInstanceOf[CSparkSession].sessionState.conf
+    val hadoopConf = sessionHadoopConf(spark)
+    val readData = readDataSchema.asNullable
+    val json = readData.json
+    hadoopConf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, json)
+    hadoopConf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, json)
+    hadoopConf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, conf.sessionLocalTimeZone)
+    Seq(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED -> conf.nestedSchemaPruningEnabled,
+      SQLConf.CASE_SENSITIVE -> conf.caseSensitiveAnalysis,
+      SQLConf.PARQUET_BINARY_AS_STRING -> conf.isParquetBinaryAsString,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP -> conf.isParquetINT96AsTimestamp,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED ->
+        conf.parquetInferTimestampNTZEnabled,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG -> conf.legacyParquetNanosAsLong,
+      SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION ->
+        conf.parquetReaderRespectUnknownTypeAnnotation)
+      .foreach { case (e, v) => hadoopConf.setBoolean(e.key, v) }
+    ParquetPartitionReaderFactory(conf,
+      SerializableConfiguration.broadcast(spark.sparkContext, hadoopConf),
+      dataSchema.asNullable, readData, partitionSchema, filters, None,
+      new ParquetOptions(Map.empty[String, String], conf))
+  }
+
+  /** Spark's own parquet writer for one write job, prepared once on the
+    * driver as the v2 `FileWriterFactory` is: `prepareWrite` fills the
+    * job's conf (write support, codec, the session's timestamp type) and
+    * returns the factory each task opens its file with. Columns are
+    * written nullable, as every Spark file write does. */
+  def parquetWriteJob(spark: SparkSession, schema: StructType): ParquetWriteJob = {
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(sessionHadoopConf(spark))
+    val nullable = schema.asNullable
+    new ParquetWriteJob(
+      new ParquetFileFormat().prepareWrite(spark, job, Map.empty, nullable),
+      nullable, new SerializableConfiguration(job.getConfiguration))
+  }
+
+  final class ParquetWriteJob private[sql] (factory: OutputWriterFactory,
+      schema: StructType, conf: SerializableConfiguration) extends Serializable {
+    def hadoopConf: org.apache.hadoop.conf.Configuration = conf.value
+
+    /** A writer of one new file at `path`. */
+    def open(path: String): OutputWriter =
+      factory.newInstance(path, schema,
+        new TaskAttemptContextImpl(conf.value, new TaskAttemptID()))
+  }
 
   /** V2 Predicate → V1 source Filter (runtime-filter predicates arrive
     * as V2 `Predicate`s) — `PredicateUtils` is private[sql]. */

@@ -638,4 +638,102 @@ class GraftSnapSpec extends AnyFunSuite {
     deleteVia("b = 500", id => (id * 7) % 1000 == 500)
     SnapTable.destroy(spark, d)
   }
+
+  test("INT96 timestamps, arrays and structs read like SnapTable.read, whole and split") {
+    val d = "target/graft-snap-nested"
+    SnapTable.destroy(spark, d)
+    GraftSnapSpec.withInt96(spark) {
+      SnapTable.commit(spark, d, GraftSnapSpec.nested(spark, 0, 4000, 4),
+        statCols = Seq("k"))
+      SnapTable.commit(spark, d, GraftSnapSpec.nested(spark, 4000, 4500, 1),
+        append = true, statCols = Seq("k"))
+    }
+    assert(GraftSnapSpec.physicalTypes(spark, d, "ts") === Set("INT96"))
+    val lib = SnapTable.read(spark, d)
+    val want = GraftSnapSpec.canon(lib)
+    assert(want.size === 4500)
+    val whole = spark.read.format("graft-snap").load(d)
+    assert(whole.schema.map(f => f.name -> f.dataType) ===
+      lib.schema.map(f => f.name -> f.dataType))
+    assert(GraftSnapSpec.canon(whole) === want)
+    val split = spark.read.format("graft-snap")
+      .option("splitBytes", 2048).load(d)
+    assert(GraftSnapSpec.canon(split) === want)
+    assert(snapScan(split).planInputPartitions().length >
+      SnapTable.files(spark, d).size, "splitBytes did not split the files")
+    // a nested-field projection under a pruning filter
+    assert(GraftSnapSpec.canon(whole.filter(col("k") < 700).select("k", "s.b", "tags")) ===
+      GraftSnapSpec.canon(lib.filter(col("k") < 700).select("k", "s.b", "tags")))
+    SnapTable.destroy(spark, d)
+  }
+
+  test("a data column named _file reads as data; otherwise _file names the file") {
+    val d = "target/graft-snap-filecol"
+    SnapTable.destroy(spark, d)
+    // version 1 predates the `_file` data column, which version 2 adds:
+    // its rows read NULL there, as they do through SnapTable.read
+    SnapTable.commit(spark, d, spark.range(0, 30, 1, 2).select(col("id").as("k")),
+      statCols = Seq("k"))
+    val added = spark.range(30, 60, 1, 2).select(col("id").as("k"),
+      concat(lit("row-"), col("id").cast("string")).as("_file"))
+    SnapTable.commit(spark, d, added, append = true, statCols = Seq("k"),
+      evolveSchema = true)
+    val got = spark.read.format("graft-snap").load(d)
+    assert(GraftSnapSpec.canon(got) ===
+      GraftSnapSpec.canon(SnapTable.read(spark, d)))
+    assert(got.filter(col("_file").isNull).count() === 30L)
+    assert(GraftSnapSpec.canon(got.filter(col("k") >= 30).select("_file")) ===
+      GraftSnapSpec.canon(added.select("_file")))
+    SnapTable.destroy(spark, d)
+    // without such a column, `_file` is the metadata column: every row
+    // carries the manifest path of the file it came from
+    fixture()
+    val meta = spark.read.format("graft-snap").load(dir)
+      .select(col("_file"), col("l_orderkey"))
+    val paths = meta.collect().map(_.getString(0))
+    assert(paths.length.toLong === SnapTable.read(spark, dir).count())
+    assert(paths.toSet === SnapTable.plan(spark, dir, 0).files.map(_.path).toSet)
+  }
+}
+
+object GraftSnapSpec {
+  /** Rows [lo, hi) with a TIMESTAMP, an ARRAY<STRING> and a STRUCT
+    * column, each NULL on some rows. */
+  def nested(spark: org.apache.spark.sql.SparkSession, lo: Long, hi: Long,
+             parts: Int): org.apache.spark.sql.DataFrame = {
+    val id = col("id")
+    spark.range(lo, hi, 1, parts).select(id.as("k"),
+      when(id % 5 =!= 0, timestamp_seconds(id * 3607)).as("ts"),
+      when(id % 7 =!= 0, array(id.cast("string"), lit("x"))).as("tags"),
+      when(id % 11 =!= 0,
+        struct((id * 3).as("a"), (id % 13).cast("string").as("b"))).as("s"))
+  }
+
+  /** Run `body` with parquet timestamps written as INT96. */
+  def withInt96[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "INT96")
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Physical parquet types of column `c` across the latest version's
+    * data files. */
+  def physicalTypes(spark: org.apache.spark.sql.SparkSession, dir: String,
+                    c: String): Set[String] =
+    SnapTable.plan(spark, dir, 0).files.map { e =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(e.path),
+          spark.sparkContext.hadoopConfiguration))
+      try {
+        val schema = r.getFooter.getFileMetaData.getSchema
+        schema.getType(schema.getFieldIndex(c)).asPrimitiveType
+          .getPrimitiveTypeName.name
+      } finally r.close()
+    }.toSet
+
+  def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
 }

@@ -80,6 +80,19 @@ class MvStreamSpec extends AnyFunSuite {
     assert(mvRows(mvDir) == expect3)
   }
 
+  test("sync of an appended version reads its files under the recorded schema") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-mvschema").toString
+    val (tableDir, mvDir) = (s"$tmp/table", s"$tmp/mv")
+    SnapTable.commit(spark, tableDir, e.filter(col("event_id") % 2 === 0))
+    assert(SnapMv.sync(spark, tableDir, mvDir, spec) == SnapMv.State(1, 1))
+    SnapTable.commit(spark, tableDir, e.filter(col("event_id") % 2 === 1),
+      append = true)
+    val (st, jobs) = JobLog(spark)(SnapMv.sync(spark, tableDir, mvDir, spec))
+    assert(st == SnapMv.State(2, 2))
+    assert(jobs.count(_.schemaInference) === 0, jobs.map(_.name))
+    assert(mvRows(mvDir) == expectRows(e))
+  }
+
   test("sync refuses non-append versions (retractions out of scope)") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-s18b").toString
     val (tableDir, mvDir) = (s"$tmp/table", s"$tmp/mv")

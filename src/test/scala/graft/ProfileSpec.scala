@@ -61,6 +61,16 @@ class ProfileSpec extends AnyFunSuite {
       Profile.write(spark, TestSpark.Sf, Seq("no_such_query"), out))
   }
 
+  test("after Bench.warmUp every Tables load declares a cached schema") {
+    // as in a fresh session: no events load has set its type-mapping conf
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    Bench.warmUp(spark, TestSpark.Sf)
+    val (_, jobs) = JobLog(spark) {
+      Tables.names.foreach(n => Tables(spark, TestSpark.Sf, n))
+    }
+    assert(jobs.count(_.schemaInference) === 0, jobs.map(_.name))
+  }
+
   test("JobLog counts each job's tasks as Spark's status tracker does") {
     val sc = spark.sparkContext
     val (_, jobs) = JobLog(spark) {

@@ -109,4 +109,50 @@ class SnapSinkSpec extends AnyFunSuite {
     assert(spark.read.format("graft-snap").load(tableDir).count() ==
       e.count())
   }
+
+  test("the V2 sink and SQL UPDATE write INT96 timestamps, arrays and structs") {
+    import org.apache.spark.sql.streaming.Trigger
+    val tmp = java.nio.file.Files.createTempDirectory("graft-nested-sink").toString
+    val (tableDir, inDir, cp) = (s"$tmp/table", s"$tmp/in", s"$tmp/cp")
+    val src = GraftSnapSpec.nested(spark, 0, 2000, 2)
+    GraftSnapSpec.withInt96(spark) {
+      src.write.parquet(inDir)
+      spark.readStream.schema(src.schema).parquet(inDir)
+        .writeStream.format("graft-snap")
+        .option("path", tableDir).option("checkpointLocation", cp)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+    assert(SnapTable.latestVersion(spark, tableDir) == 1)
+    assert(GraftSnapSpec.physicalTypes(spark, tableDir, "ts") === Set("INT96"))
+    assert(GraftSnapSpec.canon(SnapTable.read(spark, tableDir)) ===
+      GraftSnapSpec.canon(src))
+
+    // SQL UPDATE through a snap catalog rewrites the matched files
+    spark.conf.set("spark.sql.catalog.snapnest",
+      classOf[graft.sources.SnapCatalog].getName)
+    spark.conf.set("spark.sql.catalog.snapnest.warehouse", s"$tmp/wh")
+    val t = s"$tmp/wh/db/t"
+    spark.sql("""CREATE TABLE snapnest.db.t (k BIGINT, ts TIMESTAMP,
+                 tags ARRAY<STRING>, s STRUCT<a: BIGINT, b: STRING>)
+                 USING `graft-snap` TBLPROPERTIES ('statCols' = 'k')""")
+    src.createOrReplaceTempView("nested_src")
+    GraftSnapSpec.withInt96(spark) {
+      spark.sql("INSERT INTO snapnest.db.t SELECT * FROM nested_src")
+      spark.sql("""UPDATE snapnest.db.t
+                   SET ts = ts + INTERVAL 1 DAY, tags = concat(tags, array('u')),
+                       s = named_struct('a', s.a + 1, 'b', s.b)
+                   WHERE k % 3 = 0""")
+    }
+    assert(SnapTable.meta(spark, t)("rowLevelOp") == "UPDATE")
+    assert(GraftSnapSpec.physicalTypes(spark, t, "ts") === Set("INT96"))
+    val hit = col("k") % 3 === 0
+    val want = src.select(col("k"),
+      when(hit, col("ts") + expr("INTERVAL 1 DAY")).otherwise(col("ts")).as("ts"),
+      when(hit, concat(col("tags"), array(lit("u")))).otherwise(col("tags"))
+        .as("tags"),
+      when(hit, struct((col("s.a") + 1).as("a"), col("s.b").as("b")))
+        .otherwise(col("s")).as("s"))
+    assert(GraftSnapSpec.canon(SnapTable.read(spark, t)) ===
+      GraftSnapSpec.canon(want))
+  }
 }
