@@ -252,10 +252,14 @@ object SnapMv {
       s"MV at $mvDir was built by the append-only sync — a CDC fold " +
         "cannot continue it (different summary schema)")
     val latest = SnapTable.latestVersion(spark, tableDir)
+    // the schema of the generation this call wrote last: the next fold
+    // reads it back without a footer job
+    var written: Option[org.apache.spark.sql.types.StructType] = None
     while (st.syncedVersion < latest) {
       val v = st.syncedVersion + 1
-      val prevFiles =
-        if (v == 1) Nil else SnapTable.plan(spark, tableDir, v - 1).files
+      val prevPlan =
+        if (v == 1) None else Some(SnapTable.plan(spark, tableDir, v - 1))
+      val prevFiles = prevPlan.toSeq.flatMap(_.files)
       val curPlan = SnapTable.plan(spark, tableDir, v)
       val prev = prevFiles.map(_.rel).toSet
       val cur = curPlan.files.map(_.rel).toSet
@@ -264,13 +268,16 @@ object SnapMv {
       val prevGen: DataFrame =
         if (st.generation == 0)
           signedAgg(SnapTable.read(spark, tableDir, v).limit(0), spec, 1)
-        else spark.read.parquet(s"$mvDir/gen-${st.generation}")
+        else written.fold(spark.read)(spark.read.schema(_))
+          .parquet(s"$mvDir/gen-${st.generation}")
       requireExactSumTypes(prevGen, spec)
       val parts = prevGen +:
-        (Seq(added -> 1, removed -> -1).collect {
-          // both sides read under version v's recorded schema: no footer job
-          case (files, sign) if files.nonEmpty =>
-            signedAgg(SnapTable.readFiles(spark, curPlan, files), spec, sign)
+        (Seq((added, Some(curPlan), 1), (removed, prevPlan, -1)).collect {
+          // each side reads under the recorded schema of the version that
+          // holds its files (an overwrite may retype or drop a column):
+          // no footer job
+          case (files, Some(plan), sign) if files.nonEmpty =>
+            signedAgg(SnapTable.readFiles(spark, plan, files), spec, sign)
         })
       val merged = parts.reduce(_.unionByName(_))
       val folded = merged.groupBy(spec.groupCols.map(merged(_)): _*)
@@ -284,6 +291,7 @@ object SnapMv {
         .filter(col("_cnt") =!= 0L)
       val gen = st.generation + 1
       folded.write.mode("overwrite").parquet(s"$mvDir/gen-$gen")
+      written = Some(folded.schema)
       if (!f.exists(cdcMarker(mvDir))) {
         val out = f.create(cdcMarker(mvDir), true)
         try out.write("cdc".getBytes("UTF-8")) finally out.close()

@@ -693,7 +693,7 @@ final class SnapScan(full: StructType, required: StructType,
   // one reader (and one broadcast Hadoop conf) per scan: the planner asks
   // again from each copy of the scan node, and runtime filters narrow
   // only the partitions
-  private lazy val readerFactory = SnapReaderFactory(full, required, prunable)
+  private lazy val readerFactory = SnapReaderFactory(full, required)
   override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** STREAMING READ — snapshot versions as micro-batches (the
@@ -766,7 +766,7 @@ final class SnapMicroBatchStream(dir: String, full: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    SnapReaderFactory(full, required, Array.empty)
+    SnapReaderFactory(full, required)
 }
 
 /** Every snapshot data file is read by Spark's own parquet reader
@@ -807,10 +807,11 @@ final class SnapReaderFactory private (parquet: FilePartitionReaderFactory,
 
 object SnapReaderFactory {
   /** The reader of `required` columns of a table whose data columns are
-    * `full`; `filters` reach the parquet reader's row-group pruning and
-    * stay residual, as every filter of this source does. */
-  def apply(full: StructType, required: StructType,
-            filters: Array[Filter]): SnapReaderFactory = {
+    * `full`. It returns every row of each byte range: no filter reaches
+    * the parquet reader, because the row-level scans of UPDATE, MERGE
+    * and DELETE must see every row of a file they replace. Pushed
+    * filters prune whole files through the manifest only. */
+  def apply(full: StructType, required: StructType): SnapReaderFactory = {
     val spark = SparkSession.active
     val withFile = SnapScan.fileIsPartitionValue(full, required)
     val data = StructType(required.filterNot(f =>
@@ -819,7 +820,7 @@ object SnapReaderFactory {
       if (withFile) StructType(Seq(required(SnapScan.FileColumn)))
       else new StructType()
     new SnapReaderFactory(
-      GraftBridge.parquetReaderFactory(spark, full, data, partition, filters),
+      GraftBridge.parquetReaderFactory(spark, full, data, partition),
       withFile, GraftBridge.hadoopConfBroadcast(spark))
   }
 }

@@ -10,7 +10,6 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
@@ -104,10 +103,11 @@ object GraftBridge {
     * `partitionSchema` come from each `PartitionedFile`'s partition
     * values and follow the `readDataSchema` columns in every row and
     * batch. Data columns read nullable, as Spark's file sources read
-    * them: a file that predates a column null-fills it. */
+    * them: a file that predates a column null-fills it. No filter is
+    * pushed, so no row group is skipped. */
   def parquetReaderFactory(spark: SparkSession, dataSchema: StructType,
-      readDataSchema: StructType, partitionSchema: StructType,
-      filters: Array[Filter]): FilePartitionReaderFactory = {
+      readDataSchema: StructType, partitionSchema: StructType)
+      : FilePartitionReaderFactory = {
     val conf = spark.asInstanceOf[CSparkSession].sessionState.conf
     val hadoopConf = sessionHadoopConf(spark)
     val readData = readDataSchema.asNullable
@@ -129,7 +129,7 @@ object GraftBridge {
       .foreach { case (e, v) => hadoopConf.setBoolean(e.key, v) }
     ParquetPartitionReaderFactory(conf,
       SerializableConfiguration.broadcast(spark.sparkContext, hadoopConf),
-      dataSchema.asNullable, readData, partitionSchema, filters, None,
+      dataSchema.asNullable, readData, partitionSchema, Array.empty, None,
       new ParquetOptions(Map.empty[String, String], conf))
   }
 

@@ -95,6 +95,20 @@ class CdcMvSpec extends AnyFunSuite {
     assert(SnapMv.syncCdc(spark, tdir2, m2, spec) == st2)
   }
 
+  test("an overwrite that retypes a column folds under each version's recorded schema") {
+    val (tdir, mdir) = freshDirs("retype")
+    SnapTable.commit(spark, tdir, ev.filter(col("event_id") % 2 === 0),
+      append = true)
+    // the overwrite turns value DOUBLE into BIGINT: the files it removes
+    // still hold doubles
+    SnapTable.commit(spark, tdir, ev.filter(col("event_id") % 3 === 0)
+      .withColumn("value", col("value").cast("bigint")))
+    val (st, jobs) = JobLog(spark)(SnapMv.syncCdc(spark, tdir, mdir, spec))
+    assert(st == SnapMv.State(2, 2))
+    assert(jobs.count(_.schemaInference) === 0, jobs.map(_.name))
+    assert(summary(mdir) == recompute(tdir, 2))
+  }
+
   test("NULL-measure groups read exactly like a recompute") {
     import spark.implicits._
     val tdir = s"target/graft-cdcmvspec-tbl/nulls"

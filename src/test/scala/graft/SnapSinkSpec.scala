@@ -155,4 +155,43 @@ class SnapSinkSpec extends AnyFunSuite {
     assert(GraftSnapSpec.canon(SnapTable.read(spark, t)) ===
       GraftSnapSpec.canon(want))
   }
+
+  test("SQL UPDATE and DELETE keep the untouched rows of multi-row-group files") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-rowgroups").toString
+    spark.conf.set("spark.sql.catalog.snaprg",
+      classOf[graft.sources.SnapCatalog].getName)
+    spark.conf.set("spark.sql.catalog.snaprg.warehouse", s"$tmp/wh")
+    val t = s"$tmp/wh/db/t"
+    spark.sql("""CREATE TABLE snaprg.db.t (k BIGINT, v BIGINT)
+                 USING `graft-snap` TBLPROPERTIES ('statCols' = 'k')""")
+    spark.range(0, 1000, 1, 1).select(col("id").as("k"), col("id").as("v"))
+      .createOrReplaceTempView("rowgroup_src")
+    // small row groups: one file holds k in [0, 1000) as ascending ranges
+    spark.conf.set("parquet.block.size", "1024")
+    try {
+      spark.sql("INSERT INTO snaprg.db.t SELECT * FROM rowgroup_src")
+      val blocks = SnapTable.plan(spark, t, 0).files.map { e =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(e.path),
+            spark.sparkContext.hadoopConfiguration))
+        try r.getFooter.getBlocks.size finally r.close()
+      }
+      assert(blocks.max > 2, s"row groups per file: $blocks")
+      // k >= 500 matches no row of the leading row groups: the rewritten
+      // file must still carry them
+      spark.sql("UPDATE snaprg.db.t SET v = 0 WHERE k >= 500")
+      assert(SnapTable.meta(spark, t)("rowLevelOp") == "UPDATE")
+      val updated = spark.table("rowgroup_src")
+        .select(col("k"), when(col("k") >= 500, lit(0L)).otherwise(col("v")).as("v"))
+      assert(GraftSnapSpec.canon(SnapTable.read(spark, t)) ===
+        GraftSnapSpec.canon(updated))
+      // a conjunct the manifest cannot evaluate forces the row-level path
+      spark.sql("DELETE FROM snaprg.db.t WHERE k >= 500 AND k % 3 = 0")
+      val kept = updated.filter(!(col("k") >= 500 && col("k") % 3 === 0))
+      assert(kept.count() == 833)
+      assert(GraftSnapSpec.canon(SnapTable.read(spark, t)) ===
+        GraftSnapSpec.canon(kept))
+    } finally spark.conf.unset("parquet.block.size")
+  }
 }
