@@ -16,12 +16,14 @@ import org.apache.spark.sql.types._
   * cell, and the equi-join on (cx,cy) reproduces "all segments within
   * 25 m are candidates" with guaranteed recall (margin factor 1.1).
   *
-  * Scale: the candidate join is a plain cell-key equi-join — the
-  * optimizer broadcasts the segment side when small and shuffles
-  * otherwise (still O(candidates), never O(N·M)), with AQE handling
-  * skew. The temporal conjunct runs before the trig distance (N8), and
-  * the top-1 is a per-point null-skipping min_by aggregate, so the
-  * whole match is one pass with no join-back and no caching.
+  * Scale: `SpacetimeEtl.matchPoints` probes a broadcast cell → segment
+  * index per point (`NearestStreet`) when the segment side is within
+  * the broadcast threshold, and otherwise runs the candidate cell-key
+  * equi-join, broadcast or shuffled by the optimizer (still
+  * O(candidates), never O(N·M)), with a per-point null-skipping min_by
+  * aggregate. The temporal conjunct runs before the trig distance (N8)
+  * in both, and the whole match is one pass with no join-back and no
+  * caching.
   *
   * Fixture scaling: the committed fixture (~350 points) IS the oracle
   * contract — the G oracle SQL reads its parquet twins by absolute

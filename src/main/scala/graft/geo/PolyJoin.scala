@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.LongType
   *    crawled geofences) — a forced broadcast would collect it on the
   *    driver.
   *  - [[gridAssign]] — the partitioned fallback: polygon bboxes explode
-  *    to the cells they overlap (the g02 grid idiom,
-  *    `SpacetimeEtl.matchPoints`), points key to their one cell, and
+  *    to the cells they overlap (the grid idiom of
+  *    `SpacetimeEtl.candidateDistances`), points key to their one cell, and
   *    candidates come from a plain (cx, cy) equi-join — shuffle-
   *    partitioned on the cell key, NO broadcast anywhere. Candidates
   *    then equi-join the edge relation on the polygon id for the exact

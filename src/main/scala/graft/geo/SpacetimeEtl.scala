@@ -1,5 +1,6 @@
 package graft.geo
 
+import graft.plans.NearestStreet
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,20 +25,24 @@ import org.apache.spark.sql.types._
   *     declared `inferredSchema`, written partitioned by type (R19)
   *   runPipeline: inferSink then transformSink (R21) — the join runs once
   *
-  * Scale: the candidate join is a plain equi-join on the grid cell key —
-  * the optimizer broadcasts the cell-exploded segment side when it is
-  * under the broadcast threshold and shuffles otherwise (no hard hint:
-  * a forced broadcast of a large segment side would OOM the driver).
-  * Matching is ONE aggregation pass over the candidates (left cell-join +
-  * null-skipping min_by), so the point relation is read once, with no
-  * join-back and no caching. No O(N·M) pass exists anywhere.
+  * Scale: `matchPoints` takes one of two forms, and the point relation
+  * is read once in both, with no join-back and no caching. When neither
+  * side is streaming and the segment relation's estimated size is within
+  * `spark.sql.autoBroadcastJoinThreshold`, the segments are broadcast as
+  * a cell → segment index built once per query, and one `NearestStreet`
+  * operator probes it point by point (no candidate rows, no aggregate, no
+  * segment-side shuffle). Otherwise the match is a plain equi-join on the
+  * grid cell key, which the optimizer broadcasts or shuffles, reduced by
+  * one null-skipping min_by aggregation (no hard hint: a forced broadcast
+  * of a large segment side would OOM the driver). No O(N·M) pass exists
+  * anywhere.
   */
 object SpacetimeEtl {
   val MaxDistanceM = 25L                      // addresses.js:13
   val SlackMs: Long = FuzzyDates.ThresholdMs  // addresses.js:12,47 (N3)
 
-  private val MPerDegLat = 111194.927
-  private[geo] val Cs = 0.0005 // grid cell size, degrees (~55 m lat, ~42 m lon)
+  private[graft] val MPerDegLat = 111194.927
+  private[graft] val Cs = 0.0005 // grid cell size, degrees (~55 m lat, ~42 m lon)
 
   val streetSchema: StructType = StructType(Seq(
     StructField("id", StringType), StructField("type", StringType),
@@ -102,39 +107,11 @@ object SpacetimeEtl {
         fuzzyMin(col("validSince")).as("pt_since"),
         fuzzyMax(col("validUntil")).as("pt_until"))
 
-  /** R7–R12 (§4.2) as a LEFT-OUTER nearest operator: every input point
-    * comes back exactly once, matched points with (sid, sname,
-    * distance_m), unmatched with nulls — in ONE aggregation pass:
-    *
-    *  - grid candidate equi-join with guaranteed 25 m recall, LEFT so
-    *    points in empty cells survive;
-    *  - temporal conjunct + rounded threshold folded into the min_by
-    *    ordering key: invalid candidates get a NULL key, and min_by
-    *    skips null ordering values, so an all-invalid group yields a
-    *    null best — the left-outer semantics without a join-back;
-    *  - top-1 per point as a min_by hash aggregate over the
-    *    lexicographic tie-break struct (distance_m, seg_ord, street_id)
-    *    — partial-aggregatable (map-side combine ships ONE row per point
-    *    per partition), unlike a row_number window which sorts every
-    *    candidate.
-    *
-    * The segment side carries no broadcast hint — the optimizer
-    * broadcasts it when small and shuffles on the cell key otherwise
-    * (a hard hint would force-collect an arbitrarily large segment side
-    * onto the driver at 100 TB).
-    *
-    * PRECONDITION: `hn_id` uniquely identifies a point row in `pts0`
-    * (it is the Space/Time object id — unique by the input contract,
-    * and the committed + generated fixtures guarantee it). The top-1
-    * aggregate groups on hn_id alone and rides the rest of the payload
-    * through any_value, so duplicate hn_id rows would collapse to ONE
-    * output row; callers with non-unique ids must dedupe first. */
   /** The grid-join candidate relation BEFORE any per-point reduction:
     * every point row left-joined to its cell's temporally-valid
     * segments with the rounded crosstrack distance (NULL for invalid /
-    * cell-empty candidates). Shared by matchPoints (top-1 argmin) and
-    * knnStreets (top-k list) — one candidate generator, two
-    * reductions. */
+    * cell-empty candidates). Shared by matchPoints' candidate form
+    * (top-1 argmin) and knnStreets (top-k list). */
   def candidateDistances(spark: SparkSession, segs: DataFrame,
                          pts0: DataFrame,
                          maxDistanceM: Long = MaxDistanceM,
@@ -176,9 +153,49 @@ object SpacetimeEtl {
         floor(expr("crosstrack_m(px, py, x1, y1, x2, y2)") + 0.5).cast(LongType)))
   }
 
+  /** R7–R12 (§4.2) as a LEFT-OUTER nearest operator: every point row of
+    * `pts0` comes back with its columns plus (sid, sname, distance_m) of
+    * the nearest temporally valid segment whose rounded distance is
+    * under `maxDistanceM`, ties broken by (distance_m, seg_ord,
+    * street_id), or with nulls. It takes one of two forms, chosen while
+    * the DataFrame is built (a stats call, no job):
+    *
+    *  - index form, when neither side is streaming and the segment
+    *    relation's estimated size is within Spark's own
+    *    `spark.sql.autoBroadcastJoinThreshold` (the `applies` gate of
+    *    `graft.plans.NearestStreet`, which also wants the column types
+    *    `segments`/`housePoints` produce): one `NearestStreet` operator.
+    *    Its broadcast exchange builds a cell → segment index once per
+    *    query, and each point probes its one cell — no candidate rows,
+    *    no aggregate, no segment-side shuffle. The strategy is added to
+    *    a session that lacks it (one built without `GraftExtensions`).
+    *  - candidate form, otherwise (a large segment side, which the
+    *    driver must not collect, or a stream): the left cell-join of
+    *    `candidateDistances` reduced by one null-skipping `min_by`
+    *    aggregate per hn_id, the temporal conjunct and the rounded
+    *    threshold folded into its ordering key (an invalid candidate's
+    *    NULL key is skipped, so an all-invalid point yields a null best
+    *    without a join-back). The segment side carries no broadcast
+    *    hint: the optimizer broadcasts its cells when small and shuffles
+    *    on the cell key otherwise. This is the 100 TB path.
+    *
+    * Both forms see the same candidates and agree row for row
+    * (NearestStreetSpec).
+    *
+    * PRECONDITION: `hn_id` uniquely identifies a point row in `pts0` (it
+    * is the Space/Time object id — unique by the input contract, and the
+    * committed + generated fixtures guarantee it). The forms differ on a
+    * duplicated hn_id: the index form returns every input row, each
+    * matched on its own; the candidate form groups by hn_id, so the
+    * duplicates collapse to ONE row carrying one arbitrary row's point
+    * columns and the best match over all their candidates. Callers with
+    * non-unique ids must dedupe first. */
   def matchPoints(spark: SparkSession, segs: DataFrame, pts0: DataFrame,
                   maxDistanceM: Long = MaxDistanceM,
                   slackMs: Long = SlackMs): DataFrame = {
+    if (NearestStreet.applies(pts0, segs))
+      return NearestStreet(graft.operators.ScanFan.fan(pts0, col("hn_id")), segs,
+        maxDistanceM, slackMs)
     val cand = candidateDistances(spark, segs, pts0, maxDistanceM, slackMs)
     // group by the id ONLY — the rest of the point payload is constant
     // per id and rides through any_value. min_by's struct buffer forces a

@@ -91,6 +91,7 @@ object NativeFunctions {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => SessionizeStrategy)
+    ext.injectPlannerStrategy(_ => NearestStreetStrategy)
     ext.injectOptimizerRule(_ => BinnedRangeJoinRule)
     ext.injectOptimizerRule(_ => MatViewRewrite)
     ext.injectOptimizerRule(_ => JaroWinklerPrefilter)

@@ -217,4 +217,17 @@ class EtlSinkSpec extends AnyFunSuite {
     assert(pipelineJobs.size <= inferJobs.size + 1,
       s"infer alone: ${inferJobs.size} jobs, pipeline: ${pipelineJobs.size}")
   }
+
+  test("the infer write on the geo fixture runs at most 3 jobs and no SortAggregate") {
+    val inferred = SpacetimeEtl.infer(spark,
+      SpacetimeEtl.readStreets(spark, s"$Fx/streets.ndjson"),
+      SpacetimeEtl.readHouseNumbers(spark, s"$Fx/house_numbers.ndjson"))
+    val (_, jobs) = JobLog(spark) {
+      inferred.write.mode(SaveMode.Overwrite).json(tmp("etl-infer-jobs").toString)
+    }
+    // the segment broadcast, the point fan and the write
+    assert(jobs.size <= 3, jobs.map(_.name))
+    val plan = inferred.queryExecution.executedPlan.toString
+    assert(plan.contains("NearestStreet") && !plan.contains("SortAggregate"), plan)
+  }
 }

@@ -46,6 +46,9 @@ class PlanShapeSpec extends AnyFunSuite {
     val p = plan("g02_nearest")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       s"non-equi grid join:\n$p")
+    // the fixture's segment side is under the broadcast threshold, so
+    // the match is the broadcast-index operator
+    assert(p.contains("NearestStreet"), s"g02 did not plan NearestStreetExec:\n$p")
   }
 
   test("q28/qd4 verify loops stay inside whole-stage codegen") {
