@@ -5238,7 +5238,7 @@ object Relational {
     // rewrite to files holding MATCHED rows at execution, and
     // ReplaceData commits the matched files' full replacement content
     // as one atomic version (SnapTable.commitReplace — untouched files
-    // carry verbatim through an executor-side anti-join, history stays
+    // carry verbatim into the streamed manifest, history stays
     // readable). The statement sequence: UPDATE bumps a key range's
     // quantity, MERGE zeroes every 97th key and inserts three rows
     // beyond the max key; in-plan requires pin the rowLevelOp commit

@@ -194,27 +194,22 @@ final class SnapScanTable(declared: StructType, props: Map[String, String])
             (data: org.apache.spark.sql.DataFrame, overwriteFlag: Boolean) => {
               val spark = data.sparkSession
               val append = !(overwrite || overwriteFlag)
-              // header-only read: plan() would pull the whole file
-              // list (the O(files) driver cliff) just for two header
-              // fields
-              val fromHeader =
-                if (append && SnapTable.latestVersion(spark, dir) > 0)
-                  Some(SnapTable.headerConfig(spark, dir))
-                else None
+              // each declaration: explicit option, else (append)
+              // inherited from the extended manifest's header — a
+              // header-only read: plan() would pull the whole file list
+              // (the O(files) driver cliff) just for the header fields
+              val inherited =
+                if (append) SnapTable.declared(spark, dir)
+                else SnapTable.Declared(Nil, None, Nil)
               val statCols = opts.get("statcols")
                 .map(_.split(",").toSeq.filter(_.nonEmpty))
-                .orElse(fromHeader.map(_._1)).getOrElse(Nil)
+                .getOrElse(inherited.statCols)
               val bloom = opts.get("bloomcol").map(c =>
                   (c, opts.get("bloombits").map(_.toInt).getOrElse(65536)))
-                .orElse(fromHeader.flatMap(_._2))
-              // string-stat declaration: explicit option, else (append)
-              // inherited from the extended manifest's own header
+                .orElse(inherited.bloom)
               val strStats = opts.get("strstatcols")
                 .map(_.split(",").toSeq.filter(_.nonEmpty))
-                .getOrElse(
-                  if (append && SnapTable.latestVersion(spark, dir) > 0)
-                    SnapTable.headerStrStats(spark, dir)
-                  else Nil)
+                .getOrElse(inherited.strStatCols)
               SnapTable.commit(spark, dir, data, append = append,
                 statCols = statCols,
                 bloomCol = bloom.map(_._1).orNull,

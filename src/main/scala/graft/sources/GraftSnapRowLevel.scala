@@ -2,7 +2,6 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -37,8 +36,9 @@ import graft.operators.SnapTable
   *
   * Scale: matched-group discovery is the runtime-filter path (zone/
   * bloom pruning THEN the _file IN subquery), the rewrite touches
-  * matched files only, and the manifest update is an executor-side
-  * anti-join — a keyed UPDATE at 100 TB is O(files holding the key). */
+  * matched files only (its tasks also build the new files' manifest
+  * lines), and the driver streams the manifest, skipping the replaced
+  * lines — a keyed UPDATE at 100 TB is O(files holding the key). */
 final class SnapRowLevelOperation(cmd: RowLevelOperation.Command,
                                   declared: StructType,
                                   props: Map[String, String])
@@ -87,25 +87,28 @@ final class SnapRowLevelOperation(cmd: RowLevelOperation.Command,
 }
 
 /** The replace-data write: per-task writers land the groups'
-  * replacement content through Spark's own parquet writer (the same
-  * [[SnapStreamDataWriter]] as the streaming sink, prepared once per
-  * statement), so every type `SnapTable.commit` accepts rewrites too;
-  * commit swaps replaced-for-new in one snapshot version. */
+  * replacement content through [[SnapFileWriter]] (the writer of every
+  * snapshot data file, prepared once per statement under the pruning
+  * declarations of the version the scan planned against), so every
+  * type `SnapTable.commit` accepts rewrites too, and each task leaves
+  * its file's manifest line; commit swaps replaced-for-new in one
+  * snapshot version and runs no Spark job. */
 final class SnapCowWrite(dir: String, schema: StructType,
                          commandName: String,
                          replaced: () => (Seq[String], Int))
     extends Write with BatchWrite {
   private val commitId =
     "cow-" + java.util.UUID.randomUUID().toString.take(12)
-  private val genDir = s"$dir/data/$commitId"
 
   override def toBatch: BatchWrite = this
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
-    new SnapBatchWriterFactory(genDir,
-      org.apache.spark.sql.GraftBridge.parquetWriteJob(
-        SparkSession.active, schema))
+      : DataWriterFactory = {
+    val spark = SparkSession.active
+    val (_, scanVersion) = replaced()
+    new SnapBatchWriterFactory(commitId, SnapFileSpec(spark, dir, schema,
+      SnapTable.declared(spark, dir, scanVersion)))
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
@@ -122,24 +125,13 @@ final class SnapCowWrite(dir: String, schema: StructType,
     ()
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = org.apache.spark.sql.GraftBridge.sessionHadoopConf(
-      SparkSession.active)
-    messages.foreach {
-      case SnapStreamFileMessage(Some(n)) =>
-        val p = new Path(s"$genDir/$n")
-        try { p.getFileSystem(conf).delete(p, false); () }
-        catch { case scala.util.control.NonFatal(_) => () }
-      case _ => ()
-    }
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    SnapFileWriter.dropAll(dir, commitId, messages)
 }
 
-final class SnapBatchWriterFactory(genDir: String,
-    job: org.apache.spark.sql.GraftBridge.ParquetWriteJob)
+final class SnapBatchWriterFactory(commitId: String, spec: SnapFileSpec)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
-    new SnapStreamDataWriter(genDir,
-      f"part-p$partitionId%05d-t$taskId.parquet", job)
+    new SnapFileWriter(spec, commitId, partitionId, taskId)
 }

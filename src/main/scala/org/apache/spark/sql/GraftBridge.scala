@@ -3,8 +3,11 @@ package org.apache.spark.sql
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{DataFrame => CDataFrame, Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetReadSupport, ParquetWriteSupport}
 import org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory
@@ -154,6 +157,23 @@ object GraftBridge {
     def open(path: String): OutputWriter =
       factory.newInstance(path, schema,
         new TaskAttemptContextImpl(conf.value, new TaskAttemptID()))
+  }
+
+  /** Runs `task` over each partition of `df`'s rows as ONE Spark job,
+    * inside a SQL execution of `df`'s plan, as a file write runs. A plan
+    * with no partitions runs one empty task, as Spark's file writer does,
+    * so an empty input still reaches a writer. */
+  def runPartitions[U: scala.reflect.ClassTag](df: DataFrame)(
+      task: (TaskContext, Iterator[InternalRow]) => U): Array[U] = {
+    val qe = df.asInstanceOf[CDataFrame].queryExecution
+    val sc = df.sparkSession.sparkContext
+    SQLExecution.withNewExecutionId(qe, Some("graft-snap write")) {
+      val rdd = qe.toRdd
+      sc.runJob(
+        if (rdd.getNumPartitions > 0) rdd
+        else sc.parallelize(Seq.empty[InternalRow], 1),
+        task)
+    }
   }
 
   /** V2 Predicate → V1 source Filter (runtime-filter predicates arrive

@@ -803,6 +803,75 @@ class SnapTableSpec extends AnyFunSuite {
     SnapTable.destroy(spark, d)
   }
 
+  test("each write is one Spark job: the writing tasks build the manifest lines") {
+    import scala.jdk.CollectionConverters._
+    val d = s"$dir-one-job"
+    SnapTable.destroy(spark, d)
+    SnapTable.commit(spark, d, li.repartitionByRange(4, col("l_orderkey")),
+      statCols = Seq("l_orderkey"), bloomCol = "l_linenumber", bloomBits = 64)
+    def entries(sub: String): Set[String] =
+      Files.list(Paths.get(d, sub)).iterator().asScala
+        .map(_.getFileName.toString).toSet
+    // append, update and delete each run ONE job (the file write); the
+    // manifest is streamed by the driver, with no schema inference
+    val (_, appendJobs) = JobLog(spark)(SnapTable.commit(spark, d,
+      li.filter(col("l_orderkey") < 50), append = true,
+      statCols = Seq("l_orderkey"), bloomCol = "l_linenumber", bloomBits = 64))
+    val (upd, updateJobs) = JobLog(spark)(SnapTable.update(spark, d,
+      col("l_orderkey").between(100L, 199L), Map("l_quantity" -> lit(0.0)),
+      pruneCol = "l_orderkey", lo = 100L, hi = 199L))
+    val (del, deleteJobs) = JobLog(spark)(SnapTable.delete(spark, d,
+      col("l_orderkey").between(200L, 299L),
+      pruneCol = "l_orderkey", lo = 200L, hi = 299L))
+    assert(upd.rowsDeleted > 0 && del.rowsDeleted > 0)
+    for ((verb, jobs) <- Seq("append" -> appendJobs, "update" -> updateJobs,
+                             "delete" -> deleteJobs)) {
+      assert(jobs.size == 1, s"$verb ran ${jobs.size} jobs: ${jobs.map(_.name)}")
+      assert(!jobs.exists(_.schemaInference), s"$verb inferred a schema: $jobs")
+    }
+    assert(SnapTable.latestVersion(spark, d) == 4)
+    assert(SnapTable.read(spark, d).count() ==
+      li.count() + li.filter(col("l_orderkey") < 50).count() - del.rowsDeleted)
+    // a DML whose candidates match no row: 0, no version, and neither a
+    // line sidecar, a temp manifest nor the rewrite's files remain
+    val data0 = entries("data")
+    val (noop, noopJobs) = JobLog(spark)(SnapTable.update(spark, d,
+      col("l_quantity") === -1.0, Map("l_quantity" -> lit(0.0))))
+    assert(noop.rowsDeleted == 0L && noop.version == 4 && noopJobs.size == 1)
+    assert(SnapTable.delete(spark, d, col("l_quantity") === -1.0).rowsDeleted == 0L)
+    assert(SnapTable.latestVersion(spark, d) == 4)
+    assert(!entries("_manifests").exists(_.startsWith("tmp-")),
+      s"a no-op DML left scratch files: ${entries("_manifests")}")
+    assert(entries("data") == data0, "a no-op DML left its rewrite's files")
+
+    // a streaming-sink epoch and a SQL UPDATE run no job after their
+    // file write: the commit streams the sidecar lines
+    val tmp = Files.createTempDirectory("graft-one-job").toString
+    li.filter(col("l_orderkey") % 7 === 0).write.parquet(s"$tmp/in")
+    val (_, streamJobs) = JobLog(spark) {
+      spark.readStream.schema(li.schema).parquet(s"$tmp/in")
+        .writeStream.format("graft-snap").option("path", d)
+        .option("checkpointLocation", s"$tmp/cp")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+    }
+    assert(SnapTable.latestVersion(spark, d) == 5)
+    spark.conf.set("spark.sql.catalog.snapone",
+      classOf[graft.sources.SnapCatalog].getName)
+    spark.conf.set("spark.sql.catalog.snapone.warehouse", "target")
+    val (_, sqlJobs) = JobLog(spark)(spark.sql(
+      s"UPDATE snapone.`${d.stripPrefix("target/")}` SET l_quantity = 1.0 WHERE l_orderkey < 30"))
+    assert(SnapTable.latestVersion(spark, d) == 6)
+    // the write job is named after the statement's call site; a manifest
+    // job would start after it, named after SnapTable
+    assert(streamJobs.map(_.name.takeWhile(_ != ':')) ==
+      Seq("start at SnapTableSpec.scala"), s"stream epoch: $streamJobs")
+    assert(sqlJobs.maxBy(_.id).name.startsWith("sql at SnapTableSpec.scala"),
+      s"SQL UPDATE ran a job after its write: $sqlJobs")
+    assert(!entries("_manifests").exists(_.startsWith("tmp-")))
+    SnapTable.destroy(spark, d)
+  }
+
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 }
